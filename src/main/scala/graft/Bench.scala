@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** Shared benchmark methodology for [[Bench]] and [[BenchOne]].
   *
@@ -12,6 +14,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 70-plan JVM the accumulated debt otherwise lands as a multi-second
   * pause inside whichever query runs next; observed 0.9 s → 6 s), and
   * the reported time is the best of three timed runs.
+  *
+  * Because each query is warmed and timed back to back, its generated
+  * classes are always in Spark's codegen cache when timed, so these
+  * minima cannot show cross-query codegen thrash: a cache smaller than
+  * a session's working set recompiles every query on each pass of a
+  * suite, yet reads as warm here. `target/bench_full.json` records the
+  * run's compile count to make that visible (see [[Tables.session]]).
   *
   * Load sentinel: the round-8 graded artifact reported 5.7 s for a
   * query that quietly runs 1.9 s because an unrelated process spiked
@@ -124,17 +133,23 @@ object Bench {
     // normalize out machine weather (the r20 verdict's #3): ambient
     // drift moves the sentinel and the queries together, structural
     // regressions move only the queries.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""sentinel":${BenchCore.sentinelBaseline},"sf":"$sfDir"}"""
-    println(line)
+    val fields = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""sentinel":${BenchCore.sentinelBaseline},"sf":"$sfDir""""
+    println(fields + "}")
     // Truncation-proof copy: the round-9 graded artifact lost its tail
     // (d1-d9/e1/e2 missing) to stdout capture truncation; the same JSON
-    // line on disk means nobody reconstructs numbers from prose.
+    // line on disk means nobody reconstructs numbers from prose. The
+    // file alone also carries the run's Janino compilations (codegen
+    // cache misses; the count that sizes Tables.CodegenCacheEntries)
+    // and the codegen cache size in effect.
+    val full = fields +
+      s""","codegen_compiles":${CodegenMetrics.METRIC_COMPILATION_TIME.getCount},""" +
+      s""""codegen_cache_max_entries":${spark.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key)}}"""
     try {
       val out = new java.io.File("target/bench_full.json")
       out.getParentFile.mkdirs()
       val w = new java.io.PrintWriter(out)
-      try w.println(line) finally w.close()
+      try w.println(full) finally w.close()
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     spark.stop()
   }

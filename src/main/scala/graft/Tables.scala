@@ -1,26 +1,61 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions.expr
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.internal.StaticSQLConf
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Schema-pinned loaders for the driver-generated parquet tables.
   *
   * On a real cluster these would be catalog tables over partitioned
   * storage; here each is a single parquet file per scale factor.
-  * Loaders are plain `spark.read.parquet` so Catalyst keeps full
-  * pushdown/pruning freedom (no caching, no forced schemas).
+  * Every load is a fresh parquet relation (fresh exprIds, full
+  * pushdown/pruning freedom); no data is cached. What is cached is
+  * the inferred parquet schema, because inference costs one Spark job
+  * per `spark.read.parquet`: per session, per path and per value of
+  * the session's parquet read confs, [[load]] keeps the schema and the
+  * leaf files (path, length, mtime) it was inferred from, and a later
+  * load reads with that schema. An entry is invalidated when the leaf
+  * files of the later load's own listing differ (the path was
+  * rewritten), and it dies with its session: the map holds sessions
+  * weakly and its values never reference one. The mutable paths of
+  * the streaming sinks and MergeTree tables do not go through
+  * [[load]]; they stay plain `spark.read.parquet`.
   */
 object Tables {
+  /** Entries of Spark's generated-class cache (`spark.sql.codegen.cache
+    * .maxEntries`, default 100), set by [[session]]. */
+  val CodegenCacheEntries = 4096
+
   /** One local SparkSession shape for Verify/Bench/specs: UTC, AQE on,
     * shuffle partitions sized to cores (not the 200 default, which
     * would produce hundreds of near-empty partitions locally; on a
-    * real cluster this would be ~2-4× total cores), and the legacy
-    * nanos flag so the `events` feed is readable (see [[Tables.events]]). */
+    * real cluster this would be ~2-4× total cores), the legacy nanos
+    * flag so the `events` feed is readable (see [[Tables.events]]), and
+    * a codegen cache of [[CodegenCacheEntries]] classes.
+    *
+    * Spark's generated-class cache is JVM-wide and keyed by source AND
+    * context classloader. In local mode the driver thread and the
+    * executor threads load through different classloaders, so every
+    * whole-stage class is compiled twice: the 9-query benchmark suite
+    * needs about 172 classes, and Spark's default of 100 entries
+    * thrashes, recompiling about 146 classes on every warm pass. One
+    * full 228-query pass in a fresh JVM compiles 3,011 distinct classes
+    * (`graft.Bench` at sf0.01 with a 65,536-entry cache; it records the
+    * count), so 4,096 entries hold the whole surface with 36% headroom.
+    * The executor classloader belongs to the SparkContext, so a new
+    * context recompiles its classes by design, and the old context's
+    * entries age out of the LRU. The conf is static: it takes effect in
+    * the session that first initializes Spark's code generator in a
+    * JVM. */
   def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(graft.functions.GraftExtensions)
+      .config(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toLong)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -51,8 +86,9 @@ object Tables {
     df
   }
 
-  /** `SPARK_GRAFT_CONF="k=v;k=v"` → session confs, for dev mains
-    * (ScaleProbe, Explain): runtime-settable custom keys only. */
+  /** `SPARK_GRAFT_CONF="k=v;k=v"` → session confs, for Verify's
+    * conf-matrix runs and the dev mains: runtime-settable keys only.
+    * Unset, it changes nothing. */
   def applyEnvConfs(s: SparkSession): Unit =
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
       kv.split("=", 2) match {
@@ -69,11 +105,55 @@ object Tables {
     * downstream code sees one type regardless of the file's flavor.
     * The cast is a per-column map-side no-op (same physical micros). */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) {
       case (acc, f) if f.dataType == TimestampNTZType =>
         acc.withColumn(f.name, acc.col(f.name).cast(TimestampType))
       case (acc, _) => acc
+    }
+  }
+
+  /** An inferred schema and the leaf files (path, length, mtime) it was
+    * inferred from. Holds no reference to its session. */
+  private final case class SchemaEntry(schema: StructType, files: Seq[(String, Long, Long)])
+
+  private type SchemaKey = (String, Map[String, String])
+
+  /** Per-session schema entries, keyed by path and the session's parquet
+    * read confs (they change what inference returns). Sessions are held
+    * weakly, so an ended session's entries go with it. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[SchemaKey, SchemaEntry]]()
+
+  private def schemaCache(spark: SparkSession): ConcurrentHashMap[SchemaKey, SchemaEntry] =
+    schemas.synchronized(schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+
+  /** Leaf files of a parquet read, from the listing the read already
+    * made; None for a plan that is not a plain file relation. */
+  private def leafFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    Some(df.queryExecution.analyzed)
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case idx: PartitioningAwareFileIndex =>
+        idx.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      }
+
+  /** `spark.read.parquet(path)`, with the schema inference job skipped
+    * when this session already inferred the schema of the same files
+    * (see the [[Tables]] doc). */
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val cache = schemaCache(spark)
+    val key: SchemaKey = (path, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    })
+    val hit = Option(cache.get(key)).flatMap { e =>
+      val df = spark.read.schema(e.schema).parquet(path)
+      if (leafFiles(df).contains(e.files)) Some(df) else None
+    }
+    hit.getOrElse {
+      val df = spark.read.parquet(path)
+      leafFiles(df).foreach(files => cache.put(key, SchemaEntry(df.schema, files)))
+      df
     }
   }
 

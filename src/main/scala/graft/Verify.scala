@@ -7,6 +7,7 @@ object Verify {
     val Array(sfDir, outDir, only @ _*) = args // optional: query names to restrict to
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Tables.session(cpus)
+    Tables.applyEnvConfs(spark)
     new java.io.File(outDir).mkdirs()
     val unknown = only.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty,
