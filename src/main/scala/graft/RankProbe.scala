@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Dev tool: A/B the global-window rewrites against Spark's native
-  * single-partition window.
+/** Dev tool: A/B the window-operator rewrites against Spark's native
+  * window (the single-task funnel globally, the group-count ceiling
+  * with keys).
   * `runMain graft.RankProbe [nRows] [rank|agg|grouped [nGroups]|offset]`
   * (default 50M, rank).
   * `rank` probes the GlobalRank operator on a corpus-global ranking;
@@ -14,9 +15,11 @@ import org.apache.spark.sql.functions._
   * funnels each group through one task; many-small-groups is the
   * regime where the operator costs instead, measured by ScratchGR's
   * per-query A/B at sf0.1);
-  * `offset` probes GlobalOffset on a corpus-global lag/lead pair (the
-  * e33 runningDifference shape);
-  * `groupedoffset` probes the r20 GroupedOffset operator on the q54
+  * `offset` probes the offset operator at zero keys (GlobalOffset in
+  * the plan) on a corpus-global lag/lead pair (the e33
+  * runningDifference shape); `offsetnn` on a corpus-global
+  * ignoreNulls forward fill next to a plain lag;
+  * `groupedoffset` probes the same operator with keys on the q54
   * shape — per-group lag/lead over few huge interleaved groups (the
   * native hash window's group-count parallelism ceiling);
   * `groupedoffsetchained` runs it over a pre-existing FINER
@@ -25,7 +28,8 @@ import org.apache.spark.sql.functions._
   * `groupedoffsetwide` probes the s22-EMA shape — fifteen lag depths
   * in ONE node over few huge groups, the multi-function regime the
   * scratch-array pass 2 exists for;
-  * `running` probes GlobalRunningAgg on a corpus-global cumulative
+  * `running` probes the running-aggregate operator at zero keys
+  * (GlobalRunningAgg in the plan) on a corpus-global cumulative
   * sum+count (the q44 shape);
   * `chained` probes the r16 tie-chaining path AT SCALE: a FINER
   * pre-existing range exchange (repartitionByRange(d, fine)) under
@@ -45,7 +49,7 @@ import org.apache.spark.sql.functions._
   * same mixed select over a pre-existing FINER exchange that splits
   * every order tie group — split + chained operators on the reused
   * exchange vs the native mixed funnel.
-  * `groupedrunning` probes the r17 GroupedRunningAgg operator on the
+  * `groupedrunning` probes the same operator with keys on the
   * q47 shape (few huge groups — the native hash window's parallelism
   * ceiling); `groupedrunningchained` runs it over a pre-existing
   * FINER (g, d, fine) exchange that splits both group segments and
@@ -135,11 +139,10 @@ object RankProbe {
       case "rangeslidingwide" => graft.plans.RangeSlidingAggRewrite.ConsolidateKey
       case "sliding" | "slidinggrouped" | "slidingchained" =>
         graft.plans.SlidingAggRewrite.ConfKey
-      case "offset" | "offsetnn" => graft.plans.GlobalOffsetRewrite.ConfKey
-      case "groupedoffset" | "groupedoffsetchained" | "groupedoffsetwide" |
-          "groupedoffsetnn" =>
+      case "offset" | "offsetnn" | "groupedoffset" | "groupedoffsetchained" |
+          "groupedoffsetwide" | "groupedoffsetnn" =>
         graft.plans.GroupedOffsetRewrite.ConfKey
-      case "running" => graft.plans.GlobalRunningAggRewrite.ConfKey
+      case "running" => graft.plans.GroupedRunningAggRewrite.ConfKey
       case _ => graft.plans.GlobalRankRewrite.ConfKey
     }
     if (mode == "chained" || mode == "mixedchained" ||
@@ -150,15 +153,15 @@ object RankProbe {
       s.conf.set(confKey, on.toString)
       // the chained stack exercises BOTH operators in one plan
       if (mode == "chained")
-        s.conf.set(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString)
+        s.conf.set(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString)
       // the mixed split plans all four families out of one node: the
       // off branch must silence every one of them to get the true
       // pre-r17 native mixed funnel
       if (mode == "mixed" || mode == "mixedchained")
         Seq(graft.plans.GlobalWindowSplit.ConfKey,
           graft.plans.GlobalRankRewrite.ConfKey,
-          graft.plans.GlobalRunningAggRewrite.ConfKey,
-          graft.plans.GlobalOffsetRewrite.ConfKey,
+          graft.plans.GroupedRunningAggRewrite.ConfKey,
+          graft.plans.GroupedOffsetRewrite.ConfKey,
           graft.plans.GlobalAggRewrite.ConfKey)
           .foreach(k => s.conf.set(k, on.toString))
       // the grouped split plans both grouped families out of one

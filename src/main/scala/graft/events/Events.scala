@@ -1181,7 +1181,7 @@ object Events {
   // `lag() OVER (ORDER BY …)` is Spark's third global-window funnel
   // (after rank and agg-over-()): natively every row moves to ONE task
   // for a computation whose true dependency is one neighbor row.
-  // GlobalOffsetRewrite (plans/GlobalOffset.scala) plans it as one
+  // GroupedOffsetRewrite (plans/GroupedOffset.scala) plans it as one
   // range exchange + a boundary-VALUE exchange (O(partitions) driver
   // values), spec-pinned to appear in this query's executed plan. All
   // arithmetic integer (µs deltas, ⌊log₂(gap+1)⌋ via bin-length on the

@@ -93,25 +93,17 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // filter(rank <= k)).
     ext.injectOptimizerRule(_ => graft.plans.GroupedRankRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupedRankStrategy)
-    // Grouped RUNNING aggregates (sum(x) OVER (PARTITION BY g ORDER
-    // BY …)): GroupedRank's sibling for the aggregate class — the
-    // native hash-clustered window's parallelism ceiling is the group
-    // count, so groups that outgrow a task funnel; the operator
-    // range-partitions (group, order) and chains boundary segments.
+    // RUNNING aggregates (sum(x) OVER ([PARTITION BY g] ORDER BY …)),
+    // global or grouped: the native window funnels the corpus through
+    // one task (no keys) or stops at the group count (keys); the
+    // operator range-partitions (group, order) and chains boundary
+    // segments — a distributed prefix scan, zero keys included.
     ext.injectOptimizerRule(_ => graft.plans.GroupedRunningAggRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupedRunningAggStrategy)
-    // Corpus-global offset windows (lag/lead OVER (ORDER BY …)) — the
-    // third empty-PARTITION-BY funnel: rewritten to the range
-    // exchange + boundary-VALUE exchange instead of the all-rows
-    // single-task window.
-    ext.injectOptimizerRule(_ => graft.plans.GlobalOffsetRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalOffsetStrategy)
-    // GROUPED offset windows (lag/lead OVER (PARTITION BY g ORDER BY
-    // …) — per-key runningDifference/neighbor, r20): the native
-    // hash-clustered window's parallelism ceiling is the group count,
-    // so groups that outgrow a task funnel; the operator
-    // range-partitions (group, order) and closes boundaries with
-    // SlidingAgg's key-gated boundary-value rings.
+    // OFFSET windows (lag/lead OVER ([PARTITION BY g] ORDER BY …) —
+    // runningDifference/neighbor, global or per key): rewritten to the
+    // range exchange + key-gated boundary-VALUE rings instead of the
+    // all-rows single-task (or group-count-bound) native window.
     ext.injectOptimizerRule(_ => graft.plans.GroupedOffsetRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupedOffsetStrategy)
     // Adjacent offset nodes over the same (part, order) merge into
@@ -130,11 +122,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // demote (they share the family's one range exchange). Running
     // here cannot loop with the rewrite (separate batch, Once).
     ext.injectPreCBORule(_ => graft.plans.DemoteSmallOffsetNodes)
-    // Corpus-global RUNNING aggregates (sum(x) OVER (ORDER BY …)) —
-    // the last empty-PARTITION-BY funnel: a distributed prefix scan
-    // (per-partition partials + driver prefix fold + seeded pass).
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRunningAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRunningAggStrategy)
     // Adjacent running-agg nodes over the same (part, order) merge
     // into ONE multi-function node (r21 — CombineOffsetNodes' sibling
     // for the running class; s21's fill columns planned THREE stacked
@@ -143,7 +130,8 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // Bounded SLIDING ROWS frames (moving averages / trailing totals,
     // global or grouped): one operator closing both the AllTuples
     // single-task funnel and the group-count ceiling — boundary-VALUE
-    // rings (GlobalOffset's machinery) + per-frame aggregate re-folds.
+    // rings (the offset operator's machinery) + per-frame aggregate
+    // re-folds.
     ext.injectOptimizerRule(_ => graft.plans.SlidingAggRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.SlidingAggStrategy)
     // Bounded RANGE-VALUE sliding frames (trailing-30-day style

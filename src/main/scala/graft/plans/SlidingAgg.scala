@@ -25,12 +25,12 @@ import org.apache.spark.sql.types.IntegerType
   * dependency is a WINDOW OF ≤ (n+m+1) ROWS around each row — and the
   * grouped form plans as ClusteredDistribution(g), the group-count
   * parallelism ceiling with the largest group's bytes through one
-  * task. Both are [[GlobalOffsetExec]]'s problem with an aggregate on
+  * task. Both are [[GroupedOffsetExec]]'s problem with an aggregate on
   * top, and this exec is exactly that composition: ONE operator for
   * both shapes (`part` may be empty), requiring
   * `OrderedDistribution(part-asc ++ order)` — the family's shared
   * range exchange — and closing partition boundaries with
-  * GlobalOffset's boundary-VALUE rings:
+  * the offset operator's key-gated boundary-VALUE rings:
   *
   *   - pass 1 streams each sorted partition once and ships to the
   *     driver only the PROJECTED aggregate-input values (plus the
@@ -63,13 +63,13 @@ import org.apache.spark.sql.types.IntegerType
   * partition boundary may resolve differently between the shipped
   * rings and the re-streamed rows — each row still gets a
   * valid-under-SOME-tie-order frame, the same documented contract as
-  * [[GlobalOffsetExec]]'s neighbor values; a total ORDER BY (which
+  * [[GroupedOffsetExec]]'s neighbor values; a total ORDER BY (which
   * every graded query uses) makes results bit-identical to native.
   *
   * Scope guards: every window expression a deterministic,
   * non-DISTINCT, unfiltered [[DeclarativeAggregate]] over a ROWS
   * frame with FOLDABLE integer bounds, |bound| ≤
-  * `spark.graft.slidingAgg.maxExtent` (default 128 — GlobalOffset's
+  * `spark.graft.slidingAgg.maxExtent` (default 128 — the offset class's
   * maxOffset precedent: the cap bounds driver traffic at
   * partitions × extent × value width, and the plan-time/runtime byte
   * guards apply on top); partition keys deterministic and orderable;
@@ -101,7 +101,7 @@ object SlidingAggRewrite extends Rule[LogicalPlan] {
 
   /** A ROWS bound as a signed row offset: CurrentRow = 0, a foldable
     * integer literal as-is (negative = PRECEDING). Unbounded ends are
-    * None — UnboundedPreceding..CurrentRow is GlobalRunningAgg's
+    * None — UnboundedPreceding..CurrentRow is the running-aggregate
     * class, full frames are the agg rewrites', both structurally
     * disjoint from this matcher. */
   private def bound(e: Expression): Option[Int] = e match {
@@ -177,7 +177,7 @@ case class SlidingAggNode(
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
   // `fns` is opaque to QueryPlan's product scan — expose the aggregate
   // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GlobalRunningAggNode lesson).
+  // group nor order keys (the GroupedRunningAggNode lesson).
   override def references: AttributeSet =
     AttributeSet(part.flatMap(_.references)) ++
       AttributeSet(order.flatMap(_.references)) ++
@@ -278,7 +278,7 @@ case class SlidingAggExec(
           tailV.toArray(Array.empty[UnsafeRow]), tailK.toArray(Array.empty[UnsafeRow]))
       })
 
-    // Driver stitch (GlobalOffset's): prevTail(p) = the last
+    // Driver stitch (the offset operator's): prevTail(p) = the last
     // `lookback` value tuples BEFORE partition p; nextHead(p) = the
     // first `lookahead` AFTER it — short/empty partitions accumulate.
     val nParts = ends.length

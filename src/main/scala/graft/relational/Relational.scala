@@ -1211,7 +1211,8 @@ object Relational {
   // ---------------------------------------------------------------------
   // q44: CUMULATIVE REVENUE CURVE — the business "running total over
   // time" report (ClickHouse `runningAccumulate`), graded end-to-end
-  // ON the GlobalRunningAgg operator (plans/GlobalRunningAgg.scala):
+  // ON the running-aggregate operator at zero keys (GlobalRunningAgg
+  // in the plan; plans/GroupedRunningAgg.scala):
   // a `sum OVER (ORDER BY …)` with an empty PARTITION BY is the last
   // global-window funnel, natively one task folding the corpus. Both
   // running frames are graded in one query: the default RANGE frame
@@ -1243,10 +1244,12 @@ object Relational {
 
   /** q45: REVENUE MOMENTUM — the three-operator global-window STACK.
     * One report joins the family's members over a shared daily curve:
-    * the running total (`sum OVER (ORDER BY date)` — GlobalRunningAgg,
-    * a distributed prefix scan), the trailing-7-day accumulation as a
-    * cumulative self-difference (`cum - lag(cum, 7)` — GlobalOffset's
-    * boundary-value exchange, ClickHouse `runningDifference` at lag 7)
+    * the running total (`sum OVER (ORDER BY date)` — the zero-key
+    * running-aggregate operator, GlobalRunningAgg in the plan: a
+    * distributed prefix scan), the trailing-7-day accumulation as a
+    * cumulative self-difference (`cum - lag(cum, 7)` — the zero-key
+    * offset operator, GlobalOffset in the plan: a boundary-value
+    * exchange, ClickHouse `runningDifference` at lag 7)
     * and the business-volume leaderboard (`rank() OVER (ORDER BY
     * day_cents DESC, date)` — GlobalRank). The offset node STACKS on
     * the running-agg node over the SAME date order — the
@@ -1303,7 +1306,8 @@ object Relational {
         lag($"cents", 1, 0L).over(w).as("prev_cents"),
         // explicit ROWS running frame: Spark converts this first() to
         // NthValue(cents, 1), which the r17 mapping plans back onto
-        // GlobalRunningAgg — the first-value phrasing in the gate
+        // the zero-key running-aggregate operator — the first-value
+        // phrasing in the gate
         first($"cents").over(w.rowsBetween(
           Window.unboundedPreceding, Window.currentRow)).as("base_cents"),
         sum($"cents").over(w.rowsBetween(

@@ -17,7 +17,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalOffsetRewrite.ConfKey, on.toString)(body)
+    TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString)(body)
 
   private def offsets(df: DataFrame): DataFrame = {
     val w = Window.orderBy(col("k"), col("id"))
@@ -142,7 +142,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
         "lag ignoreNulls must fire (r22)")
       // offset beyond the cap -> native (boundary exchange would ship
       // maxOffset values per partition)
-      TestSpark.withConf(graft.plans.GlobalOffsetRewrite.MaxOffsetKey, "2") {
+      TestSpark.withConf(graft.plans.GroupedOffsetRewrite.MaxOffsetKey, "2") {
         val big = base.select(lag($"k", 3).over(w).as("p"))
         big.collect()
         assert(!big.queryExecution.executedPlan.toString.contains("GlobalOffset"))
@@ -185,7 +185,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
     val w = Window.orderBy($"k", $"id")
     val df = () => base.select(lag($"k", 1).over(w).as("p"))
     def planOf(d: DataFrame): String = d.queryExecution.executedPlan.toString
-    TestSpark.withConf(graft.plans.GlobalOffsetRewrite.MinBytesKey, "auto") {
+    TestSpark.withConf(graft.plans.GroupedOffsetRewrite.MinBytesKey, "auto") {
       assert(!planOf(df()).contains("GlobalOffset"),
         "below one advisory partition the node must stay native")
       TestSpark.withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1") {
@@ -196,7 +196,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
       // lag/lead + defaults battery via the shared offsets() helper)
       val demoted = offsets(base).collect().toSeq.sortBy(_.getLong(0))
       val onOp = TestSpark.withConf(
-          graft.plans.GlobalOffsetRewrite.MinBytesKey, "0") {
+          graft.plans.GroupedOffsetRewrite.MinBytesKey, "0") {
         offsets(base).collect().toSeq.sortBy(_.getLong(0))
       }
       assert(demoted == onOp, "demoted native vs operator results")

@@ -355,7 +355,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     def globalsOff[A](body: => A): A =
       TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
         TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false")(body)
+          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false")(body)
         }
       }
     assertSame(q(on = true), globalsOff(allOff(q(on = false))),

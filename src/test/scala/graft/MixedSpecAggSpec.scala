@@ -37,8 +37,8 @@ class MixedSpecAggSpec extends AnyFunSuite {
     graft.plans.GlobalRankRewrite.ConfKey,
     graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRunningAggRewrite.ConfKey,
-    graft.plans.GlobalOffsetRewrite.ConfKey,
-    graft.plans.GlobalRunningAggRewrite.ConfKey,
+    graft.plans.GroupedOffsetRewrite.ConfKey,
+    graft.plans.GroupedRunningAggRewrite.ConfKey,
     graft.plans.GlobalAggRewrite.ConfKey,
     graft.plans.GroupedAggRewrite.ConfKey,
     graft.plans.SlidingAggRewrite.ConfKey,
@@ -79,7 +79,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
       val laterRules = Seq("graft.plans.GlobalWindowSplit",
         "graft.plans.GroupedWindowSplit", "graft.plans.GlobalRankRewrite",
         "graft.plans.GroupedRankRewrite", "graft.plans.GroupedRunningAggRewrite",
-        "graft.plans.GlobalOffsetRewrite", "graft.plans.GlobalRunningAggRewrite",
+        "graft.plans.GroupedOffsetRewrite", "graft.plans.GroupedRunningAggRewrite",
         "graft.plans.SlidingAggRewrite", "graft.plans.RangeSlidingAggRewrite")
       for (agg <- Seq("graft.plans.GlobalAggRewrite", "graft.plans.GroupedAggRewrite");
            fam <- laterRules) {
@@ -195,7 +195,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
   test("mixed-SPEC offset cousin + cross global/grouped: lag + sum OVER (), and global rank + grouped total") {
     val s = spark
     data.createOrReplaceTempView("msa_x")
-    // offset sibling: the GlobalOffsetNode peels out of the total's leg
+    // offset sibling: the zero-key GroupedOffsetNode peels out of the total's leg
     val offSql = """
       SELECT id, cents,
              lag(cents, 1, 0) OVER (ORDER BY id) AS prev,
@@ -297,7 +297,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
     val gjoin = gafter.collectFirst { case j: LJoin => j }.get
     assert(!gjoin.right.exists(n =>
       n.isInstanceOf[graft.plans.GlobalRankNode] ||
-        n.isInstanceOf[graft.plans.GlobalRunningAggNode]),
+        n.isInstanceOf[graft.plans.GroupedRunningAggNode]),
       "the global aggregate leg must not replay the operator stack:\n" + gjoin.right)
     // the RANGE-value cousin (r19): RangeSlidingAggRewrite first, then
     // GlobalAggRewrite must peel the RangeSlidingAggNode out of its leg

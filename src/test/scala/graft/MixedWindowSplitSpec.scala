@@ -37,8 +37,8 @@ class MixedWindowSplitSpec extends AnyFunSuite {
   private def allOff[A](body: => A): A =
     TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
       TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalOffsetRewrite.ConfKey, "false") {
+        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+          TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false") {
             TestSpark.withConf(graft.plans.GlobalAggRewrite.ConfKey, "false")(body)
           }
         }
@@ -188,7 +188,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     // a disabled family means its class would stay a native funnel —
     // splitting then just adds exchanges in front of it, so the rule
     // must leave the node whole
-    TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
@@ -239,7 +239,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
              nth_value(cn, 1) OVER (ORDER BY id) AS nv1
       FROM fv_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString

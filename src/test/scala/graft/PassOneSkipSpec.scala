@@ -80,7 +80,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"), col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GlobalRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grun") { () =>
+    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grun") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
@@ -88,7 +88,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg RANGE frames: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GlobalRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grunR") { () =>
+    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grunR") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }

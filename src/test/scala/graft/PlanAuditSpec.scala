@@ -417,7 +417,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the PARTIAL rows (one per user per partition — aggregate-sized,
     // not timeline-sized). e32 is the many-small-groups regime, so
     // this is the family's documented asymmetric-cost default
-    // (README cost levers: raise groupedOffset.minBytes to prefer
+    // (README cost levers: raise offset.minBytes to prefer
     // the native one-exchange plan when no group can outgrow a task).
     val p = plan("e32_prev_node")
     assert(p.contains("GroupedOffset"),

@@ -167,7 +167,7 @@ class RangeSlidingAggSpec extends AnyFunSuite {
         TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
           TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
             TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-              TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, "false") {
+              TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
                 TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
                   withRule(on = false)(body)
                 }

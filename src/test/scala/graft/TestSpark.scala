@@ -8,12 +8,11 @@ import org.apache.spark.sql.SparkSession
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = Tables.session(4)
-    // The offset family's r21 `auto` small-input gate (minBytes =
+    // The offset class's r21 `auto` small-input gate (minBytes =
     // advisory partition size) would keep every spec-sized input
     // native. Specs pin the OPERATOR contract, so the harness session
     // disables the gate; the gate's own default is pinned by
     // dedicated cases via `withConf(key, "auto")`.
-    s.conf.set(plans.GlobalOffsetRewrite.MinBytesKey, "0")
     s.conf.set(plans.GroupedOffsetRewrite.MinBytesKey, "0")
     s
   }

@@ -162,7 +162,7 @@ class TieSplitSpec extends AnyFunSuite {
     import s.implicits._
     noCoalesce {
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
           val df = tieData
             .orderBy($"d", $"k")
             .select($"id", $"k",
@@ -184,7 +184,7 @@ class TieSplitSpec extends AnyFunSuite {
       val df0 = (0 until 9000).map(i => (i.toLong, i / 3000, i % 750, (i % 89).toLong))
         .toDF("id", "d", "k", "cents")
       def q(on: Boolean): (Seq[Row], DataFrame) =
-        TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
           val df = df0.repartitionByRange(16, $"d", $"k")
             .select($"id", $"k",
               // hazardous direction: RANGE over d on the finer (d, k)
@@ -275,7 +275,7 @@ class TieSplitSpec extends AnyFunSuite {
         def q(doRank: Boolean, on: Boolean): Seq[Row] = {
           val key =
             if (doRank) graft.plans.GlobalRankRewrite.ConfKey
-            else graft.plans.GlobalRunningAggRewrite.ConfKey
+            else graft.plans.GroupedRunningAggRewrite.ConfKey
           TestSpark.withConf(key, on.toString) {
             val base = df0.repartitionByRange(parts, $"d", $"k")
             val df =
@@ -378,7 +378,7 @@ class TieSplitSpec extends AnyFunSuite {
       def q(on: Boolean): Seq[Row] =
         TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
           TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString) {
-            TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+            TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
               val w = Window.orderBy($"d")
               val df = tieData
                 .orderBy($"d", $"k") // finer range exchange both execs must reuse
@@ -446,7 +446,7 @@ class TieSplitSpec extends AnyFunSuite {
       // firstGroupBuf override (First's left-if-set merge is the
       // order-sensitive merge the partition-order fold must preserve).
       for (on <- Seq(true, false))
-        TestSpark.withConf(graft.plans.GlobalRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
           val df = tieData.orderBy($"d", $"k")
             .select($"id", $"k", $"d",
               first($"cents").over(Window.orderBy($"d")).as("fc"))
@@ -479,7 +479,7 @@ class TieSplitSpec extends AnyFunSuite {
       // the native single-task window is the contract's definition,
       // the operator under the finer exchange must stay inside it
       for (on <- Seq(true, false))
-      TestSpark.withConf(graft.plans.GlobalOffsetRewrite.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString) {
         val df = df0.orderBy($"d", $"v")
           .select($"id", $"d", $"v",
             lag($"v", 1, -1).over(Window.orderBy($"d")).as("pv"),
