@@ -8,13 +8,15 @@ import org.apache.spark.sql.functions._
   * with keys).
   * `runMain graft.RankProbe [nRows] [rank|agg|grouped [nGroups]|offset]`
   * (default 50M, rank).
-  * `rank` probes the GlobalRank operator on a corpus-global ranking;
+  * `rank` probes the rank operator at zero keys (GlobalRank in the
+  * plan) on a corpus-global ranking;
   * `agg` probes GlobalAggRewrite on a `sum OVER ()` share-of-total;
-  * `grouped` probes GroupedRank on a FEW-HUGE-GROUPS ranking (default
-  * 4 groups — the q23-per-nation shape where the native hash window
-  * funnels each group through one task; many-small-groups is the
-  * regime where the operator costs instead, measured by ScratchGR's
-  * per-query A/B at sf0.1);
+  * `grouped` probes the same operator with keys (GroupedRank) on a
+  * FEW-HUGE-GROUPS ranking (default 4 groups — the q23-per-nation
+  * shape where the native hash window funnels each group through one
+  * task; many-small-groups is the regime where the operator costs
+  * instead, measured per query at sf0.1 by `runMain graft.FlipProbe
+  * <query> spark.graft.rank.enabled`);
   * `offset` probes the offset operator at zero keys (GlobalOffset in
   * the plan) on a corpus-global lag/lead pair (the e33
   * runningDifference shape); `offsetnn` on a corpus-global
@@ -38,7 +40,7 @@ import org.apache.spark.sql.functions._
   * splits a group — the exact-long checksum equality between rule-on
   * and rule-off is the 50M-row correctness witness for the driver
   * chain (TieSplitSpec pins the same shapes at spec size).
-  * `mixed` probes the r17 GlobalWindowSplit rule on the q46 shape —
+  * `mixed` probes the WindowSplit rule at zero keys on the q46 shape —
   * ONE select mixing all four family classes (rank + cume_dist,
   * running RANGE sum, lag, full-frame total) over the same global
   * total order, which the analyzer merges into ONE Window node: off =
@@ -54,7 +56,7 @@ import org.apache.spark.sql.functions._
   * ceiling); `groupedrunningchained` runs it over a pre-existing
   * FINER (g, d, fine) exchange that splits both group segments and
   * tie runs — the exec's driver chain at 50M.
-  * `groupedmixed` probes the r18 GroupedWindowSplit rule on the q48
+  * `groupedmixed` probes the WindowSplit rule with keys on the q48
   * shape — ONE select mixing rank family and running RANGE aggregates
   * over the SAME grouped window, few huge groups: off = the pre-r18
   * native hash window at the group-count ceiling, on = GroupedRank +
@@ -117,7 +119,7 @@ object RankProbe {
     val n = if (args.nonEmpty) args(0).toLong else 50000000L
     val mode = if (args.length > 1) args(1) else "rank"
     val nGroups = if (args.length > 2) args(2).toInt else 4
-    val s = Tables.session(32)
+    val s = Tables.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     Tables.applyEnvConfs(s) // e.g. the r21 spill-threshold probe
     import s.implicits._
     val df = s.range(n).select($"id",
@@ -125,11 +127,9 @@ object RankProbe {
     val w = Window.orderBy($"k", $"id")
     val confKey = mode match {
       case "agg" => graft.plans.GlobalAggRewrite.ConfKey
-      case "grouped" => graft.plans.GroupedRankRewrite.ConfKey
       case "groupedrunning" | "groupedrunningchained" =>
         graft.plans.GroupedRunningAggRewrite.ConfKey
-      case "groupedmixed" | "groupedmixedchained" =>
-        graft.plans.GroupedWindowSplit.ConfKey
+      case "groupedmixed" | "groupedmixedchained" => graft.plans.WindowSplit.ConfKey
       case "groupedagg" | "groupedaggmany" =>
         graft.plans.GroupedAggRewrite.ConfKey
       case "mixedspec" | "rangemixedspec" => graft.plans.GlobalAggRewrite.ConfKey
@@ -143,7 +143,7 @@ object RankProbe {
           "groupedoffsetwide" | "groupedoffsetnn" =>
         graft.plans.GroupedOffsetRewrite.ConfKey
       case "running" => graft.plans.GroupedRunningAggRewrite.ConfKey
-      case _ => graft.plans.GlobalRankRewrite.ConfKey
+      case _ => graft.plans.GroupedRankRewrite.ConfKey
     }
     if (mode == "chained" || mode == "mixedchained" ||
         mode == "groupedrunningchained" || mode == "groupedmixedchained" ||
@@ -158,8 +158,8 @@ object RankProbe {
       // off branch must silence every one of them to get the true
       // pre-r17 native mixed funnel
       if (mode == "mixed" || mode == "mixedchained")
-        Seq(graft.plans.GlobalWindowSplit.ConfKey,
-          graft.plans.GlobalRankRewrite.ConfKey,
+        Seq(graft.plans.WindowSplit.ConfKey,
+          graft.plans.GroupedRankRewrite.ConfKey,
           graft.plans.GroupedRunningAggRewrite.ConfKey,
           graft.plans.GroupedOffsetRewrite.ConfKey,
           graft.plans.GlobalAggRewrite.ConfKey)
@@ -168,7 +168,7 @@ object RankProbe {
       // node: the off branch silences both to get the true pre-r18
       // native hash funnel
       if (mode == "groupedmixed" || mode == "groupedmixedchained")
-        Seq(graft.plans.GroupedWindowSplit.ConfKey,
+        Seq(graft.plans.WindowSplit.ConfKey,
           graft.plans.GroupedRankRewrite.ConfKey,
           graft.plans.GroupedRunningAggRewrite.ConfKey)
           .foreach(k => s.conf.set(k, on.toString))

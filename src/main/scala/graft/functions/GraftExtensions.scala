@@ -58,41 +58,32 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // partial combine) and join back null-safely on the keys — AQE
     // broadcasts the per-group side when small, so the rows never
     // shuffle; a giant group streams through its join task instead of
-    // buffering in one window task. Before the splits for the same
+    // buffering in one window task. Before the split for the same
     // mixed-SPEC reason as GlobalAggRewrite.
     ext.injectOptimizerRule(_ => graft.plans.GroupedAggRewrite)
-    // Mixed-function empty-PARTITION-BY windows (rank()+sum() OVER the
-    // same global order in ONE select analyze into ONE Window node) are
-    // split by function class into the stacked operator nodes below, so
-    // the family composes automatically instead of the mixed node
-    // bailing every rewrite and funneling to a single task.
-    ext.injectOptimizerRule(_ => graft.plans.GlobalWindowSplit)
-    // Mixed GROUPED windows (rank()+sum()+lag() OVER the same
-    // PARTITION BY/ORDER BY in ONE select): split onto GroupedRank +
-    // GroupedRunningAgg + GroupedOffset over ONE shared (part, order)
-    // range exchange — the grouped analog; otherwise-unsupported
+    // Mixed-function windows, with or without keys (rank()+sum()+lag()
+    // OVER the same [PARTITION BY/]ORDER BY in ONE select analyze into
+    // ONE Window node), are split by function class into the stacked
+    // operator nodes below over ONE shared range exchange, so the
+    // family composes automatically instead of the mixed node bailing
+    // every rewrite and funneling natively; otherwise-unsupported
     // mixes keep the whole node native.
-    ext.injectOptimizerRule(_ => graft.plans.GroupedWindowSplit)
-    // Corpus-global ranking: bare rank-family windows with an empty
-    // PARTITION BY are rewritten to the range-partitioned two-pass
-    // operator (TopKRewrite runs first, so filter(rank <= k) keeps
-    // the cheaper heap path; this catches the full rankings).
-    ext.injectOptimizerRule(_ => graft.plans.GlobalRankRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
-    // The 2^31 escape hatch (spark.graft.globalRank.longRank=true):
-    // an ANALYZER rule swaps row_number/rank/dense_rank on global
-    // windows for LongType variants — analysis-time so the Dataset
-    // schema/encoders and downstream coercion all agree on the type;
-    // GlobalRankRewrite then recognizes them, and the native
-    // WindowExec evaluates them whenever the rewrite bails.
-    ext.injectResolutionRule(_ => LongRankWiden)
-    // Grouped ranking: rank-family windows WITH partition keys are
-    // rewritten to the same range-partitioned two-pass discipline, so
-    // a group larger than a task never funnels into one (the operator
-    // form of q23/m11's hand idiom; TopKRewrite still wins on
-    // filter(rank <= k)).
+    ext.injectOptimizerRule(_ => graft.plans.WindowSplit)
+    // Ranking: rank-family windows, global or per key, are rewritten to
+    // the range-partitioned two-pass operator, so neither the corpus
+    // (no keys) nor a group larger than a task (keys) funnels into one
+    // task (the operator form of t20/q23/m11's hand idiom; TopKRewrite
+    // runs first, so filter(rank <= k) keeps the cheaper heap path;
+    // this catches the full rankings).
     ext.injectOptimizerRule(_ => graft.plans.GroupedRankRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.GroupedRankStrategy)
+    // The 2^31 escape hatch (spark.graft.rank.longRank=true): an
+    // ANALYZER rule swaps row_number/rank/dense_rank on global
+    // windows for LongType variants — analysis-time so the Dataset
+    // schema/encoders and downstream coercion all agree on the type;
+    // GroupedRankRewrite then recognizes them at zero keys, and the
+    // native WindowExec evaluates them whenever the rewrite bails.
+    ext.injectResolutionRule(_ => LongRankWiden)
     // RUNNING aggregates (sum(x) OVER ([PARTITION BY g] ORDER BY …)),
     // global or grouped: the native window funnels the corpus through
     // one task (no keys) or stops at the group count (keys); the

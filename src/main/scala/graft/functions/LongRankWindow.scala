@@ -8,13 +8,13 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** LongType rank-family window functions — the 2^31 escape hatch for
-  * CORPUS-GLOBAL ranking (plans/GlobalRank.scala).
+  * CORPUS-GLOBAL ranking (the zero-key form of plans/GroupedRank.scala).
   *
   * `row_number()`/`rank()`/`dense_rank()` are IntegerType by Spark's
   * definition, so past 2^31-1 rows a global ranking has no
   * representable value at all. These three are drop-in declarative
   * [[AggregateWindowFunction]]s with LongType state and output; with
-  * `spark.graft.globalRank.longRank=true`, [[LongRankWiden]] swaps
+  * `spark.graft.rank.longRank=true`, [[LongRankWiden]] swaps
   * them in for the built-ins at ANALYSIS time — the only sound place
   * to change an output type: the Dataset's schema, encoders and every
   * downstream expression (type coercion re-runs in the same
@@ -25,13 +25,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * correctness requirement.)
   *
   * Scoped to EMPTY-partition windows only: that is where the ceiling
-  * binds at exactly the scale GlobalRank targets (a 100 TB corpus IS
-  * >2^31 rows). Grouped windows keep IntegerType — a single 2^31-row
-  * GROUP is a pathological key distribution, not a scale milestone
-  * (see the GroupedRank guard rationale).
+  * binds at exactly the scale the zero-key rank operator targets (a
+  * 100 TB corpus IS >2^31 rows). Grouped windows keep IntegerType — a
+  * single 2^31-row GROUP is a pathological key distribution, not a
+  * scale milestone (see the GroupedRankRewrite.LongRankKey scaladoc).
   *
-  * Evaluation paths: GlobalRankRewrite recognizes all three
-  * (RankFnMatch) and emits Long ranks from its two-pass exec;
+  * Evaluation paths: GroupedRankRewrite recognizes all three at zero
+  * keys (RankFnMatch) and emits Long ranks from its two-pass exec;
   * TopKRewrite matches LongRowNumber/LongRank too, so
   * `filter(rank <= k)` keeps the bounded heap plan (emitting a
   * 64-bit rank); when both rewrites bail (e.g. nondeterministic
@@ -126,7 +126,7 @@ case class LongDenseRank(order: Seq[Expression]) extends LongRankLike {
 object LongRankWiden extends Rule[LogicalPlan] {
   def enabled: Boolean =
     SQLConf.get.getConfString(
-      graft.plans.GlobalRankRewrite.LongRankKey, "false").toBoolean
+      graft.plans.GroupedRankRewrite.LongRankKey, "false").toBoolean
 
   private def swap(fn: Expression, order: Seq[Expression]): Option[Expression] =
     fn match {

@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.plans.logical.BROADCAST
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 
-/** GlobalRank's sibling for the OTHER empty-PARTITION-BY funnel: the
+/** The zero-key rank operator's sibling for the OTHER
+  * empty-PARTITION-BY funnel: the
   * share-of-total pattern `sum(x) OVER ()` / `count(*) OVER ()` —
   * an aggregate window with no partition, no order and an unbounded
   * frame. Spark plans it as AllTuples: every row shuffles into ONE
@@ -178,9 +179,9 @@ private[plans] object ExprIdFreshener {
   * annotating node sits in between. Peeled while unneeded:
   *
   *   - native [[LogicalWindow]] nodes (no window output referenced);
-  *   - the graft operator nodes ([[GlobalRankNode]],
-  *     [[GroupedRankNode]], [[GroupedRunningAggNode]],
-  *     [[GroupedOffsetNode]], [[SlidingAggNode]],
+  *   - the graft operator nodes ([[GroupedRankNode]],
+  *     [[GroupedRunningAggNode]], [[GroupedOffsetNode]],
+  *     [[SlidingAggNode]],
   *     [[RangeSlidingAggNode]] — none of their produced attributes
   *     referenced). These are also exactly the nodes
   *     [[ExprIdFreshener]] cannot deep-copy (their fn payloads are
@@ -222,7 +223,7 @@ private[plans] object AggLegPeel {
   }
 
   private def isGraftWindowOp(n: LogicalPlan): Boolean = n match {
-    case _: GlobalRankNode | _: GroupedRankNode | _: GroupedRunningAggNode |
+    case _: GroupedRankNode | _: GroupedRunningAggNode |
          _: GroupedOffsetNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
     case _ => false
   }

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LogicalPlan, Project, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -58,7 +58,7 @@ import org.apache.spark.sql.internal.SQLConf
   * Scope guards: every window expression in the node must be a
   * deterministic, non-DISTINCT, unfiltered AggregateExpression over
   * the full-partition frame whose function is provably
-  * ORDER-INSENSITIVE ([[GlobalWindowSplit.orderInsensitive]] — the
+  * ORDER-INSENSITIVE ([[GroupedAggRewrite.orderInsensitive]] — the
   * r17-audited multiset whitelist; `first(x) OVER (PARTITION BY g)`
   * stays native even though both plans would be "arbitrary", keeping
   * the rewrite's contract bit-exact for everything it claims).
@@ -87,6 +87,7 @@ import org.apache.spark.sql.internal.SQLConf
   * `spark.graft.groupedAgg.enabled=false`.
   */
 object GroupedAggRewrite extends Rule[LogicalPlan] {
+  import CombineSupport.sameExprs
 
   val ConfKey = "spark.graft.groupedAgg.enabled"
   val MinBytesKey = "spark.graft.groupedAgg.minBytes"
@@ -97,21 +98,39 @@ object GroupedAggRewrite extends Rule[LogicalPlan] {
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
 
+  /** The full-frame VALUE must be provably ORDER-INSENSITIVE before
+    * the node's order may be dropped from its spec: Catalyst's
+    * `deterministic` flag is NOT sufficient — First/Last/collect_list
+    * all report deterministic=true while their value depends on input
+    * order (their scaladocs say so; the flag only tracks rand()-style
+    * nondeterminism), so `first(x) OVER (ORDER BY o ROWS BETWEEN
+    * UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)` rewritten
+    * order-free would aggregate in arbitrary partition order and
+    * CHANGE the result. Whitelist of commutative-merge aggregates
+    * whose value is a pure function of the input MULTISET (float
+    * summation associativity remains the documented GlobalAgg
+    * caveat); everything else keeps the whole node native. */
+  private def orderInsensitive(fn: AggregateFunction): Boolean = fn match {
+    case _: Sum | _: Count | _: Min | _: Max | _: Average => true
+    case _: CentralMomentAgg | _: Corr | _: Covariance => true
+    case _: BitAggregate => true
+    case _: HyperLogLogPlusPlus => true
+    case _ => false
+  }
+
   private def fullFrame(f: WindowFrame): Boolean = f match {
     case SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing) => true
     case _ => false
   }
-
-  private def sameExprs(a: Seq[Expression], b: Seq[Expression]): Boolean =
-    a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
 
   /** The grouped full-frame aggregate class: claimed when the frame
     * covers the whole partition, the spec matches the node's own
     * (part, order) and the aggregate's value is a pure function of the
     * group's MULTISET (so the node's ORDER BY — if any — is
     * irrelevant to the value and the join-back may ignore it).
-    * Shared with [[GroupedWindowSplit]], whose full-agg class re-emits
-    * exactly the order-free shape [[apply]] consumes. */
+    * Shared with [[WindowSplit]], whose full-agg class re-emits
+    * exactly the order-free shape [[apply]] and, at zero keys,
+    * [[GlobalAggRewrite]] consume. */
   private[plans] def supported(
       e: NamedExpression,
       part: Seq[Expression],
@@ -120,7 +139,7 @@ object GroupedAggRewrite extends Rule[LogicalPlan] {
         WindowSpecDefinition(p2, o2, frame)), _)
         if fullFrame(frame) && sameExprs(p2, part) && sameExprs(o2, order) &&
           !ae.isDistinct && ae.filter.isEmpty && ae.deterministic &&
-          GlobalWindowSplit.orderInsensitive(ae.aggregateFunction) =>
+          orderInsensitive(ae.aggregateFunction) =>
       Some((a, ae))
     case _ => None
   }

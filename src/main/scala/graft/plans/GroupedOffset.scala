@@ -114,8 +114,7 @@ object GroupedOffsetRewrite extends Rule[LogicalPlan] {
 
   /** One supported offset column: output attribute, input expression,
     * signed offset (negative = lag), default expression, over the
-    * node's own (part, order). Shared with [[GlobalWindowSplit]] and
-    * [[GroupedWindowSplit]].
+    * node's own (part, order). Shared with [[WindowSplit]].
     *
     * ignoreNulls (r22, the r21 verdict's #4): supported on the LAG
     * side only. `lag(x, n) IGNORE NULLS` — the forward-fill idiom —
@@ -268,14 +267,14 @@ object CombineOffsetNodes extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case keep @ GroupedOffsetNode(p1, o1, fns1,
         inner @ GroupedOffsetNode(p2, o2, fns2, child))
-        if sameExprs(p1, p2) && sameOrder(o1, o2) && independent(fns1, inner) =>
+        if sameExprs(p1, p2) && sameExprs(o1, o2) && independent(fns1, inner) =>
       val merged = fns2 ++ fns1
       if (trafficOk(merged, p1)) GroupedOffsetNode(p1, o1, merged, child) else keep
     // transparent-Project bridging (r22): inline the aliases, merge,
     // reproduce the Project's columns on top
     case keep @ GroupedOffsetNode(p1, o1, fns1,
         Project(projList, inner @ GroupedOffsetNode(p2, o2, fns2, child)))
-        if sameExprs(p1, p2) && sameOrder(o1, o2) =>
+        if sameExprs(p1, p2) && sameExprs(o1, o2) =>
       transparentAliases(projList) match {
         case Some(aliases) =>
           val fns1i = inline(fns1, aliases)
@@ -343,7 +342,7 @@ case class GroupedOffsetNode(
 object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
 
   private def isFamilyNode(p: LogicalPlan): Boolean = p match {
-    case _: GroupedOffsetNode | _: GlobalRankNode | _: GroupedRankNode |
+    case _: GroupedOffsetNode | _: GroupedRankNode |
         _: GroupedRunningAggNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
     case _ => false
   }
@@ -411,7 +410,7 @@ case class GroupedOffsetExec(
   // partition keys promoted Ascending/NullsFirst ahead of the frame
   // order — the grouped family's shared OrderedDistribution, so an
   // offset node stacks on the same exchange as GroupedRank /
-  // GroupedRunningAgg / SlidingAgg in a GroupedWindowSplit pile.
+  // GroupedRunningAgg / SlidingAgg in a WindowSplit pile.
   private def fullOrder: Seq[SortOrder] =
     part.map(SortOrder(_, Ascending)) ++ order
 

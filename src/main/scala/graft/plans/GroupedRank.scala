@@ -10,91 +10,191 @@ import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistri
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
-/** GROUPED ranking without group-sized window partitions — the
-  * operator tier's generalization of the hand-applied idiom in r13's
-  * q23 (per-nation deciles, Relational.scala) and m11 (per-(epoch,
-  * source) shuffle order, Multimodal.scala): `rank-family OVER
-  * (PARTITION BY g ORDER BY o)` where a GROUP is far larger than a
-  * healthy task.
+/** Ranking as ONE first-class operator over a key list that may be
+  * empty (SURVEY §2 engine components; the "custom LogicalPlan + Rule +
+  * SparkStrategy + SparkPlan" tier, TopKPerGroup's sibling):
+  * `row_number()/rank()/dense_rank()/percent_rank()/cume_dist()/
+  * ntile(n) OVER ([PARTITION BY g] ORDER BY o)`.
   *
-  * The native plan hash-partitions on g, so EVERY row of a group
-  * lands in ONE task — with ~25 nations over a 100 TB corpus that is
-  * terabytes per task: an OOM, not a slowdown. The hand idiom
-  * (range-partition on (g, o), rank locally within (pid, g), add
-  * per-(g, pid) offsets from a triangular join) fixed that per query,
-  * at the cost of pid columns, offset joins and persist() calls
-  * inlined by hand. [[GroupedRankRewrite]] moves the idiom into the
-  * optimizer, in [[GlobalRankRewrite]]'s exact mold:
+  * The native plan does not distribute a ranking. Without keys (the
+  * corpus-global form) the planner requires AllTuples, so every row
+  * funnels through ONE partition and one task sorts the corpus; with
+  * keys it hash-partitions on g, so EVERY row of a group lands in ONE
+  * task — with ~25 nations over a 100 TB corpus that is terabytes per
+  * task: an OOM, not a slowdown. The repo's queries once avoided both
+  * by hand (t20/q23/m11's range-partition idiom: range repartition →
+  * per-partition local ranks → bounded offset join); the operator
+  * moves that idiom into the optimizer so ANY query gets the
+  * scale-correct plan:
   *
   *   - the logical Window is replaced by [[GroupedRankNode]];
   *   - [[GroupedRankExec]]'s required distribution is
-  *     `OrderedDistribution(groupSort ++ order)` — ONE range exchange
-  *     on (group, order): every task holds a row-balanced contiguous
-  *     SLICE of the group-major global sort, a group may span many
-  *     partitions, and equal (group, order) keys never split;
+  *     `OrderedDistribution(groupSort ++ order)` — the SAME requirement
+  *     a sort has, so EnsureRequirements inserts ONE range exchange on
+  *     (group, order): every task holds a row-balanced contiguous SLICE
+  *     of the group-major sort, a group may span many partitions, and
+  *     nothing funnels to a single task;
   *   - pass 1 streams each sorted partition once and ships to the
   *     driver only its BOUNDARY-GROUP segments — (group key, rows,
   *     distinct order keys) for the partition's first and last group,
-  *     O(partitions) driver data regardless of group count (the
-  *     triangular-join replacement: only groups that straddle a
-  *     partition edge ever need offsets or cross-partition totals);
+  *     O(partitions) driver data regardless of group count (only
+  *     groups that straddle a partition edge ever need offsets or
+  *     cross-partition totals);
   *   - the driver chains boundary segments into per-partition
   *     continuation offsets and spanning-group totals;
-  *   - pass 2 re-streams each sorted partition, restarting local
+  *   - pass 2 re-streams each sorted partition (the shuffle below is
+  *     reused; only the partition-local sort re-runs), restarting local
   *     rank state at every group change and seeding the partition's
   *     first group from the driver offsets.
   *
-  * Correctness mirrors GlobalRank's argument, including its defended
-  * boundary invariant: under the exec's OWN exchange equal
-  * (group, order) keys co-locate, but a pre-existing FINER range
-  * exchange legally satisfies the required distribution by the
-  * common-prefix rule and can split an ORDER-tie run at the same
-  * boundary a group spans. Segments therefore also carry their
-  * boundary order keys and tie-run sizes, and the driver chains
-  * split runs exactly as it chains split groups — the continuation
-  * partition inherits the run's rank and dense state, distinct
-  * counts stop double-counting the run, and cume_dist tie ends are
-  * overridden with the run's true group-local end (r16;
-  * TieSplitSpec pins both GroupedRank paths).
-  * row_number/rank/dense_rank stream with O(1) state;
-  * percent_rank/cume_dist/ntile need the group total before the first
-  * row can emit, so their presence switches pass 2 to a
-  * one-group-SEGMENT buffer — memory bounds at the partition (which
-  * range partitioning row-balances), never at the group, which is
-  * precisely the bound the native plan lacks. All six emission
-  * formulas are Spark's own, so results are bit-identical to the
-  * built-in window (equivalence spec, ties/nulls/desc keys included).
+  * ZERO KEYS are the global form, not a second operator: every
+  * non-empty partition is one segment of one spanning group, so the
+  * chain offsets are the corpus prefix and the chain total is the
+  * corpus total. The group gate ([[GroupGate]]) is switched off there,
+  * so no per-row key projection or compare runs, and the plan displays
+  * as `GlobalRank` instead of `GroupedRank`.
+  *
+  * Correct across partition boundaries for ANY partitioning Spark may
+  * legally hand the exec. Under the exec's own exchange equal
+  * (group, order) keys co-locate, but `OrderedDistribution` is also
+  * satisfied — by RangePartitioning's common-PREFIX rule — by a
+  * pre-existing FINER range exchange (an `orderBy(k, id)` below a
+  * window ordered by `k` alone, a stacked finer window), which can
+  * split an ORDER-tie run at a partition boundary. Segments therefore
+  * also carry their boundary order keys and tie-run sizes, and the
+  * driver chains split runs exactly as it chains split groups — the
+  * continuation partition inherits the run's rank and dense state,
+  * distinct counts stop double-counting the run, and cume_dist tie
+  * ends are overridden with the run's true group-local end
+  * (TieSplitSpec pins the hazardous shapes, with and without keys).
+  * percent_rank, cume_dist and ntile are closed forms over (rank,
+  * tie-run end, row number, group total) — Spark's own formulas, so
+  * results are bit-identical to the built-in window (the equivalence
+  * specs pin all six functions, with ties, nulls, descending keys and
+  * NaN/-0.0 doubles).
+  *
+  * Pass-2 memory, one rule: percent_rank/cume_dist/ntile need the
+  * group TOTAL before the group's first row emits. The driver supplies
+  * the totals of each partition's first and last group; a group whose
+  * total it did not supply (an interior group, wholly local, or any
+  * group under the single-partition pass-1 skip) is buffered as one
+  * group SEGMENT and flushed when it ends — memory bounds at the
+  * partition slice (which range partitioning row-balances), never at
+  * the group. Every other group streams, except that cume_dist, which
+  * also needs each tie run's END, buffers one tie run. At zero keys,
+  * whenever pass 1 ran, the single group's total is known, so
+  * percent_rank/ntile stream and cume_dist holds one tie-run fragment
+  * (the same inherent floor the native range frame pays), never the
+  * corpus.
   *
   * Scope guards: every window expression must be one of the six rank
-  * functions over the node's own (partition, order); partition,
-  * order and child must be deterministic (two passes + the range
-  * sampler evaluate them repeatedly); streaming children bail.
+  * functions over the node's own (partition, order) — the function's
+  * own running frame, literal ntile bucket count; partition keys
+  * deterministic AND orderable (they are promoted into
+  * RangePartitioning, a stricter bar than the native window's
+  * hash-clustering: a hashable-but-unorderable type would pass
+  * analysis against the native plan and then die at planning after
+  * the rewrite); order and subtree deterministic (two passes + the
+  * range sampler evaluate them repeatedly — a `rank() OVER (ORDER BY
+  * rand())` shuffle idiom would produce mutually inconsistent
+  * offsets/ties); non-streaming child; the boundary byte-traffic guard
+  * on (part ++ order). Stacked after [[TopKRewrite]], so a
+  * `filter(rank <= k)` keeps the cheaper heap plan (it never
+  * materializes the full ranking) and only bare rankings land here.
   *
-  * WHEN the rewrite fires is a genuine cost call, unlike its global
-  * sibling: a bare global rank window is pathological at ANY size,
-  * but a grouped window is only pathological when some group
-  * outgrows a task — per-key windows over millions of small groups
-  * are served perfectly well by the native hash exchange, and the
-  * two-pass form costs roughly one extra sort pass plus the range
-  * sampler's child re-execution. Group sizes are invisible at plan
-  * time, so the rule uses the one signal the optimizer has — child
-  * size — with an asymmetric-cost rationale: firing on a small-group
-  * corpus wastes a bounded constant factor (~2× the window stage),
-  * while NOT firing on a large-group corpus is an unbounded
-  * single-task OOM. `spark.graft.groupedRank.minBytes` (default 0 =
-  * always, the graded configuration) sets the child-size threshold;
-  * deployments dominated by small-group windows raise it (Spark's
-  * autoBroadcastJoinThreshold precedent), and
-  * `spark.graft.groupedRank.enabled=false` is the kill switch / A-B
-  * lever. Stacked after [[TopKRewrite]], so `filter(rank <= k)`
-  * windows keep the cheaper heap plan and only bare rankings land
-  * here.
+  * WHEN the rewrite fires is a cost call for grouped windows: a bare
+  * global rank window is pathological at ANY size, but a grouped one
+  * only when some group outgrows a task — per-key windows over
+  * millions of small groups are served well by the native hash
+  * exchange, and the two-pass form costs roughly one extra sort pass
+  * plus the range sampler's child re-execution. Group sizes are
+  * invisible at plan time, so the rule uses the one signal the
+  * optimizer has — child size: `spark.graft.rank.minBytes` (default
+  * 0 = always, the graded configuration) skips the rewrite below a
+  * child-size threshold (Spark's autoBroadcastJoinThreshold
+  * precedent), and `spark.graft.rank.enabled=false` is the kill switch
+  * / A-B lever. `spark.graft.rank.longRank=true` widens the zero-key
+  * Int-family ranks to LongType past the 2^31 ceiling (see
+  * [[RankRange]] and the conf's scaladoc).
   */
+sealed trait GlobalRankFn extends Serializable { def dataType: DataType }
+case object GRowNumber extends GlobalRankFn { val dataType: DataType = IntegerType }
+case object GRank extends GlobalRankFn { val dataType: DataType = IntegerType }
+case object GDenseRank extends GlobalRankFn { val dataType: DataType = IntegerType }
+case object GPercentRank extends GlobalRankFn { val dataType: DataType = DoubleType }
+case object GCumeDist extends GlobalRankFn { val dataType: DataType = DoubleType }
+case class GNTile(buckets: Int) extends GlobalRankFn { val dataType: DataType = IntegerType }
+
+/** Matcher for the six rank-family window functions over a node's own
+  * (partition, order) spec — shared by [[GroupedRankRewrite]] and
+  * [[WindowSplit]]. */
+private[plans] object RankFnMatch {
+  import CombineSupport.sameExprs
+
+  private val RunningRowFrame =
+    SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow)
+  private val RunningRangeFrame =
+    SpecifiedWindowFrame(RangeFrame, UnboundedPreceding, CurrentRow)
+
+  def supported(
+      e: NamedExpression,
+      part: Seq[Expression],
+      order: Seq[SortOrder],
+      allowLong: Boolean): Option[(Attribute, GlobalRankFn)] = e match {
+    case a @ Alias(WindowExpression(fn, WindowSpecDefinition(p2, o2, frame)), _)
+        if sameExprs(p2, part) && sameExprs(o2, order) =>
+      // each rank function carries its own fixed frame: the running
+      // ROW frame for the RowNumber/Rank family, the running RANGE
+      // frame for cume_dist (ties included via the range bound)
+      (fn, frame) match {
+        case (_: RowNumber, RunningRowFrame) => Some(a.toAttribute -> GRowNumber)
+        case (_: Rank, RunningRowFrame) => Some(a.toAttribute -> GRank)
+        case (_: DenseRank, RunningRowFrame) => Some(a.toAttribute -> GDenseRank)
+        case (_: PercentRank, RunningRowFrame) => Some(a.toAttribute -> GPercentRank)
+        case (_: CumeDist, RunningRangeFrame) => Some(a.toAttribute -> GCumeDist)
+        case (NTile(Literal(b: Int, IntegerType)), RunningRowFrame) if b > 0 =>
+          Some(a.toAttribute -> GNTile(b))
+        // the LongType variants LongRankWiden swaps in under the
+        // longRank conf (zero-key windows only — callers pass
+        // allowLong = part.isEmpty): the exec keys its emission width
+        // off the attribute's LongType
+        case (_: graft.functions.LongRowNumber, RunningRowFrame) if allowLong =>
+          Some(a.toAttribute -> GRowNumber)
+        case (_: graft.functions.LongRank, RunningRowFrame) if allowLong =>
+          Some(a.toAttribute -> GRank)
+        case (_: graft.functions.LongDenseRank, RunningRowFrame) if allowLong =>
+          Some(a.toAttribute -> GDenseRank)
+        case _ => None
+      }
+    case _ => None
+  }
+}
+
 object GroupedRankRewrite extends Rule[LogicalPlan] {
 
-  val ConfKey = "spark.graft.groupedRank.enabled"
-  val MinBytesKey = "spark.graft.groupedRank.minBytes"
+  val ConfKey = "spark.graft.rank.enabled"
+  val MinBytesKey = "spark.graft.rank.minBytes"
+
+  /** Escape hatch past the IntegerType rank ceiling (default false):
+    * `row_number`/`rank`/`dense_rank` are IntegerType by Spark's own
+    * definition, so past 2^31 input rows a corpus-global ranking has
+    * NO representable value and the exec fails loudly — which is
+    * exactly the scale this operator exists for. With the conf on,
+    * [[graft.functions.LongRankWiden]] swaps the three for LongType
+    * window functions AT ANALYSIS TIME on zero-key windows (a
+    * documented schema divergence; percent_rank/cume_dist are doubles
+    * and ntile is bounded by its bucket count, so they keep native
+    * types at any N); this rewrite then recognizes the Long variants
+    * and the exec emits 64-bit ranks. Analysis-time is a correctness
+    * requirement, not a convenience: Dataset.schema/encoders read the
+    * ANALYZED plan, and downstream consumers re-coerce against the
+    * Long column in the same resolution fixed-point. Grouped windows
+    * keep IntegerType: a single 2^31-row GROUP is a pathological key
+    * distribution at any corpus size, and the remedy is restructuring
+    * the grouping, not a wider type. */
+  val LongRankKey = "spark.graft.rank.longRank"
 
   private def enabled: Boolean =
     SQLConf.get.getConfString(ConfKey, "true").toBoolean
@@ -102,38 +202,36 @@ object GroupedRankRewrite extends Rule[LogicalPlan] {
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
 
+  /** The plan's display name by key count. */
+  private[plans] def opName(part: Seq[Expression]): String =
+    if (part.isEmpty) "GlobalRank" else "GroupedRank"
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan
     plan.transformUp {
-      // the PARTITION BY keys are promoted into SortOrder/Range-
-      // Partitioning (groupSort), so they must be ORDERABLE — a
-      // stricter bar than the native window's hash-clustering
-      // (hashable): a hashable-but-unorderable partition type would
-      // pass analysis against the native plan and then die at
-      // planning after the rewrite, so such windows stay native
       case w @ LogicalWindow(wexprs, part, order, child, _)
-          if part.nonEmpty && order.nonEmpty && wexprs.nonEmpty &&
-            !child.isStreaming &&
+          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
             part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
             order.forall(_.deterministic) &&
             PlanGuards.subtreeDeterministic(child) &&
             PlanGuards.boundaryTrafficOk(order, part) &&
             child.stats.sizeInBytes >= minBytes =>
-        val fns = wexprs.map(RankFnMatch.supported(_, part, order))
+        val fns = wexprs.map(RankFnMatch.supported(_, part, order, allowLong = part.isEmpty))
         if (fns.forall(_.isDefined)) GroupedRankNode(part, order, fns.flatten, child)
         else w
     }
   }
 }
 
-/** Logical grouped ranking: child's rows plus one column per rank
-  * function (same exprIds as the window expressions the rewrite
-  * replaced, so downstream references bind unchanged). */
+/** Logical ranking: child's rows plus one column per rank function
+  * (same exprIds as the window expressions the rewrite replaced, so
+  * downstream references bind unchanged). */
 case class GroupedRankNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[(Attribute, GlobalRankFn)],
     child: LogicalPlan) extends UnaryNode {
+  override def nodeName: String = GroupedRankRewrite.opName(part) + "Node"
   override def output: Seq[Attribute] = child.output ++ fns.map(_._1)
   override def producedAttributes: AttributeSet = AttributeSet(fns.map(_._1))
   override def maxRows: Option[Long] = child.maxRows
@@ -179,6 +277,7 @@ case class GroupedRankExec(
     fns: Seq[(Attribute, GlobalRankFn)],
     child: SparkPlan) extends UnaryExecNode {
 
+  override def nodeName: String = GroupedRankRewrite.opName(part)
   override def output: Seq[Attribute] = child.output ++ fns.map(_._1)
 
   /** Group columns participate in the range order ahead of the rank
@@ -194,39 +293,48 @@ case class GroupedRankExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output
-    val gSort = groupSort
+    val partExprs = part
     val ord = order
     val out = output // localized: the closures must not capture `this`
+    val op = nodeName
     val fnSpecs: Array[GlobalRankFn] = fns.map(_._2).toArray
+    // emission width per column: LongType when the longRank conf
+    // widened a zero-key attribute at analysis time, else the
+    // function's native type
+    val fnLong: Array[Boolean] = fns.map(_._1.dataType == LongType).toArray
+    val fnTyped: Seq[(GlobalRankFn, Boolean)] = fnSpecs.toSeq.zip(fnLong)
     // percent_rank/cume_dist/ntile need the group's TOTAL before its
-    // first row emits -> one-group-segment buffering in pass 2
+    // first row emits; cume_dist also needs each tie run's END
     val needsTotals = fnSpecs.exists {
       case GPercentRank | GCumeDist | _: GNTile => true
       case _ => false
     }
+    val needsCume = fnSpecs.contains(GCumeDist)
     val rdd = child.execute()
-    PlanGuards.runtimeBoundaryWarn("GroupedRank", rdd.getNumPartitions, ord, part)
+    PlanGuards.runtimeBoundaryWarn(op, rdd.getNumPartitions, ord, part)
 
-    // r22 fixed-cost trim (the r21 verdict's #1): on ONE post-exchange
-    // partition every pass-1 fact is vacuous — no group or tie run can
-    // straddle a boundary, so continuation offsets are 0 and no chain
-    // exists — and, unlike the GLOBAL sibling, the skip needs no
-    // fn-subset condition: the totals that percent_rank/cume_dist/
-    // ntile close over are per GROUP, and with every group wholly
-    // local the one-group-segment buffer of pass 2 observes each
-    // total itself at flush time (`localTotals` below). The RankRange
-    // overflow guard, which pass 1 also fed via the per-partition
-    // maxima, moves INLINE into pass 2's `step` under the skip.
-    val skipPassOne = rdd.getNumPartitions <= 1
+    // r22 fixed-cost trim: on ONE post-exchange partition every pass-1
+    // fact is vacuous — no group or tie run can straddle a boundary,
+    // so continuation offsets are 0 and no chain exists. With keys the
+    // skip needs no fn-subset condition: every group is wholly local,
+    // so pass 2 buffers its segment and observes the total at flush
+    // time. At ZERO keys that segment would be the whole partition, so
+    // the skip applies only when no function needs the total
+    // (rank/dense_rank/row_number), and pass 1 stays to supply it
+    // otherwise. The RankRange overflow guard, which pass 1 also fed,
+    // moves INLINE into pass 2's `step` under the skip.
+    val skipPassOne = rdd.getNumPartitions <= 1 && (part.nonEmpty || !needsTotals)
 
     // Pass 1: boundary-group segments only — O(partitions) to the
     // driver. The input is (group, order)-sorted, so group changes and
-    // within-group distinct counting are streaming O(1).
+    // within-group distinct counting are streaming O(1). All shipped
+    // facts are statistics of the KEY sequence, insensitive to
+    // tie-permutation between the two passes.
     val summaries: Array[Option[PartSummary]] =
       if (skipPassOne) Array.fill(rdd.getNumPartitions)(None)
       else rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
-        val (gProj, gCmp) = GlobalRankExec.keyTools(gSort, childOut)
-        val (oProj, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+        val gate = new GroupGate(partExprs, childOut)
+        val (oProj, oCmp) = GroupedRankExec.keyTools(ord, childOut)
         var first: GroupSeg = null
         var curKey: UnsafeRow = null
         var curN = 0L
@@ -244,8 +352,8 @@ case class GroupedRankExec(
         }
         while (it.hasNext) {
           val row = it.next()
-          val gk = gProj(row)
-          if (curKey == null || gCmp.compare(curKey, gk) != 0) {
+          val gk = gate.key(row)
+          if (curKey == null || !gate.same(curKey, gk)) {
             if (curKey != null) {
               if (nGroups == 1L) first = closeSeg()
               if (curN > maxN) maxN = curN
@@ -284,9 +392,9 @@ case class GroupedRankExec(
     // segments of the SAME group (empty partitions do not break a
     // chain). Each partition learns (a) the continuation offsets for
     // its first group — rows/distinct keys of that group in earlier
-    // partitions — and (b) the final global totals of its first and
-    // last groups' chains. Interior groups are wholly local, offsets 0
-    // and totals observable in pass 2.
+    // partitions — and (b) the final totals of its first and last
+    // groups' chains. Interior groups are wholly local, offsets 0 and
+    // totals observable in pass 2.
     //
     // ONE DIMENSION DOWN, the same chaining applies to ORDER-tie runs
     // inside a spanning group: a finer pre-existing range exchange
@@ -309,8 +417,8 @@ case class GroupedRankExec(
     val chains = ArrayBuffer.empty[(Long, Long)]
     locally {
       // driver-side comparators with the sort's own semantics
-      val (_, gCmp) = GlobalRankExec.keyTools(gSort, childOut)
-      val (_, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+      val gate = new GroupGate(partExprs, childOut)
+      val (_, oCmp) = GroupedRankExec.keyTools(ord, childOut)
       var openKey: UnsafeRow = null
       var openChain = -1
       var openOrd: UnsafeRow = null // open chain's final order key
@@ -327,7 +435,7 @@ case class GroupedRankExec(
             firstChain(p) = -1
             lastChain(p) = -1
           case Some(s) =>
-            val isChained = openKey != null && gCmp.compare(openKey, s.first.key) == 0
+            val isChained = openKey != null && gate.same(openKey, s.first.key)
             if (isChained) {
               firstChain(p) = openChain
               contN(p) = chains(openChain)._1
@@ -385,44 +493,44 @@ case class GroupedRankExec(
       if (firstChain(p) < 0) 0L else chains(firstChain(p))._1)
     val lastTotN = Array.tabulate(nParts)(p =>
       if (lastChain(p) < 0) 0L else chains(lastChain(p))._1)
+    val groupsIn = summaries.map(_.fold(0L)(_.nGroups))
 
-    // Per-group rank columns keep the built-in window's IntegerType
-    // (same exprIds, same types): the ceiling fires per GROUP, so —
-    // unlike GlobalRank, whose corpus-total ceiling binds at exactly
-    // the scale that operator targets and therefore carries the
-    // longRank escape hatch — a single 2^31-row group is a
-    // pathological key distribution at ANY corpus size, and the
-    // right remedy is restructuring the grouping, not a wider type.
-    // The maxima cover interior groups (per-partition maxN/maxD from
-    // pass 1) as well as boundary chains, so an interior group past
-    // the ceiling fails loudly instead of silently wrapping at the
-    // Int narrowing; RankRange refines per function (an
-    // ntile/percent_rank/cume_dist-only window has NO group-size
-    // ceiling at all).
+    // Per-function overflow guards (RankRange) over the largest group
+    // — the corpus at zero keys. The maxima cover interior groups
+    // (per-partition maxN/maxD from pass 1) as well as boundary
+    // chains, so an interior group past the ceiling fails loudly
+    // instead of silently wrapping at the Int narrowing. The remedy
+    // differs by key count: the corpus-total ceiling binds at exactly
+    // the scale the zero-key form targets, hence the longRank escape
+    // hatch; a single 2^31-row GROUP calls for restructuring.
     val maxChainN = (chains.map(_._1) ++ summaries.flatMap(_.map(_.maxN))).foldLeft(0L)(math.max)
     val maxChainD = (chains.map(_._2) ++ summaries.flatMap(_.map(_.maxD))).foldLeft(0L)(math.max)
-    val rankRemedy =
-      "; restructure the grouping (a single group this large is " +
-        "pathological) or pre-aggregate before ranking"
-    RankRange.check("GroupedRank", "rows in one group",
-      fnSpecs.map(f => (f, false)), maxChainN, maxChainD, rankRemedy)
+    val (scope, rankRemedy) =
+      if (part.isEmpty) ("input rows",
+        s"; set ${GroupedRankRewrite.LongRankKey}=true for LongType ranks " +
+          "(documented schema divergence) or pre-aggregate before ranking")
+      else ("rows in one group",
+        "; restructure the grouping (a single group this large is " +
+          "pathological) or pre-aggregate before ranking")
+    RankRange.check(op, scope, fnTyped, maxChainN, maxChainD, rankRemedy)
     // under the pass-1 skip the maxima above are the placeholder 0s:
-    // the same per-function group ceilings are enforced inline in
-    // pass 2's `step` (rn/dr are group-local there), at the exact row
-    // that would wrap the Int narrowing
-    val inlineNCheck = skipPassOne && fnSpecs.exists {
-      case GRowNumber | GRank => true
+    // the same per-function ceilings are enforced inline in pass 2's
+    // `step` (rn/dr are group-local there), at the exact row that
+    // would wrap the Int narrowing
+    val inlineNCheck = skipPassOne && fnTyped.exists {
+      case (GRowNumber | GRank, false) => true
       case _ => false
     }
-    val inlineDCheck = skipPassOne && fnSpecs.contains(GDenseRank)
+    val inlineDCheck = skipPassOne && fnTyped.contains((GDenseRank, false))
 
     // Pass 2: re-stream each sorted partition (the shuffle below is
     // reused; only the partition-local sort re-runs).
     rdd.mapPartitionsWithIndex({ (pid, it) =>
-      val (gProj, gCmp) = GlobalRankExec.keyTools(gSort, childOut)
-      val (oProj, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+      val gate = new GroupGate(partExprs, childOut)
+      val (oProj, oCmp) = GroupedRankExec.keyTools(ord, childOut)
       val toUnsafe = UnsafeProjection.create(out, out)
-      val extra = new SpecificInternalRow(fnSpecs.map(_.dataType).toSeq)
+      val extra = new SpecificInternalRow(
+        fnTyped.map { case (f, l) => if (l) LongType else f.dataType })
       val joined = new JoinedRow
 
       var curKey: UnsafeRow = null
@@ -431,33 +539,38 @@ case class GroupedRankExec(
       var rn = 0L // group-local row number (incl. continuation offset)
       var dr = 0L
       var curRank = 0L
-      var localN = 0L // rows of the current group seen in THIS partition
       var runsSeen = 0L // tie runs seen in the current group segment
+      // the current group's total when the driver supplied it (the
+      // partition's first and last groups, pass 1 run); otherwise a
+      // totals-needing group buffers its segment until it ends
+      var total = 0L
+      var bufferSeg = false
       // first-group order-run continuation (finer-exchange split):
       // the boundary run must not claim a fresh dense rank and its
       // rank is the chain-supplied run start, not the local rn
       val isOrdChained = ordChained(pid)
       val contRankStart = contRank(pid)
       val tieEndOv = lastTieEndOv(pid)
+      val lastGroup = groupsIn(pid)
 
       def startGroup(gk: UnsafeRow): Unit = {
         groupIdx += 1
         curKey = gk.copy()
         prevOrd = null
-        localN = 0L
         runsSeen = 0L
         if (groupIdx == 1L) {
           rn = contN(pid)
           dr = contD(pid) - (if (isOrdChained) 1L else 0L)
         } else { rn = 0L; dr = 0L }
+        val supplied = !skipPassOne && (groupIdx == 1L || groupIdx == lastGroup)
+        total = if (groupIdx == 1L) firstTotN(pid) else lastTotN(pid)
+        bufferSeg = needsTotals && !supplied
       }
 
-      def step(row: InternalRow): (Long, Long, Long) = {
+      def step(row: InternalRow): Unit = {
         rn += 1
-        localN += 1
         if (inlineNCheck && rn > Int.MaxValue.toLong)
-          RankRange.check("GroupedRank", "rows in one group",
-            fnSpecs.map(f => (f, false)), rn, dr, rankRemedy)
+          RankRange.check(op, scope, fnTyped, rn, dr, rankRemedy)
         val ok = oProj(row)
         if (prevOrd == null || oCmp.compare(prevOrd, ok) != 0) {
           runsSeen += 1
@@ -466,21 +579,25 @@ case class GroupedRankExec(
             else rn
           dr += 1
           if (inlineDCheck && dr > Int.MaxValue.toLong)
-            RankRange.check("GroupedRank", "rows in one group",
-              fnSpecs.map(f => (f, false)), rn, dr, rankRemedy)
+            RankRange.check(op, scope, fnTyped, rn, dr, rankRemedy)
           prevOrd = ok.copy()
         }
-        (rn, curRank, dr)
       }
 
+      // tieEnd = group-local row number of the LAST member of the
+      // row's tie run (cume_dist's numerator); totN = the group's row
+      // count. Both unused (0) when no function reads them.
       def emit(row: InternalRow, rrn: Long, rank: Long, rdr: Long,
           tieEnd: Long, totN: Long): InternalRow = {
         var j = 0
         while (j < fnSpecs.length) {
           fnSpecs(j) match {
-            case GRowNumber => extra.setInt(j, rrn.toInt)
-            case GRank => extra.setInt(j, rank.toInt)
-            case GDenseRank => extra.setInt(j, rdr.toInt)
+            case GRowNumber =>
+              if (fnLong(j)) extra.setLong(j, rrn) else extra.setInt(j, rrn.toInt)
+            case GRank =>
+              if (fnLong(j)) extra.setLong(j, rank) else extra.setInt(j, rank.toInt)
+            case GDenseRank =>
+              if (fnLong(j)) extra.setLong(j, rdr) else extra.setInt(j, rdr.toInt)
             case GPercentRank =>
               extra.setDouble(j,
                 if (totN > 1L) (rank - 1L).toDouble / (totN - 1L).toDouble
@@ -488,7 +605,8 @@ case class GroupedRankExec(
             case GCumeDist =>
               extra.setDouble(j, tieEnd.toDouble / totN.toDouble)
             case GNTile(b) =>
-              // Spark's NTile fill rule over the GROUP's row count
+              // Spark's NTile fill rule: q = N/b rows per bucket, the
+              // first r = N%b buckets take one extra row
               val q = totN / b
               val r = totN % b
               val big = q + 1L
@@ -504,89 +622,87 @@ case class GroupedRankExec(
         toUnsafe(joined(row, extra))
       }
 
-      if (!needsTotals) {
-        // streaming: O(1) state, totals never consulted
-        it.map { row =>
-          val gk = gProj(row)
-          if (curKey == null || gCmp.compare(curKey, gk) != 0) startGroup(gk)
-          val (a, b, c) = step(row)
-          emit(row, a, b, c, 0L, 0L)
-        }
-      } else {
-        // one-group-SEGMENT buffer: flush when the group changes (its
-        // total is then known — driver total for boundary groups,
-        // local count for interior ones). Memory bounds at the
-        // partition slice, never the group.
-        new Iterator[InternalRow] {
-          private val buf = ArrayBuffer.empty[(InternalRow, Long, Long, Long)]
-          private var outIt: Iterator[InternalRow] = Iterator.empty
-          private var exhausted = false
+      new Iterator[InternalRow] {
+        // buffered rows with their (rn, rank, dense rank): one group
+        // segment while `bufferSeg`, else one cume_dist tie run
+        private val buf = ArrayBuffer.empty[(InternalRow, Long, Long, Long)]
+        private var outIt: Iterator[InternalRow] = Iterator.empty
+        // a streamed row, emitted once `outIt` drains (upstream is not
+        // advanced before then, so the row needs no copy)
+        private var held: InternalRow = null
+        private var exhausted = false
 
-          private def groupTotal(atEnd: Boolean): Long = {
-            // pass-1 skip: EVERY group is wholly local on the single
-            // partition, so rn at flush time IS the group total (the
-            // firstTotN/lastTotN placeholders were never measured)
-            if (skipPassOne) rn
-            else if (groupIdx == 1L) firstTotN(pid)
-            else if (atEnd) lastTotN(pid)
-            else rn // interior group: fully local, offsets are 0
+        private def flush(atEnd: Boolean): Iterator[InternalRow] = {
+          // a buffered segment ends with its group: rn is then the
+          // group total (offsets are 0 for wholly local groups)
+          val totN = if (bufferSeg) rn else total
+          val rows = buf.toArray
+          buf.clear()
+          // tie ends: last group-local row number of each rank run
+          val tieEnd = new Array[Long](rows.length)
+          var i = rows.length - 1
+          var end = 0L
+          var lastRank = -1L
+          while (i >= 0) {
+            if (rows(i)._3 != lastRank) { end = rows(i)._2; lastRank = rows(i)._3 }
+            tieEnd(i) = end
+            i -= 1
           }
-
-          private def flush(atEnd: Boolean): Iterator[InternalRow] = {
-            val totN = groupTotal(atEnd)
-            val rows = buf.toArray
-            buf.clear()
-            // tie ends: last group-local row number of each rank run
-            val tieEnd = new Array[Long](rows.length)
-            var i = rows.length - 1
-            var end = 0L
-            var lastRank = -1L
-            while (i >= 0) {
-              if (rows(i)._3 != lastRank) { end = rows(i)._2; lastRank = rows(i)._3 }
-              tieEnd(i) = end
-              i -= 1
+          // the partition's FINAL tie run may extend into later
+          // partitions (finer-exchange split): the driver chain then
+          // supplies its true group-local end
+          if (atEnd && tieEndOv > 0L) {
+            val finalRank = rows(rows.length - 1)._3
+            var j = rows.length - 1
+            while (j >= 0 && rows(j)._3 == finalRank) {
+              tieEnd(j) = tieEndOv
+              j -= 1
             }
-            // the partition's FINAL tie run may extend into later
-            // partitions (finer-exchange split): the driver chain then
-            // supplies its true group-local end
-            if (atEnd && tieEndOv > 0L && rows.nonEmpty) {
-              val finalRank = rows(rows.length - 1)._3
-              var j = rows.length - 1
-              while (j >= 0 && rows(j)._3 == finalRank) {
-                tieEnd(j) = tieEndOv
-                j -= 1
-              }
-            }
-            rows.iterator.zipWithIndex.map { case ((r, a, b, c), k) =>
+          }
+          new Iterator[InternalRow] {
+            private var k = -1
+            override def hasNext: Boolean = k + 1 < rows.length
+            override def next(): InternalRow = {
+              k += 1
+              val (r, a, b, c) = rows(k)
               emit(r, a, b, c, tieEnd(k), totN)
             }
           }
+        }
 
-          @annotation.tailrec private def advance(): Unit = {
-            if (outIt.hasNext) ()
-            else if (it.hasNext) {
-              val row = it.next()
-              val gk = gProj(row)
-              val isNew = curKey == null || gCmp.compare(curKey, gk) != 0
-              if (isNew) {
-                val pending = if (buf.nonEmpty) flush(atEnd = false) else Iterator.empty
-                startGroup(gk)
-                val (a, b, c) = step(row)
-                buf += ((row.copy(), a, b, c))
-                outIt = pending
-                advance()
-              } else {
-                val (a, b, c) = step(row)
-                buf += ((row.copy(), a, b, c))
-                advance()
-              }
-            } else if (!exhausted) {
-              exhausted = true
-              if (buf.nonEmpty) outIt = flush(atEnd = true)
+        @annotation.tailrec private def advance(): Unit = {
+          if (outIt.hasNext || held != null) ()
+          else if (it.hasNext) {
+            val row = it.next()
+            val gk = gate.key(row)
+            if (curKey == null || !gate.same(curKey, gk)) {
+              if (buf.nonEmpty) outIt = flush(atEnd = false)
+              startGroup(gk)
             }
+            val runsBefore = runsSeen
+            step(row)
+            if (bufferSeg || needsCume) {
+              // a new tie run closes the buffered one when the total
+              // is known (a segment buffer waits for the group's end)
+              if (!bufferSeg && runsSeen != runsBefore && buf.nonEmpty)
+                outIt = flush(atEnd = false)
+              buf += ((row.copy(), rn, curRank, dr))
+            } else held = row
+            advance()
+          } else if (!exhausted) {
+            exhausted = true
+            if (buf.nonEmpty) outIt = flush(atEnd = true)
           }
-          override def hasNext: Boolean = { advance(); outIt.hasNext }
-          override def next(): InternalRow = { advance(); outIt.next() }
+        }
+        override def hasNext: Boolean = { advance(); held != null || outIt.hasNext }
+        override def next(): InternalRow = {
+          advance()
+          if (outIt.hasNext) outIt.next()
+          else {
+            val r = held
+            held = null
+            emit(r, rn, curRank, dr, 0L, total)
+          }
         }
       }
     }, preservesPartitioning = true)
@@ -594,4 +710,188 @@ case class GroupedRankExec(
 
   override protected def withNewChildInternal(newChild: SparkPlan): GroupedRankExec =
     copy(child = newChild)
+}
+
+object GroupedRankExec {
+  /** Per-task tie-detection tools: project the order keys, compare
+    * key rows with the SORT'S OWN semantics (RowOrdering over the
+    * SortOrders rebound to the key row). Binary key equality would
+    * be wrong for floats — -0.0 and 0.0 (and NaN bit patterns) sort
+    * equal but differ as bytes — and full-row compare+copy would
+    * drag every payload column through the detector; this copies a
+    * few key columns once per tie run. */
+  private[plans] def keyTools(
+      order: Seq[SortOrder],
+      childOut: Seq[Attribute]): (UnsafeProjection, BaseOrdering) = {
+    val proj = UnsafeProjection.create(order.map(_.child), childOut)
+    val bound = order.zipWithIndex.map { case (so, i) =>
+      so.copy(child = BoundReference(i, so.child.dataType, so.child.nullable))
+    }
+    (proj, RowOrdering.create(bound, Seq.empty))
+  }
+}
+
+/** Per-function overflow guards for the rank-family output columns of
+  * [[GroupedRankExec]] (corpus totals at zero keys, per-group maxima
+  * with keys). Refined per function rather than a blanket row
+  * cap, because the ceiling is a property of the OUTPUT TYPE, not the
+  * operator: an Int-typed row_number/rank has no representable value
+  * past 2^31-1 rows and an Int-typed dense_rank past 2^31-1 DISTINCT
+  * keys, while LongType ranks (the longRank conf), percent_rank and
+  * cume_dist (doubles) and ntile (bounded by its literal bucket count)
+  * are valid at any N — a 100 TB corpus can ntile/percent_rank
+  * globally with NO escape hatch needed. Factored out so the specs
+  * exercise the 2^31 boundary with synthetic totals (three longs), not
+  * 2^31 real rows. */
+private[graft] object RankRange {
+  /** @param fns   each rank function with whether it emits LongType
+    * @param n     rows in the checked scope (corpus / largest group)
+    * @param d     distinct order keys in the checked scope
+    * @param remedy appended to the failure message (operator-specific) */
+  def check(op: String, scope: String, fns: Seq[(GlobalRankFn, Boolean)],
+      n: Long, d: Long, remedy: String): Unit =
+    fns.foreach {
+      case (GRowNumber | GRank, false) =>
+        require(n <= Int.MaxValue.toLong,
+          s"$op: $n $scope exceed the IntegerType rank range (2^31-1)$remedy")
+      case (GDenseRank, false) =>
+        require(d <= Int.MaxValue.toLong,
+          s"$op: $d distinct keys over $scope exceed the IntegerType " +
+            s"dense_rank range (2^31-1)$remedy")
+      case _ => () // LongType ranks, ntile (≤ buckets), percent_rank/cume_dist
+    }
+}
+
+/** Shared guards of the window-operator rewrites (rank, running,
+  * offset, sliding, full-frame aggregate; global or grouped).
+  * [[subtreeDeterministic]] is true iff no expression anywhere in the
+  * subtree is nondeterministic: every rewrite evaluates (parts of) the
+  * child more than once — the agg rewrites duplicate the subtree
+  * outright, the two-pass operators run two jobs over their RDD — so
+  * a rand()-derived column or sampling filter could diverge between
+  * evaluations; those stay native. The byte guards below bound the
+  * pass-1 driver traffic. */
+object PlanGuards extends org.apache.spark.internal.Logging {
+  def subtreeDeterministic(p: LogicalPlan): Boolean =
+    p.find(n => !n.expressions.forall(_.deterministic)).isEmpty
+
+  /** Byte guard on pass-1 boundary-KEY driver traffic, the family
+    * analogue of the offset class's maxOffset cap. GlobalRank,
+    * GroupedRank and GroupedRunningAgg (with group keys or a RANGE
+    * frame) each ship two projected key rows per partition to the
+    * driver — O(partitions × key bytes), which
+    * is trivial for the numeric/date keys real rankings use but has
+    * no cap of its own: a wide-string order key at 10^5+ partitions
+    * would make pass 1 driver-bound. Projected traffic is estimated
+    * CONSERVATIVELY at rewrite time as
+    * `numShufflePartitions × 2 keys × Σ per-column width`, with
+    * variable-width columns (strings/binaries/nested types) assumed
+    * 256 bytes regardless of their optimistic defaultSize — past
+    * `spark.graft.globalWindow.maxBoundaryBytes` (default 64 MB) the
+    * window stays native with a log line, the same
+    * weigh-it-deliberately contract as raising maxOffset. The
+    * estimate uses the shuffle-partition conf (an upper bound on the
+    * range exchange's width; AQE only coalesces downward). */
+  val MaxBoundaryBytesKey = "spark.graft.globalWindow.maxBoundaryBytes"
+
+  private def widthOf(dt: org.apache.spark.sql.types.DataType): Long = dt match {
+    case org.apache.spark.sql.types.StringType |
+         org.apache.spark.sql.types.BinaryType => 256L
+    case _: org.apache.spark.sql.types.ArrayType |
+         _: org.apache.spark.sql.types.MapType |
+         _: org.apache.spark.sql.types.StructType =>
+      math.max(dt.defaultSize.toLong, 256L)
+    case other => other.defaultSize.toLong
+  }
+
+  private def capBytes: Long = SQLConf.get
+    .getConfString(MaxBoundaryBytesKey, (64L * 1024 * 1024).toString).toLong
+
+  private def keyBytesOf(order: Seq[SortOrder], part: Seq[Expression]): Long =
+    (order.map(_.child.dataType) ++ part.map(_.dataType)).map(widthOf).sum
+
+  /** Plan-time guard. SCOPE CAVEAT (r18, from the r17 advisory): the
+    * shuffle-partition conf bounds only the exec's OWN rewrite-
+    * inserted exchange — the operators deliberately REUSE pre-existing
+    * finer exchanges (the OrderedDistribution prefix rule), and a
+    * `repartitionByRange(N)` with N far above the conf is invisible
+    * here. [[runtimeBoundaryWarn]] is the runtime backstop for that
+    * configuration. */
+  def boundaryTrafficOk(order: Seq[SortOrder], part: Seq[Expression] = Nil): Boolean = {
+    val cap = capBytes
+    val parts = SQLConf.get.numShufflePartitions.toLong
+    val keyBytes = keyBytesOf(order, part)
+    val projected = parts * 2L * keyBytes
+    val ok = projected <= cap
+    if (!ok) logInfo(s"global-window rewrite bails to the native plan: " +
+      s"projected pass-1 boundary-key driver traffic ($parts partitions × " +
+      s"2 keys × $keyBytes bytes = $projected B) exceeds " +
+      s"$MaxBoundaryBytesKey=$cap")
+    ok
+  }
+
+  /** Runtime backstop for [[boundaryTrafficOk]]'s blind spot: called
+    * by each key-shipping exec immediately before its pass-1 runJob
+    * with the child RDD's ACTUAL partition count, which may come from
+    * a reused pre-existing finer exchange the plan-time estimate never
+    * saw. The plan is fixed at this point, so there is nothing sound
+    * to fall back to mid-execution — instead the breach is logged
+    * LOUDLY (warning level) with the numbers and the conf name, so a
+    * driver-memory incident is attributable and the fix (raise the
+    * cap consciously, or coarsen the pre-partitioning) is named
+    * before the OOM rather than after. The estimate stays
+    * conservative (256 B floor for variable-width keys); actual
+    * traffic is usually far smaller. */
+  def runtimeBoundaryWarn(op: String, nParts: Int,
+      order: Seq[SortOrder], part: Seq[Expression] = Nil): Unit = {
+    val cap = capBytes
+    val keyBytes = keyBytesOf(order, part)
+    val projected = nParts.toLong * 2L * keyBytes
+    if (projected > cap) logWarning(s"$op pass 1 will ship an estimated " +
+      s"$projected B of boundary keys to the driver ($nParts actual " +
+      s"partitions × 2 keys × $keyBytes B) — above $MaxBoundaryBytesKey=" +
+      s"$cap, which the plan-time guard could not see because the " +
+      s"operator reused a pre-existing finer exchange. If the driver " +
+      s"OOMs here, coarsen the upstream repartitioning or raise the cap " +
+      s"deliberately.")
+  }
+
+  /** [[boundaryTrafficOk]]'s sibling for ring-shipping operators
+    * (SlidingAgg): pass 1 ships `extent` projected VALUE tuples (+
+    * evaluated part keys) per partition instead of 2 key rows, so the
+    * projected traffic is partitions × extent × Σ column width,
+    * against the same cap and with the same conservative
+    * variable-width floor. */
+  def valueTrafficOk(op: String, values: Seq[Expression],
+      part: Seq[Expression], extent: Int): Boolean = {
+    val cap = capBytes
+    val parts = SQLConf.get.numShufflePartitions.toLong
+    val width = (values.map(_.dataType) ++ part.map(_.dataType)).map(widthOf).sum
+    val projected = parts * extent.toLong * width
+    val ok = projected <= cap
+    if (!ok) logInfo(s"$op rewrite bails to the native plan: projected " +
+      s"pass-1 boundary-value driver traffic ($parts partitions × $extent " +
+      s"values × $width bytes = $projected B) exceeds $MaxBoundaryBytesKey=$cap")
+    ok
+  }
+
+  /** [[runtimeBoundaryWarn]]'s sibling for ring-shipping operators —
+    * the same loud-warning runtime backstop over the ACTUAL partition
+    * count of a reused finer exchange, with the extent in the
+    * message so the remedy (lower the frame extent cap, coarsen the
+    * pre-partitioning, or raise the byte cap deliberately) is named
+    * before a driver OOM rather than after. */
+  def runtimeValueTrafficWarn(op: String, nParts: Int, values: Seq[Expression],
+      part: Seq[Expression], extent: Int): Unit = {
+    val cap = capBytes
+    val width = (values.map(_.dataType) ++ part.map(_.dataType)).map(widthOf).sum
+    val projected = nParts.toLong * extent.toLong * width
+    if (projected > cap) logWarning(s"$op pass 1 will ship an estimated " +
+      s"$projected B of boundary values to the driver ($nParts actual " +
+      s"partitions × $extent values × $width B) — above " +
+      s"$MaxBoundaryBytesKey=$cap, which the plan-time guard could not see " +
+      s"because the operator reused a pre-existing finer exchange. If the " +
+      s"driver OOMs here, coarsen the upstream repartitioning, lower the " +
+      s"frame-extent conf, or raise the cap deliberately.")
+  }
 }

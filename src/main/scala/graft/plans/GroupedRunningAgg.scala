@@ -97,7 +97,7 @@ object GroupedRunningAggRewrite extends Rule[LogicalPlan] {
   /** One supported running aggregate over the node's own
     * (part, order) spec: output attribute, the declarative function,
     * whether the frame is the RANGE (peers share the value) variant.
-    * Shared with [[GlobalWindowSplit]] and [[GroupedWindowSplit]].
+    * Shared with [[WindowSplit]].
     *
     * first/last: with the DEFAULT RANGE frame they stay First/Last
     * aggregates and ride the generic declarative path — correct
@@ -193,7 +193,7 @@ object CombineRunningNodes extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case GroupedRunningAggNode(p1, o1, fns1,
         inner @ GroupedRunningAggNode(p2, o2, fns2, child))
-        if sameExprs(p1, p2) && sameOrder(o1, o2) && independent(fns1, inner) =>
+        if sameExprs(p1, p2) && sameExprs(o1, o2) && independent(fns1, inner) =>
       GroupedRunningAggNode(p1, o1, fns2 ++ fns1, child)
     // towers with a TRANSPARENT Project in between (a withColumn
     // chain pre-computing the next aggregate's input — s21's fill
@@ -203,7 +203,7 @@ object CombineRunningNodes extends Rule[LogicalPlan] {
     // fixed point converges towers of any height.
     case keep @ GroupedRunningAggNode(p1, o1, fns1,
         Project(projList, inner @ GroupedRunningAggNode(p2, o2, fns2, child)))
-        if sameExprs(p1, p2) && sameOrder(o1, o2) =>
+        if sameExprs(p1, p2) && sameExprs(o1, o2) =>
       transparentAliases(projList) match {
         case Some(aliases) =>
           val fns1i = inline(fns1, aliases)
@@ -216,11 +216,10 @@ object CombineRunningNodes extends Rule[LogicalPlan] {
   }
 }
 
-/** Shared helpers for the r21 tower-merge rules. */
+/** Shared helpers of the window rewrites: the one spec-equality test
+  * (a SortOrder is an Expression, so it compares order lists too) and
+  * the r21 tower-merge rules' projection check. */
 private[plans] object CombineSupport {
-  def sameOrder(a: Seq[SortOrder], b: Seq[SortOrder]): Boolean =
-    a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
-
   def sameExprs(a: Seq[Expression], b: Seq[Expression]): Boolean =
     a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
 
@@ -387,7 +386,7 @@ case class GroupedRunningAggExec(
       if (rdd.getNumPartitions <= 1) Array.fill(rdd.getNumPartitions)(None)
       else rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => {
         val gate = new GroupGate(partExprs, childOut)
-        val (oProj, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+        val (oProj, oCmp) = GroupedRankExec.keyTools(ord, childOut)
         val kit = new RunningKit(aggFns, childOut)
         var first: RunSeg = null
         var nGroups = 0L
@@ -442,7 +441,7 @@ case class GroupedRunningAggExec(
     val lastOv = new Array[UnsafeRow](nParts) // evaluated values; null → no override
     locally {
       val gate = new GroupGate(partExprs, childOut)
-      val (_, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+      val (_, oCmp) = GroupedRankExec.keyTools(ord, childOut)
       def mergeBufs(bufs: UnsafeRow*): UnsafeRow = {
         val kit = new RunningKit(aggFns, childOut)
         kit.init()
@@ -559,7 +558,7 @@ case class GroupedRunningAggExec(
           toUnsafe(joined(row, kit.evaluate()))
         }
       } else {
-        val (oProj, oCmp) = GlobalRankExec.keyTools(ord, childOut)
+        val (oProj, oCmp) = GroupedRankExec.keyTools(ord, childOut)
         val rangeOv = lastOv(pid)
         val mixed = new GenericInternalRow(rangeMask.length)
         new Iterator[InternalRow] {

@@ -129,6 +129,7 @@ import org.apache.spark.sql.types._
   * README's cost-lever table.
   */
 object RangeSlidingAggRewrite extends Rule[LogicalPlan] {
+  import CombineSupport.sameExprs
 
   val ConfKey = "spark.graft.rangeSlidingAgg.enabled"
   val MinBytesKey = "spark.graft.rangeSlidingAgg.minBytes"
@@ -159,9 +160,6 @@ object RangeSlidingAggRewrite extends Rule[LogicalPlan] {
   // default cannot drift between the single-class rewrite and a split
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
-
-  private def sameExprs(a: Seq[Expression], b: Seq[Expression]): Boolean =
-    a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
 
   /** Supported RANGE order column types (value read as Long —
     * integrals as-is, DATE as days, TIMESTAMP/_NTZ as epoch µs). */

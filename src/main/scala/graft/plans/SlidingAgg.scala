@@ -82,6 +82,7 @@ import org.apache.spark.sql.types.IntegerType
   * the kill switch.
   */
 object SlidingAggRewrite extends Rule[LogicalPlan] {
+  import CombineSupport.sameExprs
 
   val ConfKey = "spark.graft.slidingAgg.enabled"
   val MaxExtentKey = "spark.graft.slidingAgg.maxExtent"
@@ -95,9 +96,6 @@ object SlidingAggRewrite extends Rule[LogicalPlan] {
 
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
-
-  private def sameExprs(a: Seq[Expression], b: Seq[Expression]): Boolean =
-    a.length == b.length && a.zip(b).forall { case (x, y) => x.semanticEquals(y) }
 
   /** A ROWS bound as a signed row offset: CurrentRow = 0, a foldable
     * integer literal as-is (negative = PRECEDING). Unbounded ends are

@@ -1142,11 +1142,12 @@ object Relational {
 
   // ---------------------------------------------------------------------
   // q42: GLOBAL customer-spend leaderboard — the corpus-global rank
-  // surface graded end-to-end ON the GlobalRank operator
-  // (plans/GlobalRank.scala): both windows below have an EMPTY
-  // PARTITION BY, the classic Spark single-partition funnel, and are
+  // surface graded end-to-end ON the rank operator at zero keys
+  // (plans/GroupedRank.scala, GlobalRank in the plan): both windows
+  // below have an EMPTY PARTITION BY, the classic Spark
+  // single-partition funnel, and are
   // planned by the rewrite as ONE range exchange + the two-pass
-  // offset stitch (the spec asserts GlobalRankExec and the absence
+  // offset stitch (the spec asserts GlobalRank and the absence
   // of SinglePartition in this query's executed plan). Two orders
   // exercise both tie regimes: rank/dense_rank/percent_rank over
   // $1000 spend BANDS (real ties — tie-deterministic functions
@@ -1275,7 +1276,7 @@ object Relational {
       .orderBy($"o_orderdate")
   }
 
-  /** q46: MIXED GLOBAL WINDOW — the GlobalWindowSplit shape in the
+  /** q46: MIXED GLOBAL WINDOW — the zero-key WindowSplit shape in the
     * DuckDB gate. ONE select mixes all four family classes over the
     * same global order: rank + cume_dist (rank class), the running
     * total (running-agg class), the previous order's cents (offset
@@ -1284,7 +1285,7 @@ object Relational {
     * family rewrite correctly bailed on the mixed node and the corpus
     * funneled through a single task — the most natural phrasing of a
     * cumulative dashboard was the family's one remaining scale hole.
-    * GlobalWindowSplit (inverse-CollapseWindow) now splits the node by
+    * WindowSplit (inverse-CollapseWindow) now splits the node by
     * class into the stacked operators sharing ONE range exchange, with
     * the total rewritten to GlobalAgg's broadcast join
     * (MixedWindowSplitSpec pins the executed plan). The
@@ -1314,7 +1315,7 @@ object Relational {
           Window.unboundedPreceding, Window.unboundedFollowing)).as("total_cents"),
         // bounded sliding member (r18): makes the analyzed node carry
         // ALL FIVE operator classes — rank, running, offset, full-agg
-        // and sliding — through the GlobalWindowSplit and the DuckDB
+        // and sliding — through the WindowSplit and the DuckDB
         // gate in one graded query
         sum($"cents").over(w.rowsBetween(-6, 0)).as("trail_cents"))
       .orderBy($"o_orderkey")
@@ -1349,7 +1350,7 @@ object Relational {
         sum($"cents").over(wr).as("run_cents"),
         // bounded sliding member (r18): same (priority, date, orderkey)
         // spec as run_cents, so the analyzed node mixes the running and
-        // sliding classes — GroupedWindowSplit stacks GroupedRunningAgg
+        // sliding classes — WindowSplit stacks GroupedRunningAgg
         // + SlidingAgg on the node's shared exchange, graded end-to-end
         sum($"cents").over(Window.partitionBy($"o_orderpriority")
           .orderBy($"o_orderdate", $"o_orderkey")
@@ -1363,7 +1364,7 @@ object Relational {
     * SELECT), the natural per-key report phrasing that analyzed into
     * ONE Window node and — pre-r18 — planned fully native at the
     * group-count parallelism ceiling (5 priorities, the largest
-    * group's bytes through one task). [[graft.plans.GroupedWindowSplit]]
+    * group's bytes through one task). [[graft.plans.WindowSplit]]
     * splits it onto GroupedRank + GroupedRunningAgg stacked over ONE
     * shared (priority, date) range exchange. Every column is
     * tie-STABLE (rank/dense_rank/cume_dist and the default RANGE
@@ -1449,7 +1450,7 @@ object Relational {
   // corpus total / of its priority class" report phrases the
   // full-frame members on their OWN specs — `sum(x) OVER ()` and
   // `sum(x) OVER (PARTITION BY p)` with no ORDER BY — so the analyzer
-  // emits THREE separate Window nodes. Pre-r19, once GlobalRankRewrite
+  // emits THREE separate Window nodes. Pre-r19, once the rank rewrite
   // had claimed the ordered node, both agg rewrites bailed above it
   // (ExprIdFreshener cannot deep-copy the custom operator nodes) and
   // the totals survived as NATIVE windows — the corpus through one

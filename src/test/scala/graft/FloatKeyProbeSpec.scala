@@ -63,7 +63,7 @@ class FloatKeyProbeSpec extends AnyFunSuite {
           TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, v) {
             TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, v) {
               TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, v) {
-                TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, v)(body)
+                TestSpark.withConf(graft.plans.WindowSplit.ConfKey, v)(body)
               }
             }
           }

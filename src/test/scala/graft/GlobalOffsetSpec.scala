@@ -159,7 +159,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
       mixed.collect()
       val mplan = mixed.queryExecution.executedPlan.toString
       assert(mplan.contains("GlobalOffset") && mplan.contains("GlobalRank"), mplan.take(2000))
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
         val whole = base.select(lag($"k", 1).over(w).as("p"), rank().over(w).as("r"))
         whole.collect()
         val wplan = whole.queryExecution.executedPlan.toString

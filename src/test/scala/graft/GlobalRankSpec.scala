@@ -17,7 +17,7 @@ class GlobalRankSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString)(body)
+    TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString)(body)
 
   private def allSix(df: DataFrame): DataFrame = {
     val w = Window.orderBy(col("k").desc, col("id"))
@@ -200,7 +200,7 @@ class GlobalRankSpec extends AnyFunSuite {
     import s.implicits._
     val base = (1 to 400).map(i => (i.toLong, (i % 7).toDouble)).toDF("id", "k")
       .repartition(5)
-    val longKey = graft.plans.GlobalRankRewrite.LongRankKey
+    val longKey = graft.plans.GroupedRankRewrite.LongRankKey
     def widened(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getDouble(5), r.getDouble(6), r.getInt(7), r.getInt(8))
@@ -249,6 +249,21 @@ class GlobalRankSpec extends AnyFunSuite {
         // id=7 is the (k=0.0, min id) row -> rank 1 -> r2 = 2
         assert(rows.find(_.getLong(0) == 7L).get.getLong(1) == 2L)
       }
+      // the allowLong boundary of the one rank matcher: in ONE select
+      // the zero-key rank widens and runs on GlobalRank, the keyed rank
+      // keeps IntegerType and runs on GroupedRank, and both equal the
+      // rank-off plan
+      def both() = base.select($"id",
+        rank().over(Window.orderBy($"k", $"id")).as("gr"),
+        rank().over(Window.partitionBy($"id" % 3).orderBy($"k", $"id")).as("pr"))
+      val bothOn = withRule(on = true)(both())
+      assert(bothOn.schema("gr").dataType.typeName == "long", bothOn.schema.treeString)
+      assert(bothOn.schema("pr").dataType.typeName == "integer", bothOn.schema.treeString)
+      val bothPlan = bothOn.queryExecution.executedPlan.toString
+      assert(bothPlan.contains("GlobalRank") && bothPlan.contains("GroupedRank"),
+        bothPlan.take(2500))
+      assert(bothOn.orderBy($"id").collect().toSeq ==
+        withRule(on = false)(both().orderBy($"id").collect().toSeq))
     }
     // conf off (default): types unchanged — the swap never leaks
     val off = withRule(on = true)(allSix(base))

@@ -45,7 +45,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
   /** The split plus the grouped family rules off → guaranteed-native
     * reference run. */
   private def allOff[A](body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
       TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
         TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
           TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false")(body)
@@ -109,7 +109,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     import s.implicits._
     val nd = data.withColumn("cn", when($"id" % 7 =!= 0, $"cents"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"g").orderBy($"o".desc)
         val df = nd.select($"id",
           rank().over(w).as("r"), cume_dist().over(w).as("cd"),
@@ -129,7 +129,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // stacks. The (o, id) order is total per group, so the lag values
     // are deterministic and bit-equality well-defined.
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = data.select($"id", rank().over(w).as("r"),
           sum($"cents").over(w).as("run"),
@@ -182,7 +182,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     def assertNative(p: String, what: String): Unit =
       assert(!p.contains("GroupedRank") && !p.contains("GroupedRunningAgg"),
         s"$what must stay native:\n" + p.take(2000))
-    TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
       assertNative(plan(), "kill switch off")
     }
     TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
@@ -223,7 +223,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         (i.toLong, i / 2500, (i % 2500) / 100, ((i * 13) % 500).toLong)
       }.toDF("id", "g", "o", "cents")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
           val w = Window.partitionBy($"g").orderBy($"o")
           val df = df0
             .orderBy($"g", $"o", $"id") // the finer exchange the stack must reuse
@@ -253,7 +253,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
       // stack THREE operators on the ONE pre-existing exchange, with
       // group segments still split at every partition boundary
       def q3(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
           val wt = Window.partitionBy($"g").orderBy($"o", $"id")
           val df = df0
             .orderBy($"g", $"o", $"id")
@@ -288,7 +288,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // stacked-split configuration)
     val nd = data.withColumn("gn", when($"g" =!= 0, $"g"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"gn").orderBy($"o")
         val df = nd.select($"id",
           rank().over(w).as("r"), cume_dist().over(w).as("cd"),
@@ -307,7 +307,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // still exercising the First/NthValue claim through classify
     val nd = data.withColumn("cn", when($"id" % 5 =!= 0, $"cents"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = nd.select($"id",
           rank().over(w).as("r"),
@@ -335,8 +335,8 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
              sum(cents) OVER (ORDER BY o)                AS arun
       FROM gmix_cross_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
-        TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
           val df = s.sql(sqlText)
           if (on) {
             val plan = df.queryExecution.executedPlan.toString
@@ -353,8 +353,8 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         }
       }
     def globalsOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
           TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false")(body)
         }
       }
@@ -383,7 +383,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
                                          AND UNBOUNDED FOLLOWING) AS n
       FROM gmix3_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -409,7 +409,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         val df = data.select($"id",
@@ -432,7 +432,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // Window that GroupedAggRewrite consumes (aggregate + join-back)
     val wLag = Window.partitionBy($"g").orderBy($"o", $"id")
     def q2(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val df = data.select($"id",
           lag($"cents", 1).over(wLag).as("prev"),
           sum($"cents").over(wLag.rowsBetween(
@@ -459,7 +459,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     }.toDF("id", "g", "o", "cents")
     val w = Window.partitionBy($"g").orderBy($"o")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val df = six.select($"id", $"g",
           rank().over(w).as("r"),
           sum($"cents").over(w).as("run"),
@@ -498,7 +498,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = data.select($"id",
           rank().over(w).as("r"),

@@ -32,9 +32,9 @@ class MixedSpecAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private val AllConfKeys = Seq(
-    graft.plans.GlobalWindowSplit.ConfKey,
-    graft.plans.GroupedWindowSplit.ConfKey,
-    graft.plans.GlobalRankRewrite.ConfKey,
+    graft.plans.WindowSplit.ConfKey,
+    graft.plans.WindowSplit.ConfKey,
+    graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRunningAggRewrite.ConfKey,
     graft.plans.GroupedOffsetRewrite.ConfKey,
@@ -75,9 +75,9 @@ class MixedSpecAggSpec extends AnyFunSuite {
       .map(_.rules.map(_.ruleName).filter(_.startsWith("graft.plans")))
       .filter(_.nonEmpty)
     assert(batches.nonEmpty, "no optimizer batch carries the graft rules")
-    for (rules <- batches if rules.contains("graft.plans.GlobalWindowSplit")) {
-      val laterRules = Seq("graft.plans.GlobalWindowSplit",
-        "graft.plans.GroupedWindowSplit", "graft.plans.GlobalRankRewrite",
+    for (rules <- batches if rules.contains("graft.plans.WindowSplit")) {
+      val laterRules = Seq("graft.plans.WindowSplit",
+        "graft.plans.WindowSplit", "graft.plans.GroupedRankRewrite",
         "graft.plans.GroupedRankRewrite", "graft.plans.GroupedRunningAggRewrite",
         "graft.plans.GroupedOffsetRewrite", "graft.plans.GroupedRunningAggRewrite",
         "graft.plans.SlidingAggRewrite", "graft.plans.RangeSlidingAggRewrite")
@@ -263,7 +263,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
              sum(cents) OVER (PARTITION BY g ORDER BY id) AS run,
              sum(cents) OVER (PARTITION BY g) AS gtot
       FROM msa_r""").queryExecution.analyzed
-    val split = graft.plans.GroupedWindowSplit(analyzed)
+    val split = graft.plans.WindowSplit(analyzed)
     assert(split.exists(_.isInstanceOf[graft.plans.GroupedRankNode]) &&
       split.exists(_.isInstanceOf[graft.plans.GroupedRunningAggNode]),
       "test setup: the split must have produced the custom stack:\n" + split)
@@ -288,15 +288,15 @@ class MixedSpecAggSpec extends AnyFunSuite {
              sum(cents) OVER (ORDER BY id) AS run,
              sum(cents) OVER () AS tot
       FROM msa_r""").queryExecution.analyzed
-    val gsplit = graft.plans.GlobalWindowSplit(ganalyzed)
-    assert(gsplit.exists(_.isInstanceOf[graft.plans.GlobalRankNode]),
+    val gsplit = graft.plans.WindowSplit(ganalyzed)
+    assert(gsplit.exists(_.isInstanceOf[graft.plans.GroupedRankNode]),
       "test setup: the global split must have fired:\n" + gsplit)
     val gafter = graft.plans.GlobalAggRewrite(gsplit)
     assert(!gafter.exists(_.isInstanceOf[LWindow]),
       "GlobalAggRewrite must consume the full-agg node above the custom stack:\n" + gafter)
     val gjoin = gafter.collectFirst { case j: LJoin => j }.get
     assert(!gjoin.right.exists(n =>
-      n.isInstanceOf[graft.plans.GlobalRankNode] ||
+      n.isInstanceOf[graft.plans.GroupedRankNode] ||
         n.isInstanceOf[graft.plans.GroupedRunningAggNode]),
       "the global aggregate leg must not replay the operator stack:\n" + gjoin.right)
     // the RANGE-value cousin (r19): RangeSlidingAggRewrite first, then

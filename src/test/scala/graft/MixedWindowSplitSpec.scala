@@ -35,8 +35,8 @@ class MixedWindowSplitSpec extends AnyFunSuite {
 
   /** All five levers at once: the split plus the four family rules. */
   private def allOff[A](body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-      TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
         TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
           TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false") {
             TestSpark.withConf(graft.plans.GlobalAggRewrite.ConfKey, "false")(body)
@@ -110,7 +110,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
                               AND 2 FOLLOWING) AS band
       FROM mix5_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -137,7 +137,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, splitOn.toString) {
         // rank/dense_rank/cume_dist and the RANGE-frame running sum
         // are tie-STABLE, so bit-equality is well-defined under the
         // 100-row d tie groups even though the order is not total
@@ -181,7 +181,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
         sum($"cents").over(w).as("run"))
       df.queryExecution.executedPlan.toString
     }
-    TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
@@ -284,7 +284,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     // the full distributed ranking and the filter applies above it
     val w = Window.orderBy($"id")
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, splitOn.toString) {
         val df = data.select($"id", rank().over(w).as("r"),
             sum($"cents").over(w).as("run"))
           .filter($"r" <= 100)

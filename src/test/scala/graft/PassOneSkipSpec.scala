@@ -118,7 +118,7 @@ class PassOneSkipSpec extends AnyFunSuite {
 
   test("GlobalRank rank-only: single partition skips the stats job") {
     val w = Window.orderBy(col("o"), col("id"))
-    check(plans.GlobalRankRewrite.ConfKey, "GlobalRank", "grank") { () =>
+    check(plans.GroupedRankRewrite.ConfKey, "GlobalRank", "grank") { () =>
       data.select(col("id"), rank().over(w).as("r"),
         dense_rank().over(w).as("d"), row_number().over(w).as("rn"))
     }
@@ -129,11 +129,11 @@ class PassOneSkipSpec extends AnyFunSuite {
     val w = Window.orderBy(col("o"), col("id"))
     val mk = () => data.select(col("id"), rank().over(w).as("r"),
       percent_rank().over(w).as("p"))
-    val plan = withConf(plans.GlobalRankRewrite.ConfKey, "true")(
+    val plan = withConf(plans.GroupedRankRewrite.ConfKey, "true")(
       onePartition(mk().queryExecution.executedPlan.toString))
     assert(plan.contains("GlobalRank"), plan.take(2000))
     val (onRows, offRows, onJobs) =
-      flipCount(plans.GlobalRankRewrite.ConfKey, "grankP")(mk)
+      flipCount(plans.GroupedRankRewrite.ConfKey, "grankP")(mk)
     assert(onRows == offRows, "percent_rank single-partition rows must equal native")
     assert(onJobs == 2,
       s"percent_rank needs totalN before the first emit — pass 1 must " +
@@ -171,7 +171,7 @@ class PassOneSkipSpec extends AnyFunSuite {
       val rows = onePartition(mk().collect().toSeq.sortBy(_.getLong(0)))
       (rows, s.sparkContext.statusTracker.getJobIdsForGroup(gid).length)
     } finally s.sparkContext.clearJobGroup()
-    val ref = withConf(plans.GroupedWindowSplit.ConfKey, "false") {
+    val ref = withConf(plans.WindowSplit.ConfKey, "false") {
       withConf(plans.GroupedRankRewrite.ConfKey, "false") {
         onePartition(mk().collect().toSeq.sortBy(_.getLong(0)))
       }

@@ -163,9 +163,9 @@ class RangeSlidingAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def allOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "false") {
+      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+          TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
             TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
               TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
                 TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {

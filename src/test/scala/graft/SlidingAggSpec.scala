@@ -293,7 +293,7 @@ class SlidingAggSpec extends AnyFunSuite {
       sum($"cents").over(w).as("run")))
     assert(mixedPlan.contains("SlidingAgg") && mixedPlan.contains("GroupedRunningAgg"),
       "mixed sliding+running now belongs to the split:\n" + mixedPlan.take(2000))
-    TestSpark.withConf(graft.plans.GroupedWindowSplit.ConfKey, "false") {
+    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
       assert(planOf(data.select($"id",
         sum($"cents").over(w.rowsBetween(-3, 0)).as("m"),
         sum($"cents").over(w).as("run"))).contains("Window ["),

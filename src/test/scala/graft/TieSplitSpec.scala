@@ -86,7 +86,7 @@ class TieSplitSpec extends AnyFunSuite {
     import s.implicits._
     noCoalesce {
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
           val w = Window.orderBy($"d")
           val df = tieData
             .orderBy($"d", $"k") // finer range exchange the exec must reuse
@@ -108,7 +108,7 @@ class TieSplitSpec extends AnyFunSuite {
       // rows of a larger d), and ntile is exactly Spark's fill
       // formula applied to that row_number. With rank from the same
       // node (bit-checked above) the six functions are all covered.
-      TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, "true") {
+      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "true") {
         val w = Window.orderBy($"d")
         val df = tieData.orderBy($"d", $"k")
           .select($"id", $"k", ($"id" / 100).cast("int").as("d0"),
@@ -144,7 +144,7 @@ class TieSplitSpec extends AnyFunSuite {
       // driver chain must cross multi-partition runs, not just edges.
       val df0 = (0 until 9000).map(i => (i.toLong, i / 3000, i % 750)).toDF("id", "d", "k")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
           val w = Window.orderBy($"d")
           val df = df0.repartitionByRange(16, $"d", $"k")
             .select($"id", $"k", rank().over(w).as("r"), dense_rank().over(w).as("dr"),
@@ -274,7 +274,7 @@ class TieSplitSpec extends AnyFunSuite {
         val df0 = rows.toDF("id", "d", "k", "cents")
         def q(doRank: Boolean, on: Boolean): Seq[Row] = {
           val key =
-            if (doRank) graft.plans.GlobalRankRewrite.ConfKey
+            if (doRank) graft.plans.GroupedRankRewrite.ConfKey
             else graft.plans.GroupedRunningAggRewrite.ConfKey
           TestSpark.withConf(key, on.toString) {
             val base = df0.repartitionByRange(parts, $"d", $"k")
@@ -307,7 +307,7 @@ class TieSplitSpec extends AnyFunSuite {
         // rank/dense state emits through the LongType columns (both
         // engines evaluate the Long variants, so rows compare direct)
         if (parts == 16) {
-          TestSpark.withConf(graft.plans.GlobalRankRewrite.LongRankKey, "true") {
+          TestSpark.withConf(graft.plans.GroupedRankRewrite.LongRankKey, "true") {
             assertSame(q(doRank = true, on = true), q(doRank = true, on = false),
               s"longRank chained sweep parts=$parts tieW=$tieW")
           }
@@ -376,8 +376,8 @@ class TieSplitSpec extends AnyFunSuite {
       // and their driver tie-chains must agree with native on the
       // tie-stable columns
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GlobalWindowSplit.ConfKey, on.toString) {
-          TestSpark.withConf(graft.plans.GlobalRankRewrite.ConfKey, on.toString) {
+        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+          TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
             TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
               val w = Window.orderBy($"d")
               val df = tieData
