@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * (default 50M, rank).
   * `rank` probes the rank operator at zero keys (GlobalRank in the
   * plan) on a corpus-global ranking;
-  * `agg` probes GlobalAggRewrite on a `sum OVER ()` share-of-total;
+  * `agg` probes the full-frame agg rewrite ([[graft.plans.GroupedAggRewrite]])
+  * at zero keys on a `sum OVER ()` share-of-total;
   * `grouped` probes the same operator with keys (GroupedRank) on a
   * FEW-HUGE-GROUPS ranking (default 4 groups — the q23-per-nation
   * shape where the native hash window funnels each group through one
@@ -64,7 +65,7 @@ import org.apache.spark.sql.functions._
   * `groupedmixedchained` composes the split with BOTH driver chains:
   * the same mixed select over a pre-existing FINER (g, d, fine)
   * exchange whose boundaries split group segments and order-tie runs.
-  * `groupedagg` probes the r18 GroupedAggRewrite on the q49 shape —
+  * `groupedagg` probes the same rewrite with keys on the q49 shape —
   * share-of-group full-frame aggregates over few huge groups: off =
   * the native hash window buffering each WHOLE group in one task, on
   * = distributed aggregate + broadcast join-back (the facts never
@@ -75,7 +76,7 @@ import org.apache.spark.sql.functions._
   * shape — the full-frame total on its OWN order-free spec above a
   * rank+running ordered node (`rank() OVER (ORDER BY …), sum(x) OVER
   * (ORDER BY …), sum(x) OVER ()` in one select): off = the PRE-r19
-  * behavior (only GlobalAggRewrite disabled — the family operators
+  * behavior (only the full-agg rewrite disabled — the family operators
   * still fire, and the total survives as a NATIVE AllTuples window ON
   * TOP of the operator stack); on = the agg rewrite peels the stack
   * out of its aggregate leg and broadcasts the total.
@@ -126,14 +127,11 @@ object RankProbe {
       pmod($"id" * 2654435761L, lit(1000000007L)).as("k"))
     val w = Window.orderBy($"k", $"id")
     val confKey = mode match {
-      case "agg" => graft.plans.GlobalAggRewrite.ConfKey
+      case "agg" | "groupedagg" | "groupedaggmany" | "mixedspec" | "rangemixedspec" |
+          "groupedmixedspec" => graft.plans.GroupedAggRewrite.ConfKey
       case "groupedrunning" | "groupedrunningchained" =>
         graft.plans.GroupedRunningAggRewrite.ConfKey
       case "groupedmixed" | "groupedmixedchained" => graft.plans.WindowSplit.ConfKey
-      case "groupedagg" | "groupedaggmany" =>
-        graft.plans.GroupedAggRewrite.ConfKey
-      case "mixedspec" | "rangemixedspec" => graft.plans.GlobalAggRewrite.ConfKey
-      case "groupedmixedspec" => graft.plans.GroupedAggRewrite.ConfKey
       case "rangesliding" | "rangeslidinggrouped" =>
         graft.plans.RangeSlidingAggRewrite.ConfKey
       case "rangeslidingwide" => graft.plans.RangeSlidingAggRewrite.ConsolidateKey
@@ -162,7 +160,7 @@ object RankProbe {
           graft.plans.GroupedRankRewrite.ConfKey,
           graft.plans.GroupedRunningAggRewrite.ConfKey,
           graft.plans.GroupedOffsetRewrite.ConfKey,
-          graft.plans.GlobalAggRewrite.ConfKey)
+          graft.plans.GroupedAggRewrite.ConfKey)
           .foreach(k => s.conf.set(k, on.toString))
       // the grouped split plans both grouped families out of one
       // node: the off branch silences both to get the true pre-r18

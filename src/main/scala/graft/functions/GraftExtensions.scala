@@ -39,27 +39,26 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // idiom into the heap-based two-phase operator; the strategy plans it.
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-    // Share-of-total: aggregate windows over the full corpus
-    // (sum(x) OVER ()) aggregate once and broadcast back instead of
-    // funnelling every row through one partition. Injected BEFORE the
-    // split/family rewrites (r19): when the full-frame member sits on
-    // its OWN spec in a stacked pair — `rank() OVER (ORDER BY o),
-    // sum(v) OVER ()` — the agg rewrites must see the sibling while
-    // it is still a NATIVE Window (which ExprIdFreshener can copy
+    // Full-frame aggregate windows, with or without keys — share-of-
+    // total (sum(x) OVER ()) and share-of-group (sum(x) OVER
+    // (PARTITION BY g)) — aggregate once, distributed (map-side partial
+    // combine), and join back: the one-row total as a broadcast cross
+    // join, the per-group side null-safely on the keys (AQE broadcasts
+    // it when small), instead of funnelling every row through one
+    // partition or a whole group through one window task. Injected
+    // BEFORE the split/family rewrites (r19): when the full-frame
+    // member sits on its OWN spec in a stacked pair — `rank() OVER
+    // (ORDER BY o), sum(v) OVER ()` — the rewrite must see the sibling
+    // while it is still a NATIVE Window (which ExprIdFreshener can copy
     // into the aggregate leg); after a family rewrite it is a custom
     // node the freshener refuses. AggLegPeel makes the common case
     // order-independent (the unneeded sibling is peeled from the leg
     // entirely), but `sum(rankCol) OVER ()` — aggregating the window
-    // OUTPUT — is only distributable on this ordering.
-    // MixedSpecAggSpec pins both the ordering and the plans.
-    ext.injectOptimizerRule(_ => graft.plans.GlobalAggRewrite)
-    // Share-of-GROUP: full-frame aggregate windows WITH partition keys
-    // (sum(x) OVER (PARTITION BY g)) aggregate distributedly (map-side
-    // partial combine) and join back null-safely on the keys — AQE
-    // broadcasts the per-group side when small, so the rows never
-    // shuffle; a giant group streams through its join task instead of
-    // buffering in one window task. Before the split for the same
-    // mixed-SPEC reason as GlobalAggRewrite.
+    // OUTPUT — is only distributable on this ordering. The rule walks
+    // top-down, so stacked full-frame nodes (q51's group total above
+    // its corpus total) each peel the nodes below them while those are
+    // still native. MixedSpecAggSpec pins both the ordering and the
+    // plans.
     ext.injectOptimizerRule(_ => graft.plans.GroupedAggRewrite)
     // Mixed-function windows, with or without keys (rank()+sum()+lag()
     // OVER the same [PARTITION BY/]ORDER BY in ONE select analyze into

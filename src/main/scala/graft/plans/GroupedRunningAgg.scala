@@ -63,7 +63,7 @@ import org.apache.spark.sql.types.IntegerType
   * checks included) is bit-identical to the native window's because it
   * IS the same expressions (the graded q44 pins this through the
   * DuckDB gate). Floating-point sums associate partition-wise here —
-  * the GlobalAggRewrite caveat; exact types are the contract.
+  * the [[GroupedAggRewrite]] caveat; exact types are the contract.
   *
   * Scope guards: every window expression a deterministic, non-DISTINCT,
   * unfiltered aggregate over a DECLARATIVE function with a running

@@ -73,7 +73,7 @@ import org.apache.spark.sql.types._
   * The one caveat is float ADDITION ORDER: among equal (key, value)
   * composites the merged order of local vs halo tuples is
   * unspecified, so IEEE-float aggregates may differ in ULPs from the
-  * native single-task fold — the standing GlobalAgg float caveat;
+  * native single-task fold — the standing full-frame agg float caveat;
   * exact (integral/decimal/long) aggregates are bit-identical, which
   * is what the equivalence specs and the graded query pin.
   * Order-SENSITIVE aggregates (first/last/collect_list style): frame
@@ -466,7 +466,7 @@ case class RangeSlidingAggExec(
     // rows can ship ONE merged aggregate buffer per frame group
     // instead of its rows (exact for all DeclarativeAggregates via
     // their own merge expressions; float addition order is the
-    // standing GlobalAgg ULP caveat, order-sensitive first/last keep
+    // standing full-frame agg ULP caveat, order-sensitive first/last keep
     // their documented per-function tie contract). Scope: single-key
     // source AND target partitions, all-non-null or all-null-band
     // (multi-key / band-edge partitions keep the raw path — in the

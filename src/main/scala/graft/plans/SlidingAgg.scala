@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.IntegerType
   * moving-average / trailing-total idiom (ClickHouse's
   * `movingSum`-style reports; the reference's per-inverter moving
   * aggregates are s24's shape) — as a first-class operator: the LAST
-  * window-frame class with no scale path after r18's GroupedAggRewrite.
+  * window-frame class with no scale path after the full-frame class
+  * ([[GroupedAggRewrite]]) gained keys in r18.
   *
   * Natively an empty-PARTITION-BY sliding frame plans as AllTuples —
   * the whole corpus through ONE task for a computation whose data

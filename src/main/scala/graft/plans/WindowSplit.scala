@@ -18,7 +18,7 @@ import org.apache.spark.sql.internal.SQLConf
   * analyzes to ONE Window node holding both functions (the analyzer
   * groups window expressions by spec). Each family rewrite
   * ([[GroupedRankRewrite]], [[GroupedRunningAggRewrite]],
-  * [[GroupedOffsetRewrite]], [[GlobalAggRewrite]]/[[GroupedAggRewrite]],
+  * [[GroupedOffsetRewrite]], [[GroupedAggRewrite]],
   * [[SlidingAggRewrite]], [[RangeSlidingAggRewrite]]) fires only when
   * EVERY expression in the node belongs to its class — a deliberate
   * guard (a half-rewritten node would compute the rest natively over a
@@ -41,8 +41,7 @@ import org.apache.spark.sql.internal.SQLConf
   * ORDER BY o ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED
   * FOLLOWING)`, order-insensitive by construction), which is
   * re-emitted as an order-FREE `Window(…, part, Nil, …)` at the BOTTOM
-  * of the stack: [[GlobalAggRewrite]] (zero keys) or
-  * [[GroupedAggRewrite]] (keys) consumes that shape in a later
+  * of the stack: [[GroupedAggRewrite]] consumes that shape in a later
   * iteration of the same batch, and bottom placement keeps its
   * duplicated aggregate leg to the raw child rather than replaying the
   * stacked operators. (No Window adjacent to it shares its order-free
@@ -94,12 +93,10 @@ import org.apache.spark.sql.internal.SQLConf
   * [[GroupedOffsetRewrite.trafficOk]], the very function its
   * single-class rewrite calls); and a full-agg class additionally
   * requires the child to be exprId-freshenable ([[ExprIdFreshener]]) —
-  * splitting past the agg rewrites' one structural bail would leave a
+  * splitting past the agg rewrite's one structural bail would leave a
   * NATIVE window at the stack bottom: the funnel survives AND the
   * operators above pay a new exchange, strictly worse than not
-  * splitting. The full-agg class is the one place the key count still
-  * matters: its conf and `minBytes` are GlobalAgg's at zero keys and
-  * GroupedAgg's otherwise. Kill switch:
+  * splitting. Kill switch:
   * `spark.graft.windowSplit.enabled=false`.
   */
 object WindowSplit extends Rule[LogicalPlan] {
@@ -124,7 +121,7 @@ object WindowSplit extends Rule[LogicalPlan] {
 
   /** The full-frame aggregate class, re-emitted on an order-free spec
     * with a normalized ROWS full frame — exactly the shape
-    * [[GlobalAggRewrite]]/[[GroupedAggRewrite]] consume.
+    * [[GroupedAggRewrite]] consumes.
     * Order-insensitivity is proven by the multiset whitelist inside
     * [[GroupedAggRewrite.supported]], so dropping the node's order
     * here cannot change the value. */
@@ -185,16 +182,11 @@ object WindowSplit extends Rule[LogicalPlan] {
           val rangeSlidings = claimed.collect { case CRangeSliding(f) => f }
           val classes = Seq[Seq[Any]](ranks, runnings, offsets, fullAggs,
             slidings, rangeSlidings).count(_.nonEmpty)
-          // the full-agg class is the one key-count branch: GlobalAgg
-          // (no minBytes lever) at zero keys, GroupedAgg otherwise
-          val (fullAggKey, fullAggMinBytes) =
-            if (part.isEmpty) (GlobalAggRewrite.ConfKey, 0L)
-            else (GroupedAggRewrite.ConfKey, GroupedAggRewrite.minBytes)
           val allEnabled =
             (ranks.isEmpty || confOn(GroupedRankRewrite.ConfKey)) &&
               (runnings.isEmpty || confOn(GroupedRunningAggRewrite.ConfKey)) &&
               (offsets.isEmpty || confOn(GroupedOffsetRewrite.ConfKey)) &&
-              (fullAggs.isEmpty || confOn(fullAggKey)) &&
+              (fullAggs.isEmpty || confOn(GroupedAggRewrite.ConfKey)) &&
               (slidings.isEmpty || confOn(SlidingAggRewrite.ConfKey)) &&
               (rangeSlidings.isEmpty || confOn(RangeSlidingAggRewrite.ConfKey))
           // each present family's OWN accessor, so a family's default
@@ -204,10 +196,10 @@ object WindowSplit extends Rule[LogicalPlan] {
             if (ranks.nonEmpty) GroupedRankRewrite.minBytes else 0L,
             if (runnings.nonEmpty) GroupedRunningAggRewrite.minBytes else 0L,
             if (offsets.nonEmpty) GroupedOffsetRewrite.minBytes else 0L,
-            if (fullAggs.nonEmpty) fullAggMinBytes else 0L,
+            if (fullAggs.nonEmpty) GroupedAggRewrite.minBytes else 0L,
             if (slidings.nonEmpty) SlidingAggRewrite.minBytes else 0L,
             if (rangeSlidings.nonEmpty) RangeSlidingAggRewrite.minBytes else 0L).max
-          // mirrors the agg rewrites' own bail exactly: peel the
+          // mirrors the agg rewrite's own bail exactly: peel the
           // would-be aggregate leg first (r19)
           val fullAggPlannable = fullAggs.isEmpty || ExprIdFreshener.freshen(
             AggLegPeel.peel(child,

@@ -1180,7 +1180,8 @@ object Relational {
 
   // ---------------------------------------------------------------------
   // q43: NATION REVENUE SHARE-OF-TOTAL — the `sum(x) OVER ()` surface
-  // graded end-to-end ON the GlobalAggRewrite (plans/GlobalAgg.scala):
+  // graded end-to-end ON GroupedAggRewrite's zero-key case
+  // (plans/GroupedAgg.scala):
   // the empty-OVER window would natively funnel every row through ONE
   // partition; the rewrite aggregates once (map-side partials) and
   // broadcasts the single-row total back as a cross join — the spec
@@ -1287,7 +1288,7 @@ object Relational {
     * cumulative dashboard was the family's one remaining scale hole.
     * WindowSplit (inverse-CollapseWindow) now splits the node by
     * class into the stacked operators sharing ONE range exchange, with
-    * the total rewritten to GlobalAgg's broadcast join
+    * the total rewritten to the zero-key full-agg broadcast join
     * (MixedWindowSplitSpec pins the executed plan). The
     * (o_orderdate, o_orderkey) order is total, so every column is
     * tie-deterministic and the oracle is hash-exact. Reference
@@ -1456,9 +1457,11 @@ object Relational {
   // the totals survived as NATIVE windows — the corpus through one
   // task / the group-count ceiling — on a phrasing one SELECT away
   // from q42/q43/q49. Closed by the r19 rule reorder + AggLegPeel
-  // (plans/GlobalAgg.scala); MixedSpecAggSpec pins this executed plan:
-  // GlobalRank + GlobalAgg's broadcast total + GroupedAgg's broadcast
-  // join-back, ZERO native windows. Daily pre-agg makes
+  // (plans/GroupedAgg.scala), and since the agg rule walks top-down the
+  // priority total's leg also peels the corpus-total node below it, so
+  // the ranking runs once; MixedSpecAggSpec pins this executed plan:
+  // ONE GlobalRank + ONE broadcast cross join for the total + the
+  // grouped broadcast join-back, ZERO native windows. Daily pre-agg makes
   // (priority, date) unique → the rank order is total → hash-exact
   // oracle; exact cents; shares are mirrored IEEE divides of exact
   // longs. Reference surface: the q43/q49 share idioms composed with

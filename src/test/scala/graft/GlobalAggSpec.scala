@@ -5,16 +5,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GlobalAggRewrite (plans/GlobalAgg.scala): `agg OVER ()` windows —
-  * the share-of-total pattern — rewritten to aggregate-once +
-  * broadcast cross join instead of the all-rows single-partition
-  * funnel. Equivalence is pinned on exact types (longs/decimals/
-  * integral doubles), where both plans are bit-identical. */
+/** The zero-key case of GroupedAggRewrite (plans/GroupedAgg.scala):
+  * `agg OVER ()` windows — the share-of-total pattern — rewritten to
+  * aggregate-once + broadcast cross join instead of the all-rows
+  * single-partition funnel. Equivalence is pinned on exact types
+  * (longs/decimals/integral doubles), where both plans are
+  * bit-identical. */
 class GlobalAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GlobalAggRewrite.ConfKey, on.toString)(body)
+    TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, on.toString)(body)
 
   private def shares(df: DataFrame): DataFrame = {
     val w = Window.partitionBy() // empty spec: the OVER () form
@@ -41,6 +42,19 @@ class GlobalAggSpec extends AnyFunSuite {
     // join with an empty child stays empty, like the native window
     val empty = Seq.empty[(Long, Long)].toDF("id", "cents")
     assert(withRule(on = true)(shares(empty).collect()).isEmpty)
+    // an ORDERED full frame with a multiset aggregate is the same
+    // constant: the zero-key rewrite claims it, like the keyed form
+    def ordered(df: DataFrame): DataFrame = df.select(col("id"),
+      sum(col("cents")).over(Window.orderBy(col("id"))
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("t"))
+    val (oGot, oPlan) = withRule(on = true) {
+      val df = ordered(base)
+      df.collect()
+      (df.orderBy($"id").collect().toSeq, df.queryExecution.executedPlan.toString)
+    }
+    assert(!oPlan.contains("Window") && oPlan.contains("BroadcastNestedLoopJoin"),
+      "the ordered full frame must rewrite to the broadcast total:\n" + oPlan.take(2000))
+    assert(oGot == withRule(on = false)(ordered(base).orderBy($"id").collect().toSeq))
   }
 
   test("GlobalAgg plan shape: broadcast join, NO WindowExec, full rows never funnel") {
@@ -55,6 +69,13 @@ class GlobalAggSpec extends AnyFunSuite {
       assert(!plan.contains("Window"),
         "the OVER () node must be rewritten away:\n" + plan.take(2000))
       assert(plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+      // an order-sensitive aggregate on the EMPTY spec is claimed too:
+      // the native funnel folds rows in arrival order anyway
+      val f = base.select($"id", first($"cents").over(Window.partitionBy()).as("f"))
+      f.collect()
+      val fPlan = f.queryExecution.executedPlan.toString
+      assert(!fPlan.contains("Window") && fPlan.contains("BroadcastNestedLoopJoin"),
+        "first(x) OVER () must rewrite to the broadcast total:\n" + fPlan.take(2000))
     }
     withRule(on = false) {
       val df = shares(base)
@@ -111,13 +132,13 @@ class GlobalAggSpec extends AnyFunSuite {
       .select($"cents", sum($"cents").over(Window.partitionBy()).as("total"))
     val analyzed = sdf.queryExecution.analyzed
     assert(analyzed.isStreaming)
-    val after = withRule(on = true)(graft.plans.GlobalAggRewrite(analyzed))
+    val after = withRule(on = true)(graft.plans.GroupedAggRewrite(analyzed))
     assert(after.fastEquals(analyzed),
       "streaming child must bail to the native window, not double-evaluate:\n" + after)
     // same plan, non-streaming: the rule DOES fire (guard is the only delta)
     val bdf = Seq((1L, java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))).toDF("cents", "ts")
       .select($"cents", sum($"cents").over(Window.partitionBy()).as("total"))
-    val bAfter = withRule(on = true)(graft.plans.GlobalAggRewrite(bdf.queryExecution.analyzed))
+    val bAfter = withRule(on = true)(graft.plans.GroupedAggRewrite(bdf.queryExecution.analyzed))
     assert(bAfter.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Join]))
   }
 
@@ -151,6 +172,14 @@ class GlobalAggSpec extends AnyFunSuite {
         runPlan.contains("Window"), runPlan.take(2000))
       assert(!runPlan.contains("BroadcastNestedLoopJoin"),
         "GlobalAgg must not rewrite a running frame:\n" + runPlan.take(2000))
+      // order-sensitive first() over an ORDERED full frame: its value
+      // depends on the order, so the rewrite must leave it native
+      val fo = base.select(first($"cents").over(Window.orderBy($"cents", $"id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("fo"))
+      fo.collect()
+      val foPlan = fo.queryExecution.executedPlan.toString
+      assert(foPlan.contains("Window") && !foPlan.contains("BroadcastNestedLoopJoin"),
+        "first() over an ordered full frame must stay native:\n" + foPlan.take(2000))
       // nondeterministic child: the rewrite would evaluate rand()
       // twice (rows vs total) -> must stay on the native single
       // materialization
@@ -184,7 +213,7 @@ class GlobalAggSpec extends AnyFunSuite {
       assert(analyzed.exists(_.expressions.exists(_.exists(
         _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalarSubquery]))),
         "test setup: the analyzed plan must carry the scalar subquery:\n" + analyzed)
-      val after = graft.plans.GlobalAggRewrite(analyzed)
+      val after = graft.plans.GroupedAggRewrite(analyzed)
       assert(after.fastEquals(analyzed),
         "analyzed-level: SubqueryAlias blocks the peel, the rule must bail:\n" + after)
       // end-to-end (optimized): the UNAGGREGATED subquery column peels

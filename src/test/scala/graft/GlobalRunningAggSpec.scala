@@ -175,7 +175,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("s"))
       part.collect()
       assert(!part.queryExecution.executedPlan.toString.contains("GlobalRunningAgg"))
-      // full unbounded frame stays with GlobalAggRewrite (share-of-
+      // full unbounded frame stays with GroupedAggRewrite (share-of-
       // total broadcasts one value; no per-row prefix state needed)
       val full = base.select(sum($"cents").over(Window.partitionBy()).as("t"))
       full.collect()

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `sum(v) OVER (PARTITION BY g)` with no ORDER BY — alongside
   * ordered windows in the same SELECT analyzes into a SEPARATE Window
   * node. Pre-r19, once the ordered sibling had been family-rewritten
-  * into custom operator nodes, GlobalAggRewrite/GroupedAggRewrite
+  * into custom operator nodes, the agg rewrites
   * could no longer fire above them (ExprIdFreshener cannot deep-copy
   * the custom nodes), leaving a NATIVE single-partition /
   * group-ceiling WindowExec ON TOP of the operator stack — the exact
@@ -17,29 +17,28 @@ import org.scalatest.funsuite.AnyFunSuite
   * share-of-total-plus-ranking phrasing.
   *
   * Two r19 mechanisms close it, both pinned here:
-  *   - rule ORDER: the agg rewrites are injected BEFORE the
-  *     split/family rewrites, so they fire while the sibling is still
+  *   - rule ORDER: the agg rewrite is injected BEFORE the
+  *     split/family rewrites, so it fires while the sibling is still
   *     a native Window (the only path that distributes
   *     `sum(windowOutput) OVER ()`);
   *   - [[graft.plans.AggLegPeel]]: the duplicated aggregate leg is
   *     peeled of row-preserving window/operator nodes whose produced
   *     columns the aggregate never reads — order-independent
   *     defense-in-depth (verified rule-level below, in the judge's
-  *     probe-A order), and the reason the leg never replays ranking
-  *     work.
+  *     probe-A order), and the reason the leg does not replay ranking
+  *     work. The peel stops at a Join, so where full-frame nodes stack
+  *     (q51's group total above its corpus total) it is the rule's
+  *     TOP-DOWN walk that keeps the upper leg free of the lower node's
+  *     join and the ranking under it; the q51 test pins that.
   */
 class MixedSpecAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private val AllConfKeys = Seq(
     graft.plans.WindowSplit.ConfKey,
-    graft.plans.WindowSplit.ConfKey,
-    graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRankRewrite.ConfKey,
     graft.plans.GroupedRunningAggRewrite.ConfKey,
     graft.plans.GroupedOffsetRewrite.ConfKey,
-    graft.plans.GroupedRunningAggRewrite.ConfKey,
-    graft.plans.GlobalAggRewrite.ConfKey,
     graft.plans.GroupedAggRewrite.ConfKey,
     graft.plans.SlidingAggRewrite.ConfKey,
     graft.plans.RangeSlidingAggRewrite.ConfKey)
@@ -67,7 +66,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
 
   test("rule-order canary: agg rewrites are injected BEFORE the split/family rewrites") {
     // The freshener copies native Window children but refuses the
-    // custom operator nodes, so GlobalAggRewrite/GroupedAggRewrite
+    // custom operator nodes, so GroupedAggRewrite
     // must run first in every optimizer batch that carries the graft
     // rules — re-shuffling GraftExtensions breaks this spec before it
     // breaks a plan.
@@ -77,11 +76,10 @@ class MixedSpecAggSpec extends AnyFunSuite {
     assert(batches.nonEmpty, "no optimizer batch carries the graft rules")
     for (rules <- batches if rules.contains("graft.plans.WindowSplit")) {
       val laterRules = Seq("graft.plans.WindowSplit",
-        "graft.plans.WindowSplit", "graft.plans.GroupedRankRewrite",
         "graft.plans.GroupedRankRewrite", "graft.plans.GroupedRunningAggRewrite",
-        "graft.plans.GroupedOffsetRewrite", "graft.plans.GroupedRunningAggRewrite",
+        "graft.plans.GroupedOffsetRewrite",
         "graft.plans.SlidingAggRewrite", "graft.plans.RangeSlidingAggRewrite")
-      for (agg <- Seq("graft.plans.GlobalAggRewrite", "graft.plans.GroupedAggRewrite");
+      for (agg <- Seq("graft.plans.GroupedAggRewrite");
            fam <- laterRules) {
         assert(rules.indexOf(agg) >= 0 && rules.indexOf(fam) >= 0 &&
           rules.indexOf(agg) < rules.indexOf(fam),
@@ -231,7 +229,7 @@ class MixedSpecAggSpec extends AnyFunSuite {
     val s = spark
     data.createOrReplaceTempView("msa_o")
     // `needed` includes the rank column, so nothing can be peeled —
-    // this shape distributes ONLY because GlobalAggRewrite now runs
+    // this shape distributes ONLY because GroupedAggRewrite now runs
     // before GlobalRankRewrite and duplicates the still-native Window
     // into the aggregate leg (both legs then plan on GlobalRank)
     val sqlText = """
@@ -291,16 +289,16 @@ class MixedSpecAggSpec extends AnyFunSuite {
     val gsplit = graft.plans.WindowSplit(ganalyzed)
     assert(gsplit.exists(_.isInstanceOf[graft.plans.GroupedRankNode]),
       "test setup: the global split must have fired:\n" + gsplit)
-    val gafter = graft.plans.GlobalAggRewrite(gsplit)
+    val gafter = graft.plans.GroupedAggRewrite(gsplit)
     assert(!gafter.exists(_.isInstanceOf[LWindow]),
-      "GlobalAggRewrite must consume the full-agg node above the custom stack:\n" + gafter)
+      "GroupedAggRewrite must consume the full-agg node above the custom stack:\n" + gafter)
     val gjoin = gafter.collectFirst { case j: LJoin => j }.get
     assert(!gjoin.right.exists(n =>
       n.isInstanceOf[graft.plans.GroupedRankNode] ||
         n.isInstanceOf[graft.plans.GroupedRunningAggNode]),
       "the global aggregate leg must not replay the operator stack:\n" + gjoin.right)
     // the RANGE-value cousin (r19): RangeSlidingAggRewrite first, then
-    // GlobalAggRewrite must peel the RangeSlidingAggNode out of its leg
+    // GroupedAggRewrite must peel the RangeSlidingAggNode out of its leg
     val ranalyzed = s.sql("""
       SELECT id, cents,
              sum(cents) OVER (ORDER BY d RANGE BETWEEN 70 PRECEDING
@@ -310,9 +308,9 @@ class MixedSpecAggSpec extends AnyFunSuite {
     val rsplit = graft.plans.RangeSlidingAggRewrite(ranalyzed)
     assert(rsplit.exists(_.isInstanceOf[graft.plans.RangeSlidingAggNode]),
       "test setup: the RANGE rewrite must have fired first:\n" + rsplit)
-    val rafter = graft.plans.GlobalAggRewrite(rsplit)
+    val rafter = graft.plans.GroupedAggRewrite(rsplit)
     assert(!rafter.exists(_.isInstanceOf[LWindow]),
-      "GlobalAggRewrite must consume the total above the RANGE operator:\n" + rafter)
+      "GroupedAggRewrite must consume the total above the RANGE operator:\n" + rafter)
     val rjoin = rafter.collectFirst { case j: LJoin => j }.get
     assert(!rjoin.right.exists(_.isInstanceOf[graft.plans.RangeSlidingAggNode]),
       "the aggregate leg must not replay the RANGE operator:\n" + rjoin.right)
@@ -350,6 +348,22 @@ class MixedSpecAggSpec extends AnyFunSuite {
       "the priority total must plan as GroupedAgg's join-back:\n" + plan.take(2500))
     assert(!plan.contains("Window ["),
       "no native WindowExec may survive in q51:\n" + plan.take(2500))
+    // count NODES of the final adaptive plan (its string form also
+    // prints the initial plan): the priority total's aggregate leg is
+    // peeled past the corpus-total node and the ranking below it, so
+    // the ranking runs once and one cross join carries the total
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val exec = df.queryExecution.executedPlan
+    val nRank = Aqe.collectWithSubqueries(exec) {
+      case e: graft.plans.GroupedRankExec if e.nodeName == "GlobalRank" => e
+    }.size
+    val nNlj = Aqe.collectWithSubqueries(exec) {
+      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
+    }.size
+    assert(nRank == 1,
+      s"the ranking must run once, got $nRank GlobalRank execs:\n" + plan.take(4000))
+    assert(nNlj == 1,
+      s"the corpus total must be one broadcast join, got $nNlj:\n" + plan.take(4000))
   }
 
   test("peel safety: an order-SENSITIVE separate-spec member stays native (first over its own full frame)") {

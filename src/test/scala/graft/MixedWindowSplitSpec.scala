@@ -39,7 +39,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
       TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
         TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
           TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false") {
-            TestSpark.withConf(graft.plans.GlobalAggRewrite.ConfKey, "false")(body)
+            TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false")(body)
           }
         }
       }

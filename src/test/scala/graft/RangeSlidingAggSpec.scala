@@ -164,15 +164,9 @@ class RangeSlidingAggSpec extends AnyFunSuite {
     import s.implicits._
     def allOff[A](body: => A): A =
       TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-            TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-              TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-                TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-                  withRule(on = false)(body)
-                }
-              }
-            }
+        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
+          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+            withRule(on = false)(body)
           }
         }
       }
