@@ -4,7 +4,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.StaticSQLConf
 
-/** Shared benchmark methodology for [[Bench]] and [[BenchOne]].
+/** Shared benchmark methodology for [[Bench]] and [[Probe]].
   *
   * Each query is executed through a `noop` sink so the full plan runs —
   * a bare `.count()` lets Catalyst prune projections (e.g. window
@@ -53,7 +53,7 @@ object BenchCore {
   }
 
   /** Compute the sentinel baseline NOW (idempotent). [[Bench]] and
-    * [[BenchOne]] call this right after session creation, before any
+    * [[Probe]] call this right after session creation, before any
     * query runs, so the baseline is genuinely a startup measurement
     * rather than whatever the machine looked like after the first
     * query's timed sample. */

@@ -87,7 +87,7 @@ object Tables {
   }
 
   /** `SPARK_GRAFT_CONF="k=v;k=v"` → session confs, for Verify's
-    * conf-matrix runs and the dev mains: runtime-settable keys only.
+    * conf-matrix runs and [[Probe]]: runtime-settable keys only.
     * Unset, it changes nothing. */
   def applyEnvConfs(s: SparkSession): Unit =
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>

@@ -60,18 +60,8 @@ object Dedup {
     s.conf.get("spark.graft.lsh.maxBucket", MaxBucket.toString).toInt
 
   /** Char n-gram shingle array (1-based substr, mirrors DuckDB). */
-  private def shingles(c: Column, n: Int): Column =
+  private[graft] def shingles(c: Column, n: Int): Column =
     transform(sequence(lit(1), length(c) - (n - 1)), i => c.substr(i, lit(n)))
-
-  /** r22: kill switch for the codegen'd h60-gram kernels
-    * (shingle_h60_set / anchor_grams — same-JVM flip A/Bs + equality
-    * specs; the forms are bit-identical). Default ON: the expression
-    * forms pay per-gram substring/concat builds plus md5-hex +
-    * base-conversion string parses in the scan hot loop. */
-  val H60KernelKey = "spark.graft.dedup.h60Kernel"
-  private def h60KernelOn: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get(H60KernelKey, "true").toBoolean
 
   /** Restore map-stage parallelism for the CPU-heavy shingle/signature
     * kernels — but ONLY when the scan actually under-splits.
@@ -303,13 +293,11 @@ object Dedup {
   val JaccardThreshold = 0.2
   val MinBands = 2
 
-  /** Distinct 60-bit shingle-hash set: distinct raw shingles first (md5
-    * only on distinct values), then an outer distinct to keep strict
-    * set semantics even under a hash collision. */
+  /** Distinct 60-bit shingle-hash set: each distinct shingle hashed
+    * once, with strict set semantics even under a hash collision
+    * (equal to the md5 expression form: KernelReference). */
   private def shingleHashes(c: Column): Column =
-    if (h60KernelOn) GraftFunctions.shingleH60Set(c, ShingleLen)
-    else array_distinct(transform(array_distinct(shingles(c, ShingleLen)),
-      x => conv(substring(md5(x), 1, 15), 16, 10).cast("long")))
+    GraftFunctions.shingleH60Set(c, ShingleLen)
 
   def d6NgramJaccard(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -541,7 +529,7 @@ object Dedup {
   }
 
   /** Rounds-to-convergence of d7's star contraction on the corpus at
-    * `d` (dev/probe instrumentation — ScaleProbe prints this next to
+    * `d` (dev/probe instrumentation — `Probe scale` prints this next to
     * the 8×/64× ratios so the O(log²) round-count claim is pinned
     * empirically, not asserted). */
   def d7Rounds(s: SparkSession, d: String): Int = {
@@ -737,16 +725,10 @@ object Dedup {
       .filter(size($"t") >= AnchorLen)
     val totals = toked.select($"doc_id", size($"t").as("n_tokens"),
       (size($"t") - (AnchorLen - 1)).as("n_anchors"))
-    // (doc_id, pos, 60-bit gram hash) per anchor slot — built map-side
-    // (kernel = one md5 per slot straight from token bytes; expression
-    // form keeps the per-gram concat/hex/conv pipeline — bit-identical,
-    // flip-equality spec'd)
-    val anchorStructs =
-      if (h60KernelOn) GraftFunctions.anchorGrams($"t", AnchorLen)
-      else transform(sequence(lit(1), size($"t") - (AnchorLen - 1)), i =>
-        struct(i.as("pos"),
-          conv(substring(md5(concat_ws(" ", slice($"t", i, lit(AnchorLen)))), 1, 15), 16, 10)
-            .cast("long").as("gh")))
+    // (doc_id, pos, 60-bit gram hash) per anchor slot — built map-side,
+    // one md5 per slot straight from token bytes (equal to the md5
+    // expression form: KernelReference)
+    val anchorStructs = GraftFunctions.anchorGrams($"t", AnchorLen)
     val grams = toked
       .select($"doc_id", explode(anchorStructs).as("g"))
       .select($"doc_id", $"g.pos".as("pos"), $"g.gh".as("gh"))

@@ -226,11 +226,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
       (args: Seq[Expression]) =>
         GramRepStats(args(0), intArg("gram_rep_stats", 1, args(1)))))
     ext.injectFunction((
-      FunctionIdentifier("dsir_buckets"),
-      new ExpressionInfo(classOf[DsirBuckets].getName, "dsir_buckets"),
-      (args: Seq[Expression]) =>
-        DsirBuckets(args(0), longArg("dsir_buckets", 1, args(1)))))
-    ext.injectFunction((
       FunctionIdentifier("dsir_pairs"),
       new ExpressionInfo(classOf[DsirPairs].getName, "dsir_pairs"),
       (args: Seq[Expression]) =>
@@ -306,8 +301,6 @@ object GraftFunctions {
     call_function("qdigest_merge_quantiles", st, lit(qs.mkString(",")), lit(bits), lit(k))
   def gramRepStats(t: Column, n: Int): Column =
     call_function("gram_rep_stats", t, lit(n))
-  def dsirBuckets(t: Column, buckets: Long): Column =
-    call_function("dsir_buckets", t, lit(buckets))
   def dsirPairs(t: Column, buckets: Long): Column =
     call_function("dsir_pairs", t, lit(buckets))
   def anchorGrams(t: Column, n: Int): Column =

@@ -79,7 +79,10 @@ case class MinHashSig(child: Expression, k: Int, shingleLen: Int) extends UnaryE
   * token array — the Gopher battery counts, computed in one index
   * sort over token tuples instead of gram-string builds +
   * array_distinct + an interpreted aggregate fold (bit-identical;
-  * see [[GramStatsImpl.gramStats]]). */
+  * see [[GramStatsImpl.gramStats]]). This and the next eight kernels
+  * (through [[AdcSum]]) are the queries' only scan path; the specs pin
+  * each against the expression form it replaced through the
+  * test-scope KernelReference session. */
 case class GramRepStats(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 2, "gram_rep_stats(tokens, n): n must be >= 2")
   override def dataType: DataType = StructType(Seq(
@@ -100,32 +103,13 @@ case class GramRepStats(child: Expression, n: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Sorted DSIR hashed-n-gram bucket array (word uni+bigrams, first 60
-  * md5 bits mod `buckets`) of a token array — bit-identical to the
+/** The sorted DSIR hashed-n-gram bucket array (word uni+bigrams, first
+  * 60 md5 bits mod `buckets`) of a token array, run-length encoded:
+  * ascending (h, c) multiplicity structs — bit-identical to the
   * conv(substring(md5(·),1,15),16,10) % buckets expression pipeline
-  * without its per-gram hex/substring/base-conversion allocations
-  * (see [[DsirImpl.dsirBuckets]]). */
-case class DsirBuckets(child: Expression, buckets: Long) extends UnaryExpression {
-  require(buckets > 0, "dsir_buckets(tokens, buckets): buckets must be positive")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "dsir_buckets"
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects ARRAY<STRING>, got ${t.sql}")
-  }
-  override protected def nullSafeEval(input: Any): Any =
-    DsirImpl.dsirBuckets(input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DsirImpl.dsirBuckets($c, ${buckets}L)")
-  override protected def withNewChildInternal(newChild: Expression): DsirBuckets =
-    copy(child = newChild)
-}
-
-/** [[DsirBuckets]] run-length encoded: ascending (h, c) multiplicity
-  * structs of the sorted DSIR feature array — bit-identical to the
-  * runStarts/runPairs higher-order RLE over that array, in the same
-  * kernel pass (see [[DsirImpl.dsirPairs]]). */
+  * plus the runStarts/runPairs higher-order RLE over it, in one kernel
+  * pass without per-gram hex/substring/base-conversion allocations
+  * (see [[DsirImpl.dsirPairs]]). */
 case class DsirPairs(child: Expression, buckets: Long) extends UnaryExpression {
   require(buckets > 0, "dsir_pairs(tokens, buckets): buckets must be positive")
   override def dataType: DataType = ArrayType(StructType(Seq(

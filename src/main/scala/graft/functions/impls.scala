@@ -329,22 +329,10 @@ object DsirImpl {
     v % buckets
   }
 
-  /** Sorted hashed-n-gram bucket array of a token array (word
-    * uni+bigrams, DSIR's feature map) — bit-identical to
-    * `sort_array(concat(transform(t, w -> h60(w) % B),
-    * transform(bigrams(t), g -> h60(g) % B)))` with
-    * `h60 = conv(substring(md5(·), 1, 15), 16, 10)`: the bigram
-    * digest is fed (w1, ' ', w2) incrementally, byte-identical to
-    * UTF-8 of `concat_ws(" ", w1, w2)`, and no hex string, substring
-    * or base-conversion string is ever allocated. */
-  def dsirBuckets(tokens: ArrayData, buckets: Long): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(bucketArray(tokens, buckets))
-
-  /** [[dsirBuckets]] run-length encoded: the (bucket, count)
-    * multiplicity structs of the sorted feature array, ascending —
-    * bit-identical to the runStarts/runPairs RLE pipeline over the
-    * sorted array (one kernel pass replaces its three interpreted
-    * higher-order scans). */
+  /** The sorted feature array [[bucketArray]] run-length encoded: the
+    * (bucket, count) multiplicity structs, ascending — bit-identical
+    * to the runStarts/runPairs RLE pipeline over the sorted array (one
+    * kernel pass replaces its three interpreted higher-order scans). */
   def dsirPairs(tokens: ArrayData, buckets: Long): ArrayData = {
     val f = bucketArray(tokens, buckets)
     if (f.length == 0) return new GenericArrayData(Array.empty[Any])
@@ -369,6 +357,14 @@ object DsirImpl {
     new GenericArrayData(out)
   }
 
+  /** Sorted hashed-n-gram bucket array of a token array (word
+    * uni+bigrams, DSIR's feature map) — bit-identical to
+    * `sort_array(concat(transform(t, w -> h60(w) % B),
+    * transform(bigrams(t), g -> h60(g) % B)))` with
+    * `h60 = conv(substring(md5(·), 1, 15), 16, 10)`: the bigram
+    * digest is fed (w1, ' ', w2) incrementally, byte-identical to
+    * UTF-8 of `concat_ws(" ", w1, w2)`, and no hex string, substring
+    * or base-conversion string is ever allocated. */
   private def bucketArray(tokens: ArrayData, buckets: Long): Array[Long] = {
     val n = tokens.numElements()
     val total = if (n > 1) 2 * n - 1 else n
@@ -570,7 +566,8 @@ object PqImpl {
     * fold without its per-row zipped allocation and interpreted
     * lambda dispatch. Null (like element_at + sum) if a code is
     * missing from its table — unreachable when codes come from the
-    * same codebook, pinned by the flip-equality spec. */
+    * same codebook; the PQ queries' equality to that fold is pinned
+    * against KernelReference's expression form. */
   def adcSum(tables: ArrayData, codes: ArrayData): java.lang.Double = {
     val n = math.min(tables.numElements(), codes.numElements())
     var acc = 0.0

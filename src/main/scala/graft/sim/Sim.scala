@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.Tables
-import graft.functions.GraftFunctions.cosineSim
+import graft.functions.GraftFunctions.{adcSum, cosineSim, fdot, l2SqSlice, qdot}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -64,20 +64,14 @@ object Sim {
   // vector magnitude IS signal (user×item factor models, learned
   // retrieval heads). Same BNL shape as v2 (queries broadcast, score
   // map-side, per-query top-k plans as the TopKPartial/TopKFinal
-  // heap), with the dot computed by codegen'd higher-order built-ins:
-  // zip_with multiply + index-ordered left-fold aggregate — one IEEE
+  // heap), with the dot computed by the codegen'd fdot kernel: an
+  // index-ordered left fold of double products — one IEEE
   // multiply-add chain the oracle mirrors term-for-term. At scale MIPS
   // reduces to cosine via the norm trick (augment corpus vectors with
   // sqrt(M²−‖x‖²), queries with 0 — Bachrach 2014), so v3's IVF and
   // v6's PQ compose with THIS metric unchanged; the exact scan here is
   // the correctness baseline for that path.
   // ---------------------------------------------------------------------
-  /** Index-ordered exact double dot product of two float vectors. */
-  private def dotCol(a: Column, b: Column): Column =
-    if (pqKernelOn) graft.functions.GraftFunctions.fdot(a, b)
-    else aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   def v10Mips(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val e = Tables.embeddings(s, d)
@@ -86,7 +80,7 @@ object Sim {
     val w = Window.partitionBy($"q_id").orderBy($"ip".desc, $"vec_id")
     e.filter($"vec_id" >= 20)
       .crossJoin(broadcast(q))
-      .select($"q_id", $"vec_id", dotCol($"embedding", $"q_emb").as("ip"))
+      .select($"q_id", $"vec_id", fdot($"embedding", $"q_emb").as("ip"))
       .withColumn("rnk", row_number().over(w))
       .filter($"rnk" <= 5)
       .select($"q_id", $"rnk", $"vec_id", $"ip")
@@ -375,27 +369,9 @@ object Sim {
   val PqTopK = 5
   val PqQueries = 5
 
-  /** r22: kill switch for the codegen'd PQ distance kernels
-    * (l2_sq_slice / qdot / adc_sum — same-JVM flip A/Bs + equality
-    * specs; the two forms are bit-identical IEEE op for op). Default
-    * ON: the expression forms pay slice/zip allocations plus an
-    * interpreted (CodegenFallback) fold per (vector, codeword) pair
-    * in the encode/score hot loops. */
-  val PqKernelKey = "spark.graft.sim.pqKernel"
-  private def pqKernelOn: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get(PqKernelKey, "true").toBoolean
-
   /** Squared L2 between subspace `m` of two 64-dim float arrays —
     * element order j=1..PqDsub, each op single IEEE double. */
-  private def subL2(a: Column, b: Column, m: Column): Column =
-    if (pqKernelOn) graft.functions.GraftFunctions.l2SqSlice(a, b, m, PqDsub)
-    else aggregate(
-      zip_with(
-        slice(a, m * PqDsub + 1, lit(PqDsub)),
-        slice(b, m * PqDsub + 1, lit(PqDsub)),
-        (x, y) => (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
+  private def subL2(a: Column, b: Column, m: Column): Column = l2SqSlice(a, b, m, PqDsub)
 
   /** Codebook rows (c_id, c_emb, m) — one per subspace × codeword.
     * Default: the deterministic label-seed codeword (bit-reproducible,
@@ -514,10 +490,7 @@ object Sim {
             .otherwise(0)),
         x => x.getField("row")).as("tables"))
     // ADC: map-side table lookups summed in fixed m order
-    val adist =
-      if (pqKernelOn) graft.functions.GraftFunctions.adcSum($"tables", $"codes")
-      else aggregate(zip_with($"tables", $"codes", (t, c) => element_at(t, c)),
-        lit(0.0), (acc, v) => acc + v)
+    val adist = adcSum($"tables", $"codes")
     val w = Window.partitionBy($"q_id").orderBy($"adist".asc, $"vec_id")
     codes.crossJoin(broadcast(qtab))
       .select($"q_id", $"vec_id", adist.as("adist"))
@@ -564,9 +537,7 @@ object Sim {
       .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), quant($"embedding").as("qq"))
     val corpus = e.filter($"vec_id" >= 20)
       .select($"vec_id", $"embedding", quant($"embedding").as("cq"))
-    val idot =
-      if (pqKernelOn) graft.functions.GraftFunctions.qdot($"qq.qs", $"cq.qs")
-      else aggregate(zip_with($"qq.qs", $"cq.qs", (x, y) => x * y), lit(0L), _ + _)
+    val idot = qdot($"qq.qs", $"cq.qs")
     val w1 = Window.partitionBy($"q_id").orderBy($"approx".desc, $"vec_id")
     val shortlist = corpus.crossJoin(broadcast(q))
       .select($"q_id", $"q_emb", $"vec_id", $"embedding",
@@ -610,12 +581,7 @@ object Sim {
   /** Full-vector squared L2, element order i=1..Dims, one IEEE
     * multiply/subtract per element, left-fold sum (the 64-dim analogue
     * of [[subL2]]; mirrored by the oracle's ordered list_sum). */
-  private def l2Full(a: Column, b: Column): Column =
-    if (pqKernelOn) graft.functions.GraftFunctions.l2SqSlice(a, b, lit(0), Dims)
-    else aggregate(
-      zip_with(a, b, (x, y) =>
-        (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
+  private def l2Full(a: Column, b: Column): Column = l2SqSlice(a, b, lit(0), Dims)
 
   def v8IvfPq(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -661,10 +627,7 @@ object Sim {
             .otherwise(0)),
         x => x.getField("row")).as("tables"))
     // ADC over probed cells only; fixed m-order fold; heap top-k
-    val adist =
-      if (pqKernelOn) graft.functions.GraftFunctions.adcSum($"tables", $"codes")
-      else aggregate(zip_with($"tables", $"codes", (t, cd) => element_at(t, cd)),
-        lit(0.0), (acc, v) => acc + v)
+    val adist = adcSum($"tables", $"codes")
     val w = Window.partitionBy($"q_id").orderBy($"adist".asc, $"vec_id")
     probes.join(codes, "cluster")
       .join(broadcast(qtab), "q_id")

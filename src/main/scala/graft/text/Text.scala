@@ -141,15 +141,10 @@ object Text {
 
   def t27Novelty(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // kernel form = identical distinct gram h60s straight from digest
-    // bytes, one md5 per gram slot, no hex/substring/conv allocations
-    // (flip-equality spec'd)
-    val gramSet =
-      if (gramKernelOn) GraftFunctions.gramH60Distinct($"t", NoveltyN)
-      else array_distinct(
-        transform(sequence(lit(1), size($"t") - (NoveltyN - 1)),
-          i => conv(substring(md5(concat_ws(" ", slice($"t", i, lit(NoveltyN)))), 1, 15), 16, 10)
-            .cast("long")))
+    // distinct gram h60s straight from digest bytes, one md5 per gram
+    // slot, no hex/substring/conv allocations (equal to the md5
+    // expression form: KernelReference)
+    val gramSet = GraftFunctions.gramH60Distinct($"t", NoveltyN)
     val grams = Tables.documents(s, d)
       .select($"doc_id", toks(lower($"text")).as("t"))
       .filter(size($"t") >= NoveltyN)
@@ -456,17 +451,6 @@ object Text {
     * family of n-gram sizes with per-size thresholds). */
   val RepetitionMax = 0.05
 
-  /** r22: kill switch for the codegen'd gram-stat/DSIR-bucket kernels
-    * (same-JVM flip A/Bs + old-vs-new equality specs; the two forms
-    * are bit-identical by construction — see [[GramStatsImpl]] /
-    * [[DsirImpl]]). Default ON: the SQL-expression forms pay per-gram
-    * string builds plus interpreted (CodegenFallback) aggregate folds
-    * in the scan's hot loop. */
-  val GramKernelKey = "spark.graft.text.gramKernel"
-  private def gramKernelOn: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get(GramKernelKey, "true").toBoolean
-
   /** Word-bigram array of a token array with ≥ 2 tokens (zip of the
     * array with its tail — t6's kernel, per-doc). Shared by t9 and the
     * streaming corpus-ingest repetition gate. */
@@ -476,35 +460,18 @@ object Text {
       slice(t, lit(2), size(t) - 1),
       (a, b) => concat_ws(" ", a, b))
 
-  /** Gopher duplicate-bigram fraction (Rae 2021 §A1.1) of a token
-    * array with ≥ 2 tokens: 1 − distinct/total. */
-  private[graft] def dupBigramRatio(t: Column): Column = {
-    val bg = wordBigrams(t)
-    lit(1.0) - size(array_distinct(bg)).cast("double") / size(bg)
-  }
-
   def t9Repetition(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val base = Tables.documents(s, d)
       .select($"doc_id", toks(lower($"text")).as("t"))
       // a 0/1-token doc has no bigrams (and slice() would throw)
       .filter(size($"t") >= 2)
-    val counted =
-      if (gramKernelOn) {
-        // same counts from the index-sort kernel — no gram strings,
-        // no hash-set distinct (bit-identical; flip-equality spec'd)
-        val s2 = GraftFunctions.gramRepStats($"t", 2)
-        base.select($"doc_id", size($"t").as("n_tokens"),
-          s2.getField("n_grams").as("n_bigrams"),
-          s2.getField("n_distinct").as("n_distinct"))
-      } else {
-        base.select($"doc_id", size($"t").as("n_tokens"),
-          wordBigrams($"t").as("bg"))
-          .select($"doc_id", $"n_tokens",
-            size($"bg").as("n_bigrams"),
-            size(array_distinct($"bg")).as("n_distinct"))
-      }
-    counted
+    // bigram counts from the index-sort kernel — no gram strings, no
+    // hash-set distinct (equal to the bigram-array form: KernelReference)
+    val s2 = GraftFunctions.gramRepStats($"t", 2)
+    base.select($"doc_id", size($"t").as("n_tokens"),
+        s2.getField("n_grams").as("n_bigrams"),
+        s2.getField("n_distinct").as("n_distinct"))
       .withColumn("dup_ratio",
         lit(1.0) - $"n_distinct".cast("double") / $"n_bigrams")
       .withColumn("keep", $"dup_ratio" <= RepetitionMax)
@@ -522,13 +489,12 @@ object Text {
   // occurrences×n/n_tokens which exceeds 1 on degenerate docs). A doc
   // is kept only if ALL four signals pass.
   //
-  // Scale shape: ZERO shuffles before the output sort — n-gram
-  // arrays are built map-side (t6/t8 kernels) and the top-gram count
-  // is the longest run of the SORTED gram array ([[maxRun]], a pure
-  // codegen'd higher-order aggregate), not an explode + per-(doc,
-  // gram) groupBy, so nothing leaves the map side; the oracle
-  // rebuilds the same counts via unnest+GROUP BY, where the shuffle
-  // is DuckDB's problem.
+  // Scale shape: ZERO shuffles before the output sort — the counts
+  // come map-side from the gram_rep_stats kernel, whose top-gram
+  // count is the longest run of the SORTED gram index array, not an
+  // explode + per-(doc, gram) groupBy, so nothing leaves the map
+  // side; the oracle rebuilds the same counts via unnest+GROUP BY,
+  // where the shuffle is DuckDB's problem.
   // ---------------------------------------------------------------------
   val Dup2Max = 0.20
   val Dup3Max = 0.18
@@ -538,7 +504,7 @@ object Text {
   /** Highest occurrence count of any element of a string array —
     * computed map-side as the longest run of the sorted array. The
     * empty-string initial `prev` can't collide: grams are non-empty. */
-  private def maxRun(arr: Column): Column =
+  private[graft] def maxRun(arr: Column): Column =
     aggregate(array_sort(arr),
       struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
       (acc, x) => {
@@ -549,35 +515,21 @@ object Text {
       },
       acc => acc.getField("best"))
 
-  /** Word n-gram array for n >= 2 (t8's sequence/slice kernel). */
-  private def wordNgrams(t: Column, n: Int): Column =
-    transform(sequence(lit(1), size(t) - (n - 1)),
-      i => concat_ws(" ", slice(t, i, lit(n))))
-
   /** The four Gopher battery signals of a token array with ≥ 3 tokens,
     * as one struct — shared by the t12 query and the streaming corpus
     * gate so the two can never drift. All map-side array expressions. */
-  private[graft] def repetitionSignals(t: Column): Column =
-    if (gramKernelOn) {
-      // identical counts from the index-sort kernel (one evaluation
-      // per gram size via whole-stage subexpression elimination); the
-      // fraction arithmetic below is op-for-op the expression form's
-      val s2 = GraftFunctions.gramRepStats(t, 2)
-      val s3 = GraftFunctions.gramRepStats(t, 3)
-      struct(
-        (lit(1.0) - s2.getField("n_distinct").cast("double") / s2.getField("n_grams")).as("dup2_frac"),
-        (s2.getField("max_run").cast("double") / s2.getField("n_grams")).as("top2_frac"),
-        (lit(1.0) - s3.getField("n_distinct").cast("double") / s3.getField("n_grams")).as("dup3_frac"),
-        (s3.getField("max_run").cast("double") / s3.getField("n_grams")).as("top3_frac"))
-    } else {
-      val g2 = wordBigrams(t)
-      val g3 = wordNgrams(t, 3)
-      struct(
-        (lit(1.0) - size(array_distinct(g2)).cast("double") / size(g2)).as("dup2_frac"),
-        (maxRun(g2).cast("double") / size(g2)).as("top2_frac"),
-        (lit(1.0) - size(array_distinct(g3)).cast("double") / size(g3)).as("dup3_frac"),
-        (maxRun(g3).cast("double") / size(g3)).as("top3_frac"))
-    }
+  private[graft] def repetitionSignals(t: Column): Column = {
+    // counts from the index-sort kernel (one evaluation per gram size
+    // via whole-stage subexpression elimination; equal to the gram-array
+    // form: KernelReference)
+    val s2 = GraftFunctions.gramRepStats(t, 2)
+    val s3 = GraftFunctions.gramRepStats(t, 3)
+    struct(
+      (lit(1.0) - s2.getField("n_distinct").cast("double") / s2.getField("n_grams")).as("dup2_frac"),
+      (s2.getField("max_run").cast("double") / s2.getField("n_grams")).as("top2_frac"),
+      (lit(1.0) - s3.getField("n_distinct").cast("double") / s3.getField("n_grams")).as("dup3_frac"),
+      (s3.getField("max_run").cast("double") / s3.getField("n_grams")).as("top3_frac"))
+  }
 
   /** t12's composite keep gate over [[repetitionSignals]]. */
   private[graft] def repetitionKeep(sig: Column): Column =
@@ -1087,30 +1039,16 @@ object Text {
   // ---------------------------------------------------------------------
   def t23Dsir(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val h60 = (c: Column) =>
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-    // the kernel form computes the identical sorted bucket array
-    // straight from digest bytes (no per-gram hex/substring/conv
-    // string allocations in the scan) and run-length-encodes it in
-    // the same pass, replacing the runStarts/runPairs interpreted
-    // higher-order scans too (flip-equality spec'd)
-    val base = Tables.documents(s, d)
+    // the kernel computes the sorted bucket array straight from digest
+    // bytes (no per-gram hex/substring/conv string allocations in the
+    // scan) and run-length-encodes it in the same pass (equal to the
+    // md5 expression form + runStarts/runPairs RLE: KernelReference)
+    val pairs = Tables.documents(s, d)
       .select($"doc_id", $"lang", toks(lower($"text")).as("t"))
       .filter(size($"t") >= 2)
-    val pairs =
-      if (gramKernelOn)
-        base.select($"doc_id", $"lang",
-          explode(GraftFunctions.dsirPairs($"t", DsirBuckets)).as("p"))
-          .select($"doc_id", $"lang", $"p.h", $"p.c")
-      else
-        base.select($"doc_id", $"lang",
-          sort_array(concat(
-            transform($"t", w => h60(w) % DsirBuckets),
-            transform(wordBigrams($"t"), g => h60(g) % DsirBuckets))).as("f"))
-          .withColumn("st", runStarts("f"))
-          .select($"doc_id", $"lang",
-            explode(runPairs("f", "st", "h", "c")).as("p"))
-          .select($"doc_id", $"lang", $"p.h", $"p.c")
+      .select($"doc_id", $"lang",
+        explode(GraftFunctions.dsirPairs($"t", DsirBuckets)).as("p"))
+      .select($"doc_id", $"lang", $"p.h", $"p.c")
     val stats = pairs.groupBy($"h").agg(
       sum($"c").as("cnt_r"),
       sum(when($"lang" === DsirTarget, $"c").otherwise(0L)).as("cnt_t"))

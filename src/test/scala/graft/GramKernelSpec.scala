@@ -3,44 +3,36 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** r22: the codegen'd gram kernels (gram_rep_stats / dsir_buckets)
+/** r22: the codegen'd gram kernels (gram_rep_stats / dsir_pairs)
   * must be BIT-IDENTICAL to the SQL-expression forms they replace —
-  * pinned by conf-flip pairs on the graded queries plus direct
-  * adversarial corpora on the shared expression builders. The kernels
-  * replace per-gram string builds + interpreted (CodegenFallback)
-  * higher-order folds in the scan hot loop; results may not move. */
+  * pinned by main-vs-reference session pairs on the graded queries
+  * (the reference session plans [[KernelReference]]'s expression
+  * forms in the kernels' place) plus direct adversarial corpora on the
+  * shared expression builders. The kernels replace per-gram string
+  * builds + interpreted (CodegenFallback) higher-order folds in the
+  * scan hot loop; results may not move. */
 class GramKernelSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val Key = text.Text.GramKernelKey
-
-  private def flipRows(q: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)
-  : (Seq[org.apache.spark.sql.Row], Seq[org.apache.spark.sql.Row]) = {
-    val on = withConf(Key, "true") { q(spark, SfDir).collect().toSeq }
-    val off = withConf(Key, "false") { q(spark, SfDir).collect().toSeq }
-    (on, off)
-  }
-
   test("t9/t12/t23/t26 are bit-identical under the gramKernel flip") {
-    for ((name, q) <- Seq(
-      "t9_repetition" -> (text.Text.t9Repetition _),
-      "t12_repetition_family" -> (text.Text.t12RepetitionFamily _),
-      "t23_dsir" -> (text.Text.t23Dsir _),
-      "t26_importance_resample" -> (text.Text.t26ImportanceResample _))) {
-      val (on, off) = flipRows(q)
+    for ((name, q, kernel) <- Seq(
+      ("t9_repetition", text.Text.t9Repetition _, "gram_rep_stats"),
+      ("t12_repetition_family", text.Text.t12RepetitionFamily _, "gram_rep_stats"),
+      ("t23_dsir", text.Text.t23Dsir _, "dsir_pairs"),
+      ("t26_importance_resample", text.Text.t26ImportanceResample _, "dsir_pairs"))) {
+      val (on, off) = KernelReference.rows(kernel)(q(_, SfDir))
       assert(on.nonEmpty, s"$name returned no rows")
-      assert(on == off, s"$name differs under the $Key flip")
+      assert(on == off, s"$name differs from its KernelReference form")
     }
   }
 
   test("streaming corpus gate keep-set is flip-invariant (shared repetitionSignals)") {
-    val docs = Tables.documents(spark, SfDir).withColumn("ts", current_timestamp())
-    def kept(on: Boolean): Seq[Long] = withConf(Key, on.toString) {
-      streaming.Streaming.corpusIngestTransform(docs)
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val (a, b) = KernelReference.rows("gram_rep_stats") { s =>
+      streaming.Streaming.corpusIngestTransform(
+        Tables.documents(s, SfDir).withColumn("ts", current_timestamp()))
+        .select("doc_id").orderBy("doc_id")
     }
-    val a = kept(on = true)
-    assert(a.nonEmpty && a == kept(on = false))
+    assert(a.nonEmpty && a == b)
   }
 
   test("repetitionSignals kernel == expression form on adversarial token arrays") {
@@ -56,11 +48,28 @@ class GramKernelSpec extends AnyFunSuite {
       Seq("x", "y", "x\u0001z", "x", "y", "x\u0001z", "q"),
       Seq("t1", "t2", "t3"), // exactly 3 tokens: one trigram
       (0 until 200).map(i => s"w${i % 7}"))
-    val df = corpora.toDF("t")
-    def sig(on: Boolean): Seq[org.apache.spark.sql.Row] = withConf(Key, on.toString) {
-      df.select(text.Text.repetitionSignals($"t").as("s")).collect().toSeq
+    // an RDD source: a local relation would fold the projection away
+    // before the plan check sees it
+    val (on, off) = KernelReference.rows("gram_rep_stats") { s =>
+      s.createDataFrame(s.sparkContext.parallelize(corpora.map(Tuple1(_)), 1)).toDF("t")
+        .select(text.Text.repetitionSignals($"t").as("s"))
     }
-    assert(sig(on = true) == sig(on = false))
+    assert(on == off)
+  }
+
+  /** t23's pre-kernel feature array: sorted md5 buckets of the word
+    * uni+bigrams. */
+  private val md5Buckets = {
+    val h60 = (c: org.apache.spark.sql.Column) =>
+      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+    sort_array(concat(
+      transform(col("t"), w => h60(w) % text.Text.DsirBuckets),
+      transform(
+        zip_with(
+          slice(col("t"), lit(1), size(col("t")) - 1),
+          slice(col("t"), lit(2), size(col("t")) - 1),
+          (a, b) => concat_ws(" ", a, b)),
+        g => h60(g) % text.Text.DsirBuckets)))
   }
 
   test("dsir_buckets kernel == md5-expression form on adversarial token arrays") {
@@ -72,19 +81,11 @@ class GramKernelSpec extends AnyFunSuite {
       Seq("only"), // unigram-only: no bigrams
       (0 until 100).map(i => s"tok$i"))
     val df = corpora.toDF("t")
-    val h60 = (c: org.apache.spark.sql.Column) =>
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-    val oldForm = sort_array(concat(
-      transform($"t", w => h60(w) % text.Text.DsirBuckets),
-      transform(
-        zip_with(
-          slice($"t", lit(1), size($"t") - 1),
-          slice($"t", lit(2), size($"t") - 1),
-          (a, b) => concat_ws(" ", a, b)),
-        g => h60(g) % text.Text.DsirBuckets)))
-    val got = df.select(
-      functions.GraftFunctions.dsirBuckets($"t", text.Text.DsirBuckets).as("k"),
-      oldForm.as("o")).collect()
+    // each (h, c) pair expanded back to c copies of h: the sorted array
+    val expanded = flatten(transform(
+      functions.GraftFunctions.dsirPairs($"t", text.Text.DsirBuckets),
+      p => array_repeat(p.getField("h"), p.getField("c").cast("int"))))
+    val got = df.select(expanded.as("k"), md5Buckets.as("o")).collect()
     got.foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1),
         s"bucket mismatch: kernel=${r.getSeq[Long](0)} expr=${r.getSeq[Long](1)}")
@@ -100,7 +101,7 @@ class GramKernelSpec extends AnyFunSuite {
       // misbehaves there) can't occur: t23 filters size(t) >= 2
       (0 until 150).map(i => s"tok${i % 9}"))
     val df = corpora.toDF("t")
-      .withColumn("f", functions.GraftFunctions.dsirBuckets($"t", text.Text.DsirBuckets))
+      .withColumn("f", md5Buckets)
     // the RLE expression pipeline t23 ran before r22, verbatim
     val st = expr("filter(sequence(0, size(f) - 1), i -> i = 0 OR f[i] != f[i - 1])")
     val rle = expr("transform(sequence(0, size(st) - 1), " +

@@ -5,29 +5,25 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** r22: the codegen'd h60-gram kernels (shingle_h60_set /
   * anchor_grams / gram_h60_distinct) must be BIT-IDENTICAL to the
-  * md5-expression forms they replace — conf-flip pairs on the graded
-  * queries plus direct adversarial corpora per kernel. */
+  * md5-expression forms they replace — main-vs-reference session
+  * pairs on the graded queries ([[KernelReference]]) plus direct
+  * adversarial corpora per kernel. */
 class H60KernelSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val DKey = dedup.Dedup.H60KernelKey
-  private val TKey = text.Text.GramKernelKey
-
   test("d6/d11/d15 are bit-identical under the h60Kernel flip") {
-    for ((name, q) <- Seq(
-      "d6_ngram_jaccard" -> (dedup.Dedup.d6NgramJaccard _),
-      "d11_substring_dup" -> (dedup.Dedup.d11SubstringDup _),
-      "d15_minhash_calibration" -> (dedup.Dedup.d15MinhashCalibration _))) {
-      val on = withConf(DKey, "true") { q(spark, SfDir).collect().toSeq }
-      val off = withConf(DKey, "false") { q(spark, SfDir).collect().toSeq }
+    for ((name, q, kernel) <- Seq(
+      ("d6_ngram_jaccard", dedup.Dedup.d6NgramJaccard _, "shingle_h60_set"),
+      ("d11_substring_dup", dedup.Dedup.d11SubstringDup _, "anchor_grams"),
+      ("d15_minhash_calibration", dedup.Dedup.d15MinhashCalibration _, "shingle_h60_set"))) {
+      val (on, off) = KernelReference.rows(kernel)(q(_, SfDir))
       assert(on.nonEmpty, s"$name returned no rows")
-      assert(on == off, s"$name differs under the $DKey flip")
+      assert(on == off, s"$name differs from its KernelReference form")
     }
   }
 
   test("t27 is bit-identical under the gramKernel flip") {
-    val on = withConf(TKey, "true") { text.Text.t27Novelty(spark, SfDir).collect().toSeq }
-    val off = withConf(TKey, "false") { text.Text.t27Novelty(spark, SfDir).collect().toSeq }
+    val (on, off) = KernelReference.rows("gram_h60_distinct")(text.Text.t27Novelty(_, SfDir))
     assert(on.nonEmpty && on == off)
   }
 

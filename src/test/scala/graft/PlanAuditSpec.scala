@@ -199,12 +199,8 @@ class PlanAuditSpec extends AnyFunSuite {
       case -1 => full
       case i  => full.substring(0, i)
     }
-    // r22: the shingle-hash set is the shingle_h60_set kernel (wave 9);
-    // the conv(substring(md5( alternative catches the expression form
-    // under the h60Kernel kill switch so the reuse pin holds either way
-    val shingleKernels =
-      "shingle_h60_set\\(".r.findAllIn(fin).size +
-        "conv\\(substring\\(md5\\(".r.findAllIn(fin).size
+    // r22: the shingle-hash set is the shingle_h60_set kernel (wave 9)
+    val shingleKernels = "shingle_h60_set\\(".r.findAllIn(fin).size
     assert(shingleKernels == 1,
       s"corpus shingle-hash set must be computed once, found $shingleKernels evaluations:\n$fin")
     val minhashKernels = "minhash_sig\\(".r.findAllIn(fin).size

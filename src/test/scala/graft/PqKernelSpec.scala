@@ -4,25 +4,23 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** r22: the codegen'd PQ distance kernels (l2_sq_slice / qdot /
-  * adc_sum) must be BIT-IDENTICAL to the interpreted expression forms
-  * they replace — pinned by conf-flip pairs on the graded PQ queries
-  * plus direct adversarial inputs on each kernel. */
+  * fdot / adc_sum) must be BIT-IDENTICAL to the interpreted expression
+  * forms they replace — pinned by main-vs-reference session pairs on
+  * the graded PQ queries ([[KernelReference]]) plus direct adversarial
+  * inputs on each kernel. */
 class PqKernelSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val Key = sim.Sim.PqKernelKey
-
   test("v6/v7/v8/v10/v19 are bit-identical under the pqKernel flip") {
-    for ((name, q) <- Seq(
-      "v6_pq_adc" -> (sim.Sim.v6PqAdc _),
-      "v7_quantized_rerank" -> (sim.Sim.v7QuantizedRerank _),
-      "v8_ivf_pq" -> (sim.Sim.v8IvfPq _),
-      "v10_mips" -> (sim.Sim.v10Mips _),
-      "v19_pq_recall" -> (sim.Sim.v19PqRecall _))) {
-      val on = withConf(Key, "true") { q(spark, SfDir).collect().toSeq }
-      val off = withConf(Key, "false") { q(spark, SfDir).collect().toSeq }
+    for ((name, q, kernels) <- Seq(
+      ("v6_pq_adc", sim.Sim.v6PqAdc _, Seq("l2_sq_slice", "adc_sum")),
+      ("v7_quantized_rerank", sim.Sim.v7QuantizedRerank _, Seq("qdot")),
+      ("v8_ivf_pq", sim.Sim.v8IvfPq _, Seq("l2_sq_slice", "adc_sum")),
+      ("v10_mips", sim.Sim.v10Mips _, Seq("fdot")),
+      ("v19_pq_recall", sim.Sim.v19PqRecall _, Seq("l2_sq_slice", "adc_sum")))) {
+      val (on, off) = KernelReference.rows(kernels: _*)(q(_, SfDir))
       assert(on.nonEmpty, s"$name returned no rows")
-      assert(on == off, s"$name differs under the $Key flip")
+      assert(on == off, s"$name differs from its KernelReference form")
     }
   }
 
