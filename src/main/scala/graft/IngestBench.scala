@@ -49,8 +49,8 @@ object IngestBench {
     * 5 event-time minutes (hours roll over, so the daemon rollup has
     * real window churn). Same raw/scale arithmetic as the DSv2 poll
     * source, so the decode is the reference's. */
-  private def generateFeed(spark: SparkSession, dir: String, rows: Long,
-                           inverters: Int): DataFrame = {
+  private[graft] def generateFeed(spark: SparkSession, dir: String, rows: Long,
+                                  inverters: Int): DataFrame = {
     val regs = sources.RegisterPollSource.Registers
     val names = array(regs.map(r => lit(r._1)): _*)
     val scales = array(regs.map(r => lit(r._2)): _*)

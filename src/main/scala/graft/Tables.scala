@@ -50,7 +50,22 @@ object Tables {
     * context recompiles its classes by design, and the old context's
     * entries age out of the LRU. The conf is static: it takes effect in
     * the session that first initializes Spark's code generator in a
-    * JVM. */
+    * JVM.
+    *
+    * The `file:` scheme resolves to [[graft.io.ForkFreeLocalFileSystem]]
+    * and [[graft.io.ForkFreeLocalFs]] (Hive's service-loaded
+    * `ProxyLocalFileSystem` otherwise). Without the native Hadoop
+    * library, Hadoop's local file system forks `chmod` for every
+    * permission it sets and `readlink` for every `FileContext` rename:
+    * about 128 processes and as many reader threads per micro-batch of
+    * the daemon pipeline (offset log, commit log, four state-store
+    * deltas, checksums, the parquet committer's directories); a 17-batch
+    * drain on a 4-core machine started 2,177 threads, and fewer than 40
+    * with the fork-free classes (LocalFsSpec pins at most 5 per batch). The
+    * fork-free classes answer both through `java.nio.file`; checksum
+    * files, the atomic rename and Spark's choice of checkpoint manager
+    * are unchanged. Hadoop's `FileSystem` cache is JVM-wide, so the
+    * setting holds for a JVM whose first `file:` user is this session. */
   def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -61,6 +76,8 @@ object Tables {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

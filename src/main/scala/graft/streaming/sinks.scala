@@ -236,15 +236,18 @@ class BufferedStreamSink(writer: BatchWriter, maxPending: Int, maxRetries: Int) 
   def this(path: String, maxPending: Int = 4, maxRetries: Int = 3) =
     this(new ParquetBatchWriter(path), maxPending, maxRetries)
 
-  private val pending = new Semaphore(maxPending)
+  private val slots = new Semaphore(maxPending)
   // atomic: up to maxPending writeBatch calls may retry concurrently
   private val retriesSeen = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Visible for the spec: total retry attempts that occurred. */
   def retries: Int = retriesSeen.get()
 
+  /** Batch writes in flight now (at most `maxPending`). */
+  def pending: Int = maxPending - slots.availablePermits()
+
   def writeBatch(batch: Dataset[Row], batchId: Long): Unit = {
-    pending.acquire()
+    slots.acquire()
     try {
       var attempt = 0
       var done = false
@@ -259,7 +262,7 @@ class BufferedStreamSink(writer: BatchWriter, maxPending: Int, maxRetries: Int) 
             if (attempt > maxRetries) throw e
         }
       }
-    } finally pending.release()
+    } finally slots.release()
   }
 
   /** Attach this sink to a stream with a processing-time trigger —

@@ -3,7 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import graft.streaming.{BufferedStreamSink, JdbcBatchWriter, MergeTreeSink, SqlExecutor, Streaming}
+import graft.streaming.{BatchWriter, BufferedStreamSink, JdbcBatchWriter, MergeTreeSink, SqlExecutor, Streaming}
+import org.apache.spark.sql.{Dataset, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -276,6 +277,14 @@ class StreamingSpec extends AnyFunSuite {
     val replay = Seq(Ev(ts(0, 1), "view", 1.0), Ev(ts(0, 2), "view", 2.0)).toDF()
     sink.writeBatch(replay, 0L)
     assert(s.read.parquet(s"$dir/data").count() == 3)
+    assert(sink.pending == 0, "no write in flight once the stream stopped")
+    // the in-flight gauge: a write sees itself counted, and only itself
+    var seen = -1
+    lazy val gauge: BufferedStreamSink = new BufferedStreamSink(new BatchWriter {
+      override def write(batch: Dataset[Row], batchId: Long): Unit = seen = gauge.pending
+    }, maxPending = 2, maxRetries = 0)
+    gauge.writeBatch(replay, 1L)
+    assert(seen == 1 && gauge.pending == 0)
   }
 
   test("daemon end-to-end: poll source -> catalog decode -> hourly rollup -> buffered sink") {
