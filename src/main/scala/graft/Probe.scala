@@ -1,7 +1,11 @@
 package graft
 
-import graft.plans.{GroupedAggRewrite, GroupedOffsetRewrite, GroupedRankRewrite, GroupedRunningAggRewrite, RangeSlidingAggRewrite, SlidingAggRewrite, WindowSplit}
+import graft.plans.{ExcludedRules, GroupedAggRewrite => FullAgg,
+  GroupedOffsetRewrite => Offset, GroupedRankRewrite => Rank, GroupedRunningAggRewrite => Running,
+  RangeSlidingAggRewrite => RangeSliding, SlidingAggRewrite => Sliding, WindowSplit => Split}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +18,10 @@ import org.apache.spark.sql.functions._
   *    `SPARK_GRAFT_EXPLAIN_EXEC=1` runs the query and prints the FINAL
   *    adaptive plan (where AQE's skew/reuse decisions show);
   *  - `flip <name> <confSpec...>` A/Bs one graded query under conf
-  *    flips: a bare `<key>` is true on and false off (rewrite kill
-  *    switches, the consolidate lever); `<key>=<onVal>|<offVal>` flips
-  *    between two values (the minBytes `auto|0` gate pairs);
+  *    flips: a bare `<key>` is true on and false off (boolean confs
+  *    such as the consolidate lever); `<key>=<onVal>|<offVal>` flips
+  *    between two values (the minBytes `auto|0` gate pairs, and rules
+  *    as `spark.sql.optimizer.excludedRules=|graft.plans.GroupedRankRewrite`);
   *  - `window [nRows] <mode> [nGroups]` A/Bs a window operator against
   *    Spark's native window on one synthetic shape of [[shapes]]
   *    (default 50M rows, 4 groups) and exits 1 when an operator-on
@@ -133,12 +138,18 @@ object Probe {
     val shape = shapes(mode)
     if (shape.noCoalesce) s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     val synth = new Synth(s, n, nGroups)
+    // the off branch adds the shape's rules to any exclusion
+    // SPARK_GRAFT_CONF already set; the on branch keeps that exclusion
+    val onRules = s.conf.getOption(ExcludedRules.Key)
+    val offRules = ExcludedRules.plus(onRules, shape.rules)
+    val flipped = (shape.rules.map(_.ruleName) ++ shape.keys).mkString(",")
     val (tOn, tOff, onSums, offSums) = interleaved { on =>
+      s.conf.set(ExcludedRules.Key, if (on) onRules.getOrElse("") else offRules)
       shape.keys.foreach(s.conf.set(_, on.toString))
       val t0 = System.nanoTime()
       val sum = shape.plan(synth).head().get(0)
       val dt = (System.nanoTime() - t0) / 1e9
-      println(f"$mode ${shape.keys.mkString(",")}=$on n=$n sum=$sum $dt%.1fs")
+      println(f"$mode $flipped=$on n=$n sum=$sum $dt%.1fs")
       (dt, sum)
     }
     println(f"$mode n=$n operator=$tOn%.1fs native=$tOff%.1fs speedup=${tOff / tOn}%.1fx")
@@ -193,26 +204,20 @@ object Probe {
         pmod($"id" * 2654435761L, lit(1000000007L)).as("k2"))
   }
 
-  /** A window shape: the conf keys its off branch sets false, whether
-    * it turns off AQE coalescing (the chained shapes keep their finer
-    * pre-existing exchange at 200 partitions), and its one-value
-    * checksum plan. Checksums are exact longs (cume_dist as a ×1e6
-    * fixed point, the same double division in both engines) or
-    * mod-prime per-row sums, so a row with a wrong value flips them. */
-  private case class Shape(keys: Seq[String], noCoalesce: Boolean = false)(
-      val plan: Synth => DataFrame)
+  /** A window shape: the rules its off branch excludes, whether it
+    * turns off AQE coalescing (the chained shapes keep their finer
+    * pre-existing exchange at 200 partitions), the boolean conf keys
+    * its off branch sets false, and its one-value checksum plan.
+    * Checksums are exact longs (cume_dist as a ×1e6 fixed point, the
+    * same double division in both engines) or mod-prime per-row sums,
+    * so a row with a wrong value flips them. */
+  private case class Shape(rules: Seq[Rule[LogicalPlan]], noCoalesce: Boolean = false,
+      keys: Seq[String] = Nil)(val plan: Synth => DataFrame)
 
-  private val Rank = GroupedRankRewrite.ConfKey
-  private val Running = GroupedRunningAggRewrite.ConfKey
-  private val Offset = GroupedOffsetRewrite.ConfKey
-  private val FullAgg = GroupedAggRewrite.ConfKey
-  private val Split = WindowSplit.ConfKey
-  private val Sliding = SlidingAggRewrite.ConfKey
-  private val RangeSliding = RangeSlidingAggRewrite.ConfKey
   /** A mixed select plans every family out of one node: its off branch
-    * silences all of them to get the native mixed funnel. */
-  private val MixedKeys = Seq(Split, Rank, Running, Offset, FullAgg)
-  private val GroupedMixedKeys = Seq(Split, Rank, Running)
+    * excludes all of them to get the native mixed funnel. */
+  private val MixedRules = Seq(Split, Rank, Running, Offset, FullAgg)
+  private val GroupedMixedRules = Seq(Split, Rank, Running)
 
   private def modPrime(c: Column): Column = pmod(c, lit(1000000007L))
   private def cumeSum(c: Column): Column = sum((c * 1000000).cast("long"))
@@ -344,7 +349,7 @@ object Probe {
         .agg((sum($"gs") + sum($"r".cast("long")) + sum($"dr".cast("long")) + cumeSum($"cd")).as("chk"))
     },
     // q46: all four family classes in ONE select over one total order
-    "mixed" -> Shape(MixedKeys) { x =>
+    "mixed" -> Shape(MixedRules) { x =>
       x.df.select($"k", rank().over(x.w).as("r"), cume_dist().over(x.w).as("cd"),
           sum($"k").over(x.w).as("run"), lag($"k", 1, 0L).over(x.w).as("pk"),
           sum($"k").over(x.w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
@@ -353,7 +358,7 @@ object Probe {
           .as("chk"))
     },
     // the split composed with the tie chain on a finer exchange
-    "mixedchained" -> Shape(MixedKeys, noCoalesce = true) { x =>
+    "mixedchained" -> Shape(MixedRules, noCoalesce = true) { x =>
       val wd = Window.orderBy($"d")
       x.tiedD.select($"fine", rank().over(wd).as("r"), dense_rank().over(wd).as("dr"),
           cume_dist().over(wd).as("cd"), sum($"fine").over(wd).as("gs"),
@@ -362,7 +367,7 @@ object Probe {
           cumeSum($"cd")).as("chk"))
     },
     // q48: rank family + running RANGE aggregates over one grouped order
-    "groupedmixed" -> Shape(GroupedMixedKeys) { x =>
+    "groupedmixed" -> Shape(GroupedMixedRules) { x =>
       x.groups.select($"g", rank().over(x.wg).as("r"), dense_rank().over(x.wg).as("dr"),
           cume_dist().over(x.wg).as("cd"), sum($"k").over(x.wg).as("cs"),
           count(lit(1)).over(x.wg).as("cc"))
@@ -371,7 +376,7 @@ object Probe {
         .agg(sum($"m"))
     },
     // the grouped split over both driver chains on a finer exchange
-    "groupedmixedchained" -> Shape(GroupedMixedKeys, noCoalesce = true) { x =>
+    "groupedmixedchained" -> Shape(GroupedMixedRules, noCoalesce = true) { x =>
       val wd = Window.partitionBy($"g").orderBy($"d")
       x.tiedGD.select($"g", $"fine", rank().over(wd).as("r"), dense_rank().over(wd).as("dr"),
           cume_dist().over(wd).as("cd"), sum($"fine").over(wd).as("gs"),
@@ -393,7 +398,7 @@ object Probe {
     // the wide-frame consolidation: 2000 distinct values whatever n,
     // so the frame spans ~5 of 32 partitions; the operator runs in
     // both branches, off = per-row wide halo copies
-    "rangeslidingwide" -> Shape(Seq(RangeSlidingAggRewrite.ConsolidateKey)) { x =>
+    "rangeslidingwide" -> Shape(Nil, keys = Seq(RangeSliding.ConsolidateKey)) { x =>
       val wR = Window.orderBy($"o").rangeBetween(-300, 0)
       x.valueAxis(math.max(x.n / 2000L, 1L))
         .select($"k2", sum($"k2").over(wR).as("t"), count(lit(1)).over(wR).as("c"),

@@ -35,10 +35,15 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Every rule below is an optimizer rule with no on/off conf of its
+    // own: `spark.sql.optimizer.excludedRules` (e.g.
+    // `graft.plans.GroupedRankRewrite,graft.plans.WindowSplit`) turns
+    // rules off, and with it unset the optimizer runs them all. ONE
+    // planner strategy plans every graft logical node.
+    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
     // Grouped top-k: optimizer rule rewrites the filter(row_number <= k)
-    // idiom into the heap-based two-phase operator; the strategy plans it.
+    // idiom into the heap-based two-phase operator.
     ext.injectOptimizerRule(_ => graft.plans.TopKRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
     // Full-frame aggregate windows, with or without keys — share-of-
     // total (sum(x) OVER ()) and share-of-group (sum(x) OVER
     // (PARTITION BY g)) — aggregate once, distributed (map-side partial
@@ -75,7 +80,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // runs first, so filter(rank <= k) keeps the cheaper heap path;
     // this catches the full rankings).
     ext.injectOptimizerRule(_ => graft.plans.GroupedRankRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedRankStrategy)
     // The 2^31 escape hatch (spark.graft.rank.longRank=true): an
     // ANALYZER rule swaps row_number/rank/dense_rank on global
     // windows for LongType variants — analysis-time so the Dataset
@@ -89,13 +93,11 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // operator range-partitions (group, order) and chains boundary
     // segments — a distributed prefix scan, zero keys included.
     ext.injectOptimizerRule(_ => graft.plans.GroupedRunningAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedRunningAggStrategy)
     // OFFSET windows (lag/lead OVER ([PARTITION BY g] ORDER BY …) —
     // runningDifference/neighbor, global or per key): rewritten to the
     // range exchange + key-gated boundary-VALUE rings instead of the
     // all-rows single-task (or group-count-bound) native window.
     ext.injectOptimizerRule(_ => graft.plans.GroupedOffsetRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.GroupedOffsetStrategy)
     // Adjacent offset nodes over the same (part, order) merge into
     // ONE multi-function node (r21): the withColumn-chain idiom
     // analyzes into a window tower CollapseWindow only partially
@@ -123,7 +125,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // rings (the offset operator's machinery) + per-frame aggregate
     // re-folds.
     ext.injectOptimizerRule(_ => graft.plans.SlidingAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.SlidingAggStrategy)
     // Bounded RANGE-VALUE sliding frames (trailing-30-day style
     // value windows, global or grouped): the row-halo operator — a
     // distributed executor-to-executor halo shuffle of the
@@ -131,7 +132,6 @@ object GraftExtensions extends SparkSessionExtensionsProvider {
     // no scale path (the per-window ROW count is unbounded, so the
     // driver-ring discipline doesn't apply).
     ext.injectOptimizerRule(_ => graft.plans.RangeSlidingAggRewrite)
-    ext.injectPlannerStrategy(_ => graft.plans.RangeSlidingAggStrategy)
     ext.injectFunction((
       FunctionIdentifier("simhash64"),
       new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),

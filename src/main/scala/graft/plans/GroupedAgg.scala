@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, Join, JoinHint, LogicalPlan, Project, UnaryNode, Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, Join, JoinHint, LogicalPlan, Project, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
 
@@ -95,17 +95,13 @@ import org.apache.spark.sql.internal.SQLConf
   * that outgrows a task is an unbounded single-task spill-storm, while
   * the nearly-distinct-keys regime's tax is a bounded constant; README
   * "Window-operator cost levers" has the measured table) skips the
-  * rewrite below the threshold; kill switch
-  * `spark.graft.fullAgg.enabled=false`.
+  * rewrite below the threshold; excluding `graft.plans.GroupedAggRewrite`
+  * (`spark.sql.optimizer.excludedRules`) turns it off.
   */
 object GroupedAggRewrite extends Rule[LogicalPlan] {
   import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.fullAgg.enabled"
   val MinBytesKey = "spark.graft.fullAgg.minBytes"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
@@ -155,7 +151,6 @@ object GroupedAggRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformDown {
       case w @ LogicalWindow(wexprs, part, order, child, _) if wexprs.nonEmpty =>
         // the expression matcher first: most windows are another class,
@@ -299,8 +294,7 @@ private[plans] object AggLegPeel {
         if needed.intersect(
           AttributeSet(w.windowExpressions.map(_.toAttribute))).isEmpty =>
       peel(w.child, needed)
-    case n: UnaryNode
-        if isGraftWindowOp(n) && needed.intersect(n.producedAttributes).isEmpty =>
+    case n: GraftWindowNode if needed.intersect(n.producedAttributes).isEmpty =>
       peel(n.child, needed)
     case p: Project
         if needed.subsetOf(AttributeSet(p.projectList.map(_.toAttribute))) =>
@@ -312,11 +306,5 @@ private[plans] object AggLegPeel {
         else Project(keep, below)
       }
     case other => other
-  }
-
-  private def isGraftWindowOp(n: LogicalPlan): Boolean = n match {
-    case _: GroupedRankNode | _: GroupedRunningAggNode |
-         _: GroupedOffsetNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
-    case _ => false
   }
 }

@@ -5,10 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode, Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
@@ -74,19 +73,15 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * deterministic order and subtree; non-streaming child (two jobs,
   * one shuffle). `spark.graft.offset.minBytes` (default `auto` = the
   * session's AQE advisory partition size, 64 MB stock) is the class's
-  * small-input cost gate — see [[minBytes]];
-  * `spark.graft.offset.enabled=false` the kill switch / equivalence-
-  * spec A/B lever.
+  * small-input cost gate — see [[minBytes]]; excluding
+  * `graft.plans.GroupedOffsetRewrite` (`spark.sql.optimizer.excludedRules`)
+  * is the equivalence-spec A/B lever.
   */
 object GroupedOffsetRewrite extends Rule[LogicalPlan] {
   import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.offset.enabled"
   val MaxOffsetKey = "spark.graft.offset.maxOffset"
   val MinBytesKey = "spark.graft.offset.minBytes"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   private[plans] def maxOffset: Int =
     SQLConf.get.getConfString(MaxOffsetKey, "128").toInt
@@ -173,7 +168,6 @@ object GroupedOffsetRewrite extends Rule[LogicalPlan] {
     PlanGuards.valueTrafficOk(op, fns.map(_.input), part, shipExtent(fns))
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     val cap = maxOffset
     plan.transformUp {
       // no size gate HERE (r21): the rewrite always claims the class
@@ -181,11 +175,7 @@ object GroupedOffsetRewrite extends Rule[LogicalPlan] {
       // minBytes decision is taken AFTER merging by
       // [[DemoteSmallOffsetNodes]] (pre-CBO), where a lone small-input
       // node returns to ONE native window
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            order.forall(_.deterministic) &&
-            PlanGuards.subtreeDeterministic(child) =>
+      case w @ PlanGuards.OrderedWindow(wexprs, part, order, child) =>
         val fns = wexprs.map(supported(_, part, order, cap))
         if (fns.forall(_.isDefined) && trafficOk(opName(part), fns.flatten, part))
           GroupedOffsetNode(part, order, fns.flatten, child)
@@ -292,18 +282,11 @@ case class GroupedOffsetNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[OffsetFn],
-    child: LogicalPlan) extends UnaryNode {
+    child: LogicalPlan) extends GraftWindowNode {
   override def nodeName: String = GroupedOffsetRewrite.opName(part) + "Node"
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
-  // `fns` is opaque to QueryPlan's product scan — expose the offset
-  // INPUT and DEFAULT references so ColumnPruning keeps lagged columns
-  // that are neither group nor order keys (the family lesson).
-  override def references: AttributeSet =
-    AttributeSet(part.flatMap(_.references)) ++
-      AttributeSet(order.flatMap(_.references)) ++
-      AttributeSet(fns.flatMap(f => f.input.references ++ f.default.references))
-  override def maxRows: Option[Long] = child.maxRows
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
+  override def fnReferences: AttributeSet =
+    AttributeSet(fns.flatMap(f => f.input.references ++ f.default.references))
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedOffsetNode =
     copy(child = newChild)
 }
@@ -341,12 +324,6 @@ case class GroupedOffsetNode(
   */
 object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
 
-  private def isFamilyNode(p: LogicalPlan): Boolean = p match {
-    case _: GroupedOffsetNode | _: GroupedRankNode |
-        _: GroupedRunningAggNode | _: SlidingAggNode | _: RangeSlidingAggNode => true
-    case _ => false
-  }
-
   /** Family adjacency THROUGH interposed Projects (r22, the r21
     * advisory): the withColumn idiom routinely leaves a Project
     * between stacked family nodes (CombineRunningNodes itself emits
@@ -356,7 +333,7 @@ object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
     * not demote to a hash-clustered native window in the middle of the
     * pile. */
   private def familyThrough(p: LogicalPlan): Boolean = p match {
-    case _ if isFamilyNode(p) => true
+    case _: GraftWindowNode => true
     case proj: Project => familyThrough(proj.child)
     case _ => false
   }
@@ -384,7 +361,7 @@ object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
       // preserving): it forwards its parent's flag instead of
       // resetting it, so `lag + running-agg` piles separated by the
       // withColumn Projects keep their shared exchange intact
-      val fam = isFamilyNode(other) ||
+      val fam = other.isInstanceOf[GraftWindowNode] ||
         (other.isInstanceOf[Project] && parentIsFamily)
       other.mapChildren(walk(_, parentIsFamily = fam))
   }
@@ -393,34 +370,14 @@ object DemoteSmallOffsetNodes extends Rule[LogicalPlan] {
     walk(plan, parentIsFamily = false)
 }
 
-object GroupedOffsetStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GroupedOffsetNode(part, order, fns, child) =>
-      GroupedOffsetExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
-}
-
 case class GroupedOffsetExec(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[OffsetFn],
-    child: SparkPlan) extends UnaryExecNode {
-
-  // partition keys promoted Ascending/NullsFirst ahead of the frame
-  // order — the grouped family's shared OrderedDistribution, so an
-  // offset node stacks on the same exchange as GroupedRank /
-  // GroupedRunningAgg / SlidingAgg in a WindowSplit pile.
-  private def fullOrder: Seq[SortOrder] =
-    part.map(SortOrder(_, Ascending)) ++ order
+    child: SparkPlan) extends GraftWindowExec {
 
   override def nodeName: String = GroupedOffsetRewrite.opName(part)
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(fullOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(fullOrder)
-  override def outputOrdering: Seq[SortOrder] = fullOrder
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output

@@ -5,10 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LogicalWindow}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
@@ -114,8 +113,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
   * optimizer has — child size: `spark.graft.rank.minBytes` (default
   * 0 = always, the graded configuration) skips the rewrite below a
   * child-size threshold (Spark's autoBroadcastJoinThreshold
-  * precedent), and `spark.graft.rank.enabled=false` is the kill switch
-  * / A-B lever. `spark.graft.rank.longRank=true` widens the zero-key
+  * precedent); excluding the rule
+  * (`spark.sql.optimizer.excludedRules=graft.plans.GroupedRankRewrite`)
+  * is the A-B lever. `spark.graft.rank.longRank=true` widens the zero-key
   * Int-family ranks to LongType past the 2^31 ceiling (see
   * [[RankRange]] and the conf's scaladoc).
   */
@@ -174,7 +174,6 @@ private[plans] object RankFnMatch {
 
 object GroupedRankRewrite extends Rule[LogicalPlan] {
 
-  val ConfKey = "spark.graft.rank.enabled"
   val MinBytesKey = "spark.graft.rank.minBytes"
 
   /** Escape hatch past the IntegerType rank ceiling (default false):
@@ -196,9 +195,6 @@ object GroupedRankRewrite extends Rule[LogicalPlan] {
     * the grouping, not a wider type. */
   val LongRankKey = "spark.graft.rank.longRank"
 
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
-
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
 
@@ -206,45 +202,28 @@ object GroupedRankRewrite extends Rule[LogicalPlan] {
   private[plans] def opName(part: Seq[Expression]): String =
     if (part.isEmpty) "GlobalRank" else "GroupedRank"
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            order.forall(_.deterministic) &&
-            PlanGuards.subtreeDeterministic(child) &&
-            PlanGuards.boundaryTrafficOk(order, part) &&
-            child.stats.sizeInBytes >= minBytes =>
-        val fns = wexprs.map(RankFnMatch.supported(_, part, order, allowLong = part.isEmpty))
-        if (fns.forall(_.isDefined)) GroupedRankNode(part, order, fns.flatten, child)
-        else w
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case w @ PlanGuards.OrderedWindow(wexprs, part, order, child)
+        if PlanGuards.boundaryTrafficOk(order, part) &&
+          child.stats.sizeInBytes >= minBytes =>
+      val fns = wexprs.map(RankFnMatch.supported(_, part, order, allowLong = part.isEmpty))
+      if (fns.forall(_.isDefined)) GroupedRankNode(part, order, fns.flatten, child)
+      else w
   }
 }
 
 /** Logical ranking: child's rows plus one column per rank function
-  * (same exprIds as the window expressions the rewrite replaced, so
-  * downstream references bind unchanged). */
+  * (rank functions read no input columns). */
 case class GroupedRankNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[(Attribute, GlobalRankFn)],
-    child: LogicalPlan) extends UnaryNode {
+    child: LogicalPlan) extends GraftWindowNode {
   override def nodeName: String = GroupedRankRewrite.opName(part) + "Node"
-  override def output: Seq[Attribute] = child.output ++ fns.map(_._1)
-  override def producedAttributes: AttributeSet = AttributeSet(fns.map(_._1))
-  override def maxRows: Option[Long] = child.maxRows
+  override def fnAttrs: Seq[Attribute] = fns.map(_._1)
+  override def fnReferences: AttributeSet = AttributeSet.empty
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedRankNode =
     copy(child = newChild)
-}
-
-object GroupedRankStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GroupedRankNode(part, order, fns, child) =>
-      GroupedRankExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 /** One boundary-group segment: its (projected) group key plus row and
@@ -275,21 +254,10 @@ case class GroupedRankExec(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[(Attribute, GlobalRankFn)],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends GraftWindowExec {
 
   override def nodeName: String = GroupedRankRewrite.opName(part)
-  override def output: Seq[Attribute] = child.output ++ fns.map(_._1)
-
-  /** Group columns participate in the range order ahead of the rank
-    * order — direction is irrelevant to results (groups only need
-    * co-location + contiguity), Ascending/NullsFirst is canonical. */
-  private def groupSort: Seq[SortOrder] = part.map(SortOrder(_, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(groupSort ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(groupSort ++ order)
-  override def outputOrdering: Seq[SortOrder] = groupSort ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def fnAttrs: Seq[Attribute] = fns.map(_._1)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output
@@ -774,6 +742,27 @@ private[graft] object RankRange {
 object PlanGuards extends org.apache.spark.internal.Logging {
   def subtreeDeterministic(p: LogicalPlan): Boolean =
     p.find(n => !n.expressions.forall(_.deterministic)).isEmpty
+
+  /** The ordered-window guard every range-partitioned rewrite (rank,
+    * running, offset, sliding, range-sliding, [[WindowSplit]]) shares:
+    * a window with functions and a deterministic, non-empty order over
+    * a non-streaming, deterministic child (two passes and the range
+    * sampler evaluate order and child repeatedly), whose partition
+    * keys are deterministic AND orderable (they are promoted into
+    * RangePartitioning, a stricter bar than the native window's
+    * hash-clustering). Yields (window expressions, part, order,
+    * child); class-specific guards stay at each call site. */
+  object OrderedWindow {
+    def unapply(p: LogicalPlan)
+    : Option[(Seq[NamedExpression], Seq[Expression], Seq[SortOrder], LogicalPlan)] = p match {
+      case LogicalWindow(wexprs, part, order, child, _)
+          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
+            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
+            order.forall(_.deterministic) && subtreeDeterministic(child) =>
+        Some((wexprs, part, order, child))
+      case _ => None
+    }
+  }
 
   /** Byte guard on pass-1 boundary-KEY driver traffic, the family
     * analogue of the offset class's maxOffset cap. GlobalRank,

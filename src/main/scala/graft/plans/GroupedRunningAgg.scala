@@ -6,10 +6,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate, First}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode, Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
@@ -72,8 +71,9 @@ import org.apache.spark.sql.types.IntegerType
   * (they are promoted into RangePartitioning); order and subtree
   * deterministic; non-streaming child (two jobs, one shuffle); the
   * boundary byte-traffic guard on (part ++ order). Mixed nodes are the
-  * split rules' business. `spark.graft.runningAgg.enabled` is the kill
-  * switch; `spark.graft.runningAgg.minBytes` (default 0 = always fire)
+  * split rules' business. Excluding `graft.plans.GroupedRunningAggRewrite`
+  * (`spark.sql.optimizer.excludedRules`) turns the rewrite off;
+  * `spark.graft.runningAgg.minBytes` (default 0 = always fire)
   * skips the rewrite for small inputs in deployments dominated by
   * many-small-group windows, where the native one-pass plan costs
   * less and nothing is at scale risk.
@@ -81,11 +81,7 @@ import org.apache.spark.sql.types.IntegerType
 object GroupedRunningAggRewrite extends Rule[LogicalPlan] {
   import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.runningAgg.enabled"
   val MinBytesKey = "spark.graft.runningAgg.minBytes"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   private[plans] def minBytes: Long =
     SQLConf.get.getConfString(MinBytesKey, "0").toLong
@@ -139,20 +135,13 @@ object GroupedRunningAggRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            order.forall(_.deterministic) &&
-            PlanGuards.subtreeDeterministic(child) &&
-            PlanGuards.boundaryTrafficOk(order, part) &&
-            child.stats.sizeInBytes >= minBytes =>
-        val fns = wexprs.map(supported(_, part, order))
-        if (fns.forall(_.isDefined)) GroupedRunningAggNode(part, order, fns.flatten, child)
-        else w
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case w @ PlanGuards.OrderedWindow(wexprs, part, order, child)
+        if PlanGuards.boundaryTrafficOk(order, part) &&
+          child.stats.sizeInBytes >= minBytes =>
+      val fns = wexprs.map(supported(_, part, order))
+      if (fns.forall(_.isDefined)) GroupedRunningAggNode(part, order, fns.flatten, child)
+      else w
   }
 }
 
@@ -244,30 +233,12 @@ case class GroupedRunningAggNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[RunningFn],
-    child: LogicalPlan) extends UnaryNode {
+    child: LogicalPlan) extends GraftWindowNode {
   override def nodeName: String = GroupedRunningAggRewrite.opName(part) + "Node"
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
-  // `fns` is a Seq of case-class tuples, which QueryPlan's product
-  // scan does NOT descend into — without this override the aggregate
-  // INPUT columns are invisible to ColumnPruning and get dropped from
-  // the child whenever they are neither group nor order keys (caught
-  // by the RANGE spec's cents column).
-  override def references: AttributeSet =
-    AttributeSet(part.flatMap(_.references)) ++
-      AttributeSet(order.flatMap(_.references)) ++
-      AttributeSet(fns.flatMap(_.fn.references))
-  override def maxRows: Option[Long] = child.maxRows
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
+  override def fnReferences: AttributeSet = AttributeSet(fns.flatMap(_.fn.references))
   override protected def withNewChildInternal(newChild: LogicalPlan): GroupedRunningAggNode =
     copy(child = newChild)
-}
-
-object GroupedRunningAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GroupedRunningAggNode(part, order, fns, child) =>
-      GroupedRunningAggExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 /** The combined-buffer projection kit for a set of declarative
@@ -341,21 +312,10 @@ case class GroupedRunningAggExec(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[RunningFn],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends GraftWindowExec {
 
   override def nodeName: String = GroupedRunningAggRewrite.opName(part)
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-
-  /** Group columns enter the range order ahead of the frame order —
-    * direction irrelevant (groups only need co-location + contiguity),
-    * Ascending/NullsFirst canonical (GroupedRank's convention). */
-  private def groupSort: Seq[SortOrder] = part.map(SortOrder(_, Ascending))
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(groupSort ++ order) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(groupSort ++ order)
-  override def outputOrdering: Seq[SortOrder] = groupSort ++ order
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output

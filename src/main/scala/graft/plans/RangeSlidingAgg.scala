@@ -5,10 +5,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -108,8 +107,9 @@ import org.apache.spark.sql.types._
   * arithmetic saturates at ±2^63 (a saturated bound admits every
   * representable value, which is exactly the unbounded-side
   * semantics). `spark.graft.rangeSlidingAgg.minBytes` (default 0) is
-  * the grouped-family cost lever; kill switch
-  * `spark.graft.rangeSlidingAgg.enabled=false`. Memory: the retention
+  * the grouped-family cost lever; excluding
+  * `graft.plans.RangeSlidingAggRewrite` (`spark.sql.optimizer.excludedRules`)
+  * turns the rewrite off. Memory: the retention
   * window buffers one frame's rows per task (the native plan buffers
   * the SAME rows in one global/per-group task). Since r21 that bound
   * SPILLS instead of failing: past
@@ -131,7 +131,6 @@ import org.apache.spark.sql.types._
 object RangeSlidingAggRewrite extends Rule[LogicalPlan] {
   import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.rangeSlidingAgg.enabled"
   val MinBytesKey = "spark.graft.rangeSlidingAgg.minBytes"
   /** Wide-frame consolidation lever (pass 2a) — named here so the
     * exec, the probes and the specs cannot drift (r19 ADVICE). */
@@ -152,9 +151,6 @@ object RangeSlidingAggRewrite extends Rule[LogicalPlan] {
     * heap + spill-file bytes. 0 disables spilling (the r20 fail-fast
     * behavior). Default 256 MB per task. */
   val SpillThresholdBytesKey = "spark.graft.rangeSlidingAgg.spillThresholdBytes"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   // shared with the split rules' rangeOk checks, so the lever's
   // default cannot drift between the single-class rewrite and a split
@@ -238,23 +234,17 @@ object RangeSlidingAggRewrite extends Rule[LogicalPlan] {
         so.deterministic && orderTypeOk(so.child.dataType)
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
-    plan.transformUp {
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if wexprs.nonEmpty && orderOk(order) && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            PlanGuards.subtreeDeterministic(child) &&
-            PlanGuards.boundaryTrafficOk(order, part) &&
-            child.stats.sizeInBytes >= minBytes =>
-        val fns = wexprs.map(supported(_, part, order))
-        if (fns.forall(_.isDefined)) {
-          logInfo(s"RangeSlidingAggRewrite: planning a ${wexprs.length}-function " +
-            s"bounded RANGE-value window (${part.size} partition keys) on the " +
-            "distributed row-halo operator")
-          RangeSlidingAggNode(part, order, fns.flatten, child)
-        } else w
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case w @ PlanGuards.OrderedWindow(wexprs, part, order, child)
+        if orderOk(order) && PlanGuards.boundaryTrafficOk(order, part) &&
+          child.stats.sizeInBytes >= minBytes =>
+      val fns = wexprs.map(supported(_, part, order))
+      if (fns.forall(_.isDefined)) {
+        logInfo(s"RangeSlidingAggRewrite: planning a ${wexprs.length}-function " +
+          s"bounded RANGE-value window (${part.size} partition keys) on the " +
+          "distributed row-halo operator")
+        RangeSlidingAggNode(part, order, fns.flatten, child)
+      } else w
   }
 }
 
@@ -269,27 +259,11 @@ case class RangeSlidingAggNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[RangeSlidingFn],
-    child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
-  // `fns` is opaque to QueryPlan's product scan — expose the aggregate
-  // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GroupedRunningAggNode lesson).
-  override def references: AttributeSet =
-    AttributeSet(part.flatMap(_.references)) ++
-      AttributeSet(order.flatMap(_.references)) ++
-      AttributeSet(fns.flatMap(_.fn.references))
-  override def maxRows: Option[Long] = child.maxRows
+    child: LogicalPlan) extends GraftWindowNode {
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
+  override def fnReferences: AttributeSet = AttributeSet(fns.flatMap(_.fn.references))
   override protected def withNewChildInternal(newChild: LogicalPlan): RangeSlidingAggNode =
     copy(child = newChild)
-}
-
-object RangeSlidingAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case RangeSlidingAggNode(part, order, fns, child) =>
-      RangeSlidingAggExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 /** A pass-2a halo shuffle record: either one row's projected
@@ -331,7 +305,7 @@ case class RangeSlidingAggExec(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[RangeSlidingFn],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends GraftWindowExec {
 
   override lazy val metrics: Map[String, SQLMetric] = Map(
     "rawHalo" -> SQLMetrics.createMetric(sparkContext,
@@ -341,18 +315,7 @@ case class RangeSlidingAggExec(
     "spillBytes" -> SQLMetrics.createSizeMetric(sparkContext,
       "pass-2b retention bytes spilled to disk"))
 
-  // partition keys promoted Ascending/NullsFirst ahead of the value
-  // order — the family's shared OrderedDistribution, so a RANGE node
-  // stacks on the same exchange as the other grouped/global operators.
-  private def fullOrder: Seq[SortOrder] =
-    part.map(SortOrder(_, Ascending)) ++ order
-
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(fullOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(fullOrder)
-  override def outputOrdering: Seq[SortOrder] = fullOrder
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output

@@ -59,8 +59,9 @@ private[plans] final class SpillCtl(
           s"${RangeSlidingAggRewrite.SpillThresholdBytesKey} the window " +
           s"spills to local disk; this cap bounds the TOTAL footprint). " +
           s"Raise the cap deliberately, narrow the frame, or set " +
-          s"${RangeSlidingAggRewrite.ConfKey}=false to fall back to the " +
-          s"native spilling window.")
+          s"${ExcludedRules.Key}=${RangeSlidingAggRewrite.ruleName} (added " +
+          s"to any rules it already lists) to fall back to the native " +
+          s"spilling window.")
   }
 
   def retain(e: RangeEntry, n: Int): Unit = {

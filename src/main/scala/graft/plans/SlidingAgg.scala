@@ -6,10 +6,9 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, DeclarativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode, Window => LogicalWindow}
-import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.IntegerType
 
@@ -79,18 +78,14 @@ import org.apache.spark.sql.types.IntegerType
   * PRECEDING …`, q25's shape) have an unbounded per-window ROW count
   * and stay native — a value-halo operator is future work, recorded
   * in PLANS.md. `spark.graft.slidingAgg.minBytes` (default 0) is the
-  * grouped-family cost lever; `spark.graft.slidingAgg.enabled=false`
-  * the kill switch.
+  * grouped-family cost lever; excluding `graft.plans.SlidingAggRewrite`
+  * (`spark.sql.optimizer.excludedRules`) turns the rewrite off.
   */
 object SlidingAggRewrite extends Rule[LogicalPlan] {
   import CombineSupport.sameExprs
 
-  val ConfKey = "spark.graft.slidingAgg.enabled"
   val MaxExtentKey = "spark.graft.slidingAgg.maxExtent"
   val MinBytesKey = "spark.graft.slidingAgg.minBytes"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   private def maxExtent: Int =
     SQLConf.get.getConfString(MaxExtentKey, "128").toInt
@@ -135,15 +130,10 @@ object SlidingAggRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     val cap = maxExtent
     plan.transformUp {
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if order.nonEmpty && wexprs.nonEmpty && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            order.forall(_.deterministic) &&
-            PlanGuards.subtreeDeterministic(child) &&
-            child.stats.sizeInBytes >= minBytes =>
+      case w @ PlanGuards.OrderedWindow(wexprs, part, order, child)
+          if child.stats.sizeInBytes >= minBytes =>
         val fns = wexprs.map(supported(_, part, order, cap))
         if (fns.forall(_.isDefined)) {
           val flat = fns.flatten
@@ -171,49 +161,20 @@ case class SlidingAggNode(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[SlidingFn],
-    child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def producedAttributes: AttributeSet = AttributeSet(fns.map(_.attr))
-  // `fns` is opaque to QueryPlan's product scan — expose the aggregate
-  // INPUT references so ColumnPruning keeps columns that are neither
-  // group nor order keys (the GroupedRunningAggNode lesson).
-  override def references: AttributeSet =
-    AttributeSet(part.flatMap(_.references)) ++
-      AttributeSet(order.flatMap(_.references)) ++
-      AttributeSet(fns.flatMap(_.fn.references))
-  override def maxRows: Option[Long] = child.maxRows
+    child: LogicalPlan) extends GraftWindowNode {
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
+  override def fnReferences: AttributeSet = AttributeSet(fns.flatMap(_.fn.references))
   override protected def withNewChildInternal(newChild: LogicalPlan): SlidingAggNode =
     copy(child = newChild)
-}
-
-object SlidingAggStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case SlidingAggNode(part, order, fns, child) =>
-      SlidingAggExec(part, order, fns, planLater(child)) :: Nil
-    case _ => Nil
-  }
 }
 
 case class SlidingAggExec(
     part: Seq[Expression],
     order: Seq[SortOrder],
     fns: Seq[SlidingFn],
-    child: SparkPlan) extends UnaryExecNode {
+    child: SparkPlan) extends GraftWindowExec {
 
-  // partition keys promoted Ascending/NullsFirst ahead of the frame
-  // order — the grouped family's shared OrderedDistribution, so a
-  // sliding node stacks on the same exchange as GroupedRank /
-  // GroupedRunningAgg (and for empty `part` this IS the global
-  // family's OrderedDistribution(order)).
-  private def fullOrder: Seq[SortOrder] =
-    part.map(SortOrder(_, Ascending)) ++ order
-
-  override def output: Seq[Attribute] = child.output ++ fns.map(_.attr)
-  override def requiredChildDistribution: Seq[Distribution] =
-    OrderedDistribution(fullOrder) :: Nil
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(fullOrder)
-  override def outputOrdering: Seq[SortOrder] = fullOrder
-  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def fnAttrs: Seq[Attribute] = fns.map(_.attr)
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOut = child.output

@@ -8,15 +8,14 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode, Window => LogicalWindow, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Grouped top-k as a first-class operator (SURVEY §2 engine
   * components; the §3 "custom LogicalPlan + Rule + SparkStrategy +
   * SparkPlan" tier): the `filter(row_number().over(partitionBy(g)
   * .orderBy(o)) <= k)` idiom is rewritten by [[TopKRewrite]] into
-  * [[TopKPerGroupNode]], planned by [[TopKStrategy]] as a two-phase
+  * [[TopKPerGroupNode]], planned by [[GraftStrategy]] as a two-phase
   * heap-based physical operator.
   *
   * Why it scales better than the window form: WindowExec must SORT
@@ -34,16 +33,11 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * better, so the kernel keeps boundary ties — the kept set can
   * exceed k rows exactly when the output itself does — and the final
   * phase emits SQL rank semantics with gaps), only on a literal
-  * bound, and can be disabled with
-  * `spark.graft.topkRewrite.enabled=false` (the A/B lever the
+  * bound, and is turned off by excluding `graft.plans.TopKRewrite`
+  * (`spark.sql.optimizer.excludedRules`, the A/B lever the
   * equivalence spec uses).
   */
 object TopKRewrite extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.topkRewrite.enabled"
-
-  private def enabled: Boolean =
-    SQLConf.get.getConfString(ConfKey, "true").toBoolean
 
   /** Integer-valued rank-bound literal: the native Int case, plus the
     * Long literal the analyzer coerces comparisons to when the
@@ -113,7 +107,6 @@ object TopKRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformUp {
       case f @ Filter(cond, RankingWindow(rank, ties, part, order, child)) =>
         bound(cond, rank) match {
@@ -147,15 +140,6 @@ case class TopKPerGroupNode(
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerGroupNode =
     copy(child = newChild)
-}
-
-object TopKStrategy extends SparkStrategy {
-  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerGroupNode(group, order, k, rankAttr, child, ties) =>
-      val partial = TopKPartialExec(group, order, k, planLater(child), ties)
-      TopKFinalExec(group, order, k, rankAttr, partial, ties) :: Nil
-    case _ => Nil
-  }
 }
 
 /** Shared heap kernel: bounded per-group top-k over a partition.

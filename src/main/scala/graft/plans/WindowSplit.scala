@@ -72,18 +72,17 @@ import org.apache.spark.sql.internal.SQLConf
   * `lag(x)` in one SELECT may resolve the same tie differently. No SQL
   * contract promises that consistency (it is unspecified even across
   * two separate native queries), and a total ORDER BY restores it
-  * (README documents the caveat next to the kill switch).
+  * (README documents the caveat next to the rule's exclusion).
   *
   * Scope guards are the families' own, conjoined: every window
   * expression claimed by exactly one class via the family rewrites'
   * OWN matchers (the split can never claim an expression the
   * downstream rewrite would then bail on); at least TWO classes
   * present (single-class nodes are the family rewrites' own match);
-  * every PRESENT class's family conf enabled (splitting a class that
-  * would stay native just adds exchanges in front of the same funnel);
-  * partition keys deterministic AND orderable (they are promoted into
-  * RangePartitioning); order and subtree deterministic, non-streaming
-  * child (two jobs per operator, one shuffle); the boundary
+  * no PRESENT class's rewrite in `spark.sql.optimizer.excludedRules`
+  * (splitting a class that would stay native just adds exchanges in
+  * front of the same funnel); the family's ordered-window guard
+  * ([[PlanGuards.OrderedWindow]]); the boundary
   * byte-traffic guard ([[PlanGuards.boundaryTrafficOk]]) on
   * (part ++ order); the child must clear every present family's
   * `minBytes` threshold — below it the single-class node would stay
@@ -96,15 +95,9 @@ import org.apache.spark.sql.internal.SQLConf
   * splitting past the agg rewrite's one structural bail would leave a
   * NATIVE window at the stack bottom: the funnel survives AND the
   * operators above pay a new exchange, strictly worse than not
-  * splitting. Kill switch:
-  * `spark.graft.windowSplit.enabled=false`.
+  * splitting. Excluding `graft.plans.WindowSplit` turns the split off.
   */
 object WindowSplit extends Rule[LogicalPlan] {
-
-  val ConfKey = "spark.graft.windowSplit.enabled"
-
-  private def confOn(key: String): Boolean =
-    SQLConf.get.getConfString(key, "true").toBoolean
 
   private val FullRowFrame =
     SpecifiedWindowFrame(RowFrame, UnboundedPreceding, UnboundedFollowing)
@@ -159,14 +152,9 @@ object WindowSplit extends Rule[LogicalPlan] {
         .filter(_ => RangeSlidingAggRewrite.orderOk(order)).map(CRangeSliding.apply))
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!confOn(ConfKey)) return plan
     plan.transformUp {
-      case w @ LogicalWindow(wexprs, part, order, child, _)
-          if order.nonEmpty && wexprs.length >= 2 && !child.isStreaming &&
-            part.forall(e => e.deterministic && RowOrdering.isOrderable(e.dataType)) &&
-            order.forall(_.deterministic) &&
-            PlanGuards.subtreeDeterministic(child) &&
-            PlanGuards.boundaryTrafficOk(order, part) =>
+      case w @ PlanGuards.OrderedWindow(wexprs, part, order, child)
+          if wexprs.length >= 2 && PlanGuards.boundaryTrafficOk(order, part) =>
         val extentCap =
           SQLConf.get.getConfString(SlidingAggRewrite.MaxExtentKey, "128").toInt
         val offsetCap = GroupedOffsetRewrite.maxOffset
@@ -182,13 +170,11 @@ object WindowSplit extends Rule[LogicalPlan] {
           val rangeSlidings = claimed.collect { case CRangeSliding(f) => f }
           val classes = Seq[Seq[Any]](ranks, runnings, offsets, fullAggs,
             slidings, rangeSlidings).count(_.nonEmpty)
-          val allEnabled =
-            (ranks.isEmpty || confOn(GroupedRankRewrite.ConfKey)) &&
-              (runnings.isEmpty || confOn(GroupedRunningAggRewrite.ConfKey)) &&
-              (offsets.isEmpty || confOn(GroupedOffsetRewrite.ConfKey)) &&
-              (fullAggs.isEmpty || confOn(GroupedAggRewrite.ConfKey)) &&
-              (slidings.isEmpty || confOn(SlidingAggRewrite.ConfKey)) &&
-              (rangeSlidings.isEmpty || confOn(RangeSlidingAggRewrite.ConfKey))
+          val allEnabled = Seq[(Seq[Any], Rule[LogicalPlan])](
+            ranks -> GroupedRankRewrite, runnings -> GroupedRunningAggRewrite,
+            offsets -> GroupedOffsetRewrite, fullAggs -> GroupedAggRewrite,
+            slidings -> SlidingAggRewrite, rangeSlidings -> RangeSlidingAggRewrite)
+            .forall { case (fns, rule) => fns.isEmpty || !ExcludedRules.contains(rule) }
           // each present family's OWN accessor, so a family's default
           // (e.g. the offset class's `auto` gate) cannot drift between
           // its single-class rewrite and the split

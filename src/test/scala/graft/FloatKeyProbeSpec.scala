@@ -42,7 +42,7 @@ class FloatKeyProbeSpec extends AnyFunSuite {
     // RowOrdering treats all NaNs equal, so grouping must match the
     // native NormalizeFloatingNumbers semantics
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.RangeSlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.RangeSlidingAggRewrite) {
         val w = Window.partitionBy($"d").orderBy($"cents")
         data.repartitionByRange(16, $"d", $"cents", $"id")
           .select($"id",
@@ -58,36 +58,27 @@ class FloatKeyProbeSpec extends AnyFunSuite {
     import s.implicits._
     val w = Window.partitionBy($"d").orderBy($"id")
     def q(on: Boolean): Seq[Seq[Row]] = {
-      def withAll[A](v: String)(body: => A): A =
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, v) {
-          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, v) {
-            TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, v) {
-              TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, v) {
-                TestSpark.withConf(graft.plans.WindowSplit.ConfKey, v)(body)
-              }
-            }
-          }
-        }
-      withAll(on.toString) {
-        TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString) {
-          val rankDf = data.select($"id",
-            rank().over(w).as("r"))
-          val runDf = data.select($"id",
-            sum($"cents").over(w).as("run"))
-          val aggDf = data.select($"id",
-            sum($"cents").over(Window.partitionBy($"d")).as("tot"),
-            count(lit(1)).over(Window.partitionBy($"d")).as("n"))
-          val slideDf = data.select($"id",
-            sum($"cents").over(w.rowsBetween(-3, 0)).as("m"))
-          // the sixth grouped operator (r20): the pass-2 key gate
-          // compares evaluated double keys through RowOrdering, which
-          // must reproduce NormalizeFloatingNumbers' NaN/-0.0 grouping
-          val offDf = data.select($"id",
-            lag($"cents", 2, -1L).over(w).as("p2"),
-            lead($"cents", 1).over(w).as("n1"))
-          Seq(rankDf, runDf, aggDf, slideDf, offDf)
-            .map(_.collect().toSeq.sortBy(_.getLong(0)))
-        }
+      TestSpark.withRules(on, graft.plans.GroupedRankRewrite,
+          graft.plans.GroupedRunningAggRewrite, graft.plans.GroupedAggRewrite,
+          graft.plans.SlidingAggRewrite, graft.plans.WindowSplit,
+          graft.plans.GroupedOffsetRewrite) {
+        val rankDf = data.select($"id",
+          rank().over(w).as("r"))
+        val runDf = data.select($"id",
+          sum($"cents").over(w).as("run"))
+        val aggDf = data.select($"id",
+          sum($"cents").over(Window.partitionBy($"d")).as("tot"),
+          count(lit(1)).over(Window.partitionBy($"d")).as("n"))
+        val slideDf = data.select($"id",
+          sum($"cents").over(w.rowsBetween(-3, 0)).as("m"))
+        // the sixth grouped operator (r20): the pass-2 key gate
+        // compares evaluated double keys through RowOrdering, which
+        // must reproduce NormalizeFloatingNumbers' NaN/-0.0 grouping
+        val offDf = data.select($"id",
+          lag($"cents", 2, -1L).over(w).as("p2"),
+          lead($"cents", 1).over(w).as("n1"))
+        Seq(rankDf, runDf, aggDf, slideDf, offDf)
+          .map(_.collect().toSeq.sortBy(_.getLong(0)))
       }
     }
     q(on = true).zip(q(on = false)).zipWithIndex.foreach { case ((g, r), i) =>

@@ -15,7 +15,7 @@ class GlobalAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedAggRewrite)(body)
 
   private def shares(df: DataFrame): DataFrame = {
     val w = Window.partitionBy() // empty spec: the OVER () form

@@ -17,7 +17,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedOffsetRewrite)(body)
 
   private def offsets(df: DataFrame): DataFrame = {
     val w = Window.orderBy(col("k"), col("id"))
@@ -159,7 +159,7 @@ class GlobalOffsetSpec extends AnyFunSuite {
       mixed.collect()
       val mplan = mixed.queryExecution.executedPlan.toString
       assert(mplan.contains("GlobalOffset") && mplan.contains("GlobalRank"), mplan.take(2000))
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+      TestSpark.withoutRules(graft.plans.WindowSplit) {
         val whole = base.select(lag($"k", 1).over(w).as("p"), rank().over(w).as("r"))
         whole.collect()
         val wplan = whole.queryExecution.executedPlan.toString

@@ -17,7 +17,7 @@ class GlobalRankSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedRankRewrite)(body)
 
   private def allSix(df: DataFrame): DataFrame = {
     val w = Window.orderBy(col("k").desc, col("id"))

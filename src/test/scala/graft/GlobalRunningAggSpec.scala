@@ -17,7 +17,7 @@ class GlobalRunningAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite)(body)
 
   // ROWS frame over a total order: the declarative family breadth.
   // (first() is absent deliberately: Spark's OptimizeWindowFunctions

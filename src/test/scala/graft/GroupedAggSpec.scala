@@ -33,7 +33,7 @@ class GroupedAggSpec extends AnyFunSuite {
   }
 
   private def off[A](body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false")(body)
+    TestSpark.withoutRules(graft.plans.GroupedAggRewrite)(body)
 
   /** 6 groups × 1000 rows, exact-long values, stable id sort key. */
   private def data = {
@@ -79,7 +79,7 @@ class GroupedAggSpec extends AnyFunSuite {
     import s.implicits._
     val nd = data.withColumn("gn", when($"g" =!= 0, $"g"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedAggRewrite) {
         val w = Window.partitionBy($"gn")
         val df = nd.select($"id", $"gn",
           sum($"cents").over(w).as("tot"),
@@ -94,7 +94,7 @@ class GroupedAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedAggRewrite) {
         val wExpr = Window.partitionBy(pmod($"id", lit(7L)))
         val wMulti = Window.partitionBy($"g", $"cents" % 10)
         val df = data.select($"id",
@@ -110,7 +110,7 @@ class GroupedAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedAggRewrite) {
         val w = Window.partitionBy($"g").orderBy($"id")
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         val df = data.select($"id",

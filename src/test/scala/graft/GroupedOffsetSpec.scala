@@ -26,7 +26,7 @@ class GroupedOffsetSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedOffsetRewrite)(body)
 
   private def assertSame(got: Seq[Row], ref: Seq[Row], what: String): Unit = {
     val bad = got.zip(ref).filter { case (g, r) => g != r }

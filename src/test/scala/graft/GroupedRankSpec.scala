@@ -17,7 +17,7 @@ class GroupedRankSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedRankRewrite)(body)
 
   private def allSix(df: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("g")).orderBy(col("k").desc, col("id"))

@@ -24,7 +24,7 @@ class GroupedRunningAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite)(body)
 
   private def assertSame(got: Seq[Row], ref: Seq[Row], what: String): Unit = {
     val bad = got.zip(ref).filter { case (g, r) => g != r }
@@ -206,7 +206,7 @@ class GroupedRunningAggSpec extends AnyFunSuite {
       (i.toLong, i / 4500, (i % 4500) / 1500, i % 97, ((i * 31) % 500).toLong)
     }.toDF("id", "g", "o", "k", "cents")
     def q(on: Boolean, rowsOnly: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
         TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
           val w = Window.partitionBy($"g").orderBy($"o")
           val wr = Window.partitionBy($"g").orderBy($"o", $"k", $"id")
@@ -346,8 +346,7 @@ class GroupedRunningAggSpec extends AnyFunSuite {
     assert(nodes == 1, s"tower must merge into ONE node, saw $nodes:\n" +
       plan.take(2500))
     val got = q().collect().toSeq.sortBy(_.getLong(0))
-    val ref = TestSpark.withConf(
-        graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+    val ref = TestSpark.withoutRules(graft.plans.GroupedRunningAggRewrite) {
       q().collect().toSeq.sortBy(_.getLong(0))
     }
     assertSame(got, ref, "merged running tower vs native")
@@ -362,8 +361,7 @@ class GroupedRunningAggSpec extends AnyFunSuite {
       depPlan.split("== Initial Plan ==").head).length
     assert(depNodes == 2, s"dependent tower must stay stacked, saw $depNodes")
     val gotDep = dep().collect().toSeq.sortBy(_.getLong(0))
-    val refDep = TestSpark.withConf(
-        graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+    val refDep = TestSpark.withoutRules(graft.plans.GroupedRunningAggRewrite) {
       dep().collect().toSeq.sortBy(_.getLong(0))
     }
     assertSame(gotDep, refDep, "dependent running tower vs native")

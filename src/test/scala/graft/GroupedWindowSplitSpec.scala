@@ -45,13 +45,8 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
   /** The split plus the grouped family rules off → guaranteed-native
     * reference run. */
   private def allOff[A](body: => A): A =
-    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false")(body)
-        }
-      }
-    }
+    TestSpark.withoutRules(graft.plans.WindowSplit, graft.plans.GroupedRankRewrite,
+      graft.plans.GroupedRunningAggRewrite, graft.plans.GroupedOffsetRewrite)(body)
 
   /** 4 interleaved groups × 25-row order-tie runs: every partition of
     * a (g, o) range exchange holds group fragments, and o ties are
@@ -109,7 +104,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     import s.implicits._
     val nd = data.withColumn("cn", when($"id" % 7 =!= 0, $"cents"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"g").orderBy($"o".desc)
         val df = nd.select($"id",
           rank().over(w).as("r"), cume_dist().over(w).as("cd"),
@@ -129,7 +124,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // stacks. The (o, id) order is total per group, so the lag values
     // are deterministic and bit-equality well-defined.
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = data.select($"id", rank().over(w).as("r"),
           sum($"cents").over(w).as("run"),
@@ -182,13 +177,13 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     def assertNative(p: String, what: String): Unit =
       assert(!p.contains("GroupedRank") && !p.contains("GroupedRunningAgg"),
         s"$what must stay native:\n" + p.take(2000))
-    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-      assertNative(plan(), "kill switch off")
+    TestSpark.withoutRules(graft.plans.WindowSplit) {
+      assertNative(plan(), "split excluded")
     }
-    TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
+    TestSpark.withoutRules(graft.plans.GroupedRankRewrite) {
       assertNative(plan(), "rank family off")
     }
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+    TestSpark.withoutRules(graft.plans.GroupedRunningAggRewrite) {
       assertNative(plan(), "running family off")
     }
     // below EITHER family's minBytes the single-class node would stay
@@ -223,7 +218,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         (i.toLong, i / 2500, (i % 2500) / 100, ((i * 13) % 500).toLong)
       }.toDF("id", "g", "o", "cents")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.WindowSplit) {
           val w = Window.partitionBy($"g").orderBy($"o")
           val df = df0
             .orderBy($"g", $"o", $"id") // the finer exchange the stack must reuse
@@ -253,7 +248,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
       // stack THREE operators on the ONE pre-existing exchange, with
       // group segments still split at every partition boundary
       def q3(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.WindowSplit) {
           val wt = Window.partitionBy($"g").orderBy($"o", $"id")
           val df = df0
             .orderBy($"g", $"o", $"id")
@@ -288,7 +283,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // stacked-split configuration)
     val nd = data.withColumn("gn", when($"g" =!= 0, $"g"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"gn").orderBy($"o")
         val df = nd.select($"id",
           rank().over(w).as("r"), cume_dist().over(w).as("cd"),
@@ -307,7 +302,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // still exercising the First/NthValue claim through classify
     val nd = data.withColumn("cn", when($"id" % 5 =!= 0, $"cents"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = nd.select($"id",
           rank().over(w).as("r"),
@@ -335,29 +330,24 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
              sum(cents) OVER (ORDER BY o)                AS arun
       FROM gmix_cross_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
-        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
-          val df = s.sql(sqlText)
-          if (on) {
-            val plan = df.queryExecution.executedPlan.toString
-            for (op <- Seq("GroupedRank", "GroupedRunningAgg",
-                "GlobalRank", "GlobalRunningAgg"))
-              assert(plan.contains(op),
-                s"$op missing from the cross-family plan:\n" + plan.take(3000))
-            assert(!plan.contains("Window ["),
-              "no native WindowExec may survive either split:\n" + plan.take(3000))
-            assert(!plan.contains("Exchange hashpartitioning"),
-              "no hash exchange in the cross-family plan:\n" + plan.take(3000))
-          }
-          df.collect().toSeq.sortBy(_.getLong(0))
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
+        val df = s.sql(sqlText)
+        if (on) {
+          val plan = df.queryExecution.executedPlan.toString
+          for (op <- Seq("GroupedRank", "GroupedRunningAgg",
+              "GlobalRank", "GlobalRunningAgg"))
+            assert(plan.contains(op),
+              s"$op missing from the cross-family plan:\n" + plan.take(3000))
+          assert(!plan.contains("Window ["),
+            "no native WindowExec may survive either split:\n" + plan.take(3000))
+          assert(!plan.contains("Exchange hashpartitioning"),
+            "no hash exchange in the cross-family plan:\n" + plan.take(3000))
         }
+        df.collect().toSeq.sortBy(_.getLong(0))
       }
     def globalsOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false")(body)
-        }
-      }
+      TestSpark.withoutRules(graft.plans.WindowSplit, graft.plans.GroupedRankRewrite,
+        graft.plans.GroupedRunningAggRewrite)(body)
     assertSame(q(on = true), globalsOff(allOff(q(on = false))),
       "grouped + global mixed windows in one select")
   }
@@ -383,7 +373,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
                                          AND UNBOUNDED FOLLOWING) AS n
       FROM gmix3_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -400,7 +390,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         df.collect().toSeq.sortBy(_.getLong(0))
       }
     def gaggOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false")(body)
+      TestSpark.withoutRules(graft.plans.GroupedAggRewrite)(body)
     assertSame(q(on = true), gaggOff(allOff(q(on = false))),
       "three-class mixed grouped split")
   }
@@ -409,7 +399,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         val df = data.select($"id",
@@ -424,7 +414,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         df.collect().toSeq.sortBy(_.getLong(0))
       }
     def gaggOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false")(body)
+      TestSpark.withoutRules(graft.plans.GroupedAggRewrite)(body)
     assertSame(q(on = true), gaggOff(allOff(q(on = false))),
       "running + full-frame grouped split")
     // offset member alongside a full-frame agg (r20): two claimable
@@ -432,7 +422,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     // Window that GroupedAggRewrite consumes (aggregate + join-back)
     val wLag = Window.partitionBy($"g").orderBy($"o", $"id")
     def q2(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val df = data.select($"id",
           lag($"cents", 1).over(wLag).as("prev"),
           sum($"cents").over(wLag.rowsBetween(
@@ -459,7 +449,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     }.toDF("id", "g", "o", "cents")
     val w = Window.partitionBy($"g").orderBy($"o")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val df = six.select($"id", $"g",
           rank().over(w).as("r"),
           sum($"cents").over(w).as("run"),
@@ -485,11 +475,8 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         df.collect().toSeq.sortBy(_.getLong(0))
       }
     def gaggOff2[A](body: => A): A =
-      TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.RangeSlidingAggRewrite.ConfKey, "false")(body)
-        }
-      }
+      TestSpark.withoutRules(graft.plans.GroupedAggRewrite, graft.plans.SlidingAggRewrite,
+        graft.plans.RangeSlidingAggRewrite)(body)
     assertSame(q(on = true), gaggOff2(allOff(q(on = false))),
       "six-class grouped split")
   }
@@ -498,7 +485,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = data.select($"id",
           rank().over(w).as("r"),
@@ -525,7 +512,7 @@ class GroupedWindowSplitSpec extends AnyFunSuite {
         df.collect().toSeq.sortBy(_.getLong(0))
       }
     def slidingOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, "false")(body)
+      TestSpark.withoutRules(graft.plans.SlidingAggRewrite)(body)
     assertSame(q(on = true), slidingOff(allOff(q(on = false))),
       "grouped mixed split with a sliding member")
   }

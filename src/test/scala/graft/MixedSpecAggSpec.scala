@@ -34,19 +34,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class MixedSpecAggSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val AllConfKeys = Seq(
-    graft.plans.WindowSplit.ConfKey,
-    graft.plans.GroupedRankRewrite.ConfKey,
-    graft.plans.GroupedRunningAggRewrite.ConfKey,
-    graft.plans.GroupedOffsetRewrite.ConfKey,
-    graft.plans.GroupedAggRewrite.ConfKey,
-    graft.plans.SlidingAggRewrite.ConfKey,
-    graft.plans.RangeSlidingAggRewrite.ConfKey)
-
   /** Native reference: every graft window rewrite off. */
   private def allOff[A](body: => A): A =
-    AllConfKeys.foldRight(() => body)((k, b) =>
-      () => TestSpark.withConf(k, "false")(b())).apply()
+    TestSpark.withoutRules(
+      graft.plans.WindowSplit,
+      graft.plans.GroupedRankRewrite,
+      graft.plans.GroupedRunningAggRewrite,
+      graft.plans.GroupedOffsetRewrite,
+      graft.plans.GroupedAggRewrite,
+      graft.plans.SlidingAggRewrite,
+      graft.plans.RangeSlidingAggRewrite)(body)
 
   private def assertSame(got: Seq[Row], ref: Seq[Row], what: String): Unit = {
     assert(got.size == ref.size, s"$what: size ${got.size} != ${ref.size}")

@@ -35,15 +35,9 @@ class MixedWindowSplitSpec extends AnyFunSuite {
 
   /** All five levers at once: the split plus the four family rules. */
   private def allOff[A](body: => A): A =
-    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, "false") {
-            TestSpark.withConf(graft.plans.GroupedAggRewrite.ConfKey, "false")(body)
-          }
-        }
-      }
-    }
+    TestSpark.withoutRules(graft.plans.WindowSplit, graft.plans.GroupedRankRewrite,
+      graft.plans.GroupedRunningAggRewrite, graft.plans.GroupedOffsetRewrite,
+      graft.plans.GroupedAggRewrite)(body)
 
   private def data = {
     val s = spark
@@ -110,7 +104,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
                               AND 2 FOLLOWING) AS band
       FROM mix5_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.WindowSplit) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -128,7 +122,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
         df.collect().toSeq.sortBy(_.getLong(0))
       }
     def slidingOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, "false")(body)
+      TestSpark.withoutRules(graft.plans.SlidingAggRewrite)(body)
     assertSame(q(on = true), slidingOff(allOff(q(on = false))),
       "five-class mixed split with a sliding member")
   }
@@ -137,7 +131,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withRules(splitOn, graft.plans.WindowSplit) {
         // rank/dense_rank/cume_dist and the RANGE-frame running sum
         // are tie-STABLE, so bit-equality is well-defined under the
         // 100-row d tie groups even though the order is not total
@@ -181,14 +175,14 @@ class MixedWindowSplitSpec extends AnyFunSuite {
         sum($"cents").over(w).as("run"))
       df.queryExecution.executedPlan.toString
     }
-    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+    TestSpark.withoutRules(graft.plans.WindowSplit) {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
     // a disabled family means its class would stay a native funnel —
     // splitting then just adds exchanges in front of it, so the rule
     // must leave the node whole
-    TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
+    TestSpark.withoutRules(graft.plans.GroupedRunningAggRewrite) {
       val p = plan()
       assert(!p.contains("GlobalRank") && !p.contains("GlobalRunningAgg"), p.take(2000))
     }
@@ -239,7 +233,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
              nth_value(cn, 1) OVER (ORDER BY id) AS nv1
       FROM fv_t"""
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
         val df = s.sql(sqlText)
         if (on) {
           val plan = df.queryExecution.executedPlan.toString
@@ -284,7 +278,7 @@ class MixedWindowSplitSpec extends AnyFunSuite {
     // the full distributed ranking and the filter applies above it
     val w = Window.orderBy($"id")
     def q(splitOn: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, splitOn.toString) {
+      TestSpark.withRules(splitOn, graft.plans.WindowSplit) {
         val df = data.select($"id", rank().over(w).as("r"),
             sum($"cents").over(w).as("run"))
           .filter($"r" <= 100)

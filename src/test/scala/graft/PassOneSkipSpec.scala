@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -37,12 +38,12 @@ class PassOneSkipSpec extends AnyFunSuite {
       withConf("spark.sql.shuffle.partitions", "1")(body)
     }
 
-  /** Runs `mk` under the kill-switch conf flip; returns (operator
-    * rows, native rows, jobs in the operator run's group). */
-  private def flipCount(confKey: String, tag: String)
+  /** Runs `mk` with and without `rule`; returns (operator rows,
+    * native rows, jobs in the operator run's group). */
+  private def flipCount(rule: Rule[_], tag: String)
       (mk: () => DataFrame): (Seq[Row], Seq[Row], Int) = {
     val s = spark
-    def run(on: Boolean): (Seq[Row], Int) = withConf(confKey, on.toString) {
+    def run(on: Boolean): (Seq[Row], Int) = withRules(on, rule) {
       onePartition {
         val gid = s"p1skip-$tag-$on"
         s.sparkContext.setJobGroup(gid, "r21 pass-1 skip canary")
@@ -57,12 +58,11 @@ class PassOneSkipSpec extends AnyFunSuite {
     (onRows, offRows, onJobs)
   }
 
-  private def check(confKey: String, op: String, tag: String)
+  private def check(rule: Rule[_], op: String, tag: String)
       (mk: () => DataFrame): Unit = {
-    val plan = withConf(confKey, "true")(
-      onePartition(mk().queryExecution.executedPlan.toString))
+    val plan = onePartition(mk().queryExecution.executedPlan.toString)
     assert(plan.contains(op), s"$op must be live:\n" + plan.take(2000))
-    val (onRows, offRows, onJobs) = flipCount(confKey, tag)(mk)
+    val (onRows, offRows, onJobs) = flipCount(rule, tag)(mk)
     assert(onRows == offRows, s"$op single-partition rows must equal native")
     assert(onJobs == 1,
       s"$op: pass 1 must be skipped on one post-exchange partition — " +
@@ -80,7 +80,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"), col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grun") { () =>
+    check(plans.GroupedRunningAggRewrite, "GlobalRunningAgg", "grun") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
@@ -88,7 +88,7 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GlobalRunningAgg RANGE frames: single partition skips the prefix job") {
     val w = Window.orderBy(col("o"))
       .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GroupedRunningAggRewrite.ConfKey, "GlobalRunningAgg", "grunR") { () =>
+    check(plans.GroupedRunningAggRewrite, "GlobalRunningAgg", "grunR") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
@@ -96,14 +96,14 @@ class PassOneSkipSpec extends AnyFunSuite {
   test("GroupedRunningAgg: single partition skips the segment-chain job") {
     val w = Window.partitionBy(col("g")).orderBy(col("o"), col("id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    check(plans.GroupedRunningAggRewrite.ConfKey, "GroupedRunningAgg", "grpRun") { () =>
+    check(plans.GroupedRunningAggRewrite, "GroupedRunningAgg", "grpRun") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("run"))
     }
   }
 
   test("SlidingAgg: single partition skips the boundary-ring job") {
     val w = Window.orderBy(col("o"), col("id")).rowsBetween(-3, 2)
-    check(plans.SlidingAggRewrite.ConfKey, "SlidingAgg", "slide") { () =>
+    check(plans.SlidingAggRewrite, "SlidingAgg", "slide") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("s"),
         min(col("cents")).over(w).as("m"))
     }
@@ -111,14 +111,14 @@ class PassOneSkipSpec extends AnyFunSuite {
 
   test("RangeSlidingAgg: single partition skips the edge job AND the halo scan/shuffle") {
     val w = Window.orderBy(col("o")).rangeBetween(-50, 0)
-    check(plans.RangeSlidingAggRewrite.ConfKey, "RangeSlidingAgg", "range") { () =>
+    check(plans.RangeSlidingAggRewrite, "RangeSlidingAgg", "range") { () =>
       data.select(col("id"), sum(col("cents")).over(w).as("s"))
     }
   }
 
   test("GlobalRank rank-only: single partition skips the stats job") {
     val w = Window.orderBy(col("o"), col("id"))
-    check(plans.GroupedRankRewrite.ConfKey, "GlobalRank", "grank") { () =>
+    check(plans.GroupedRankRewrite, "GlobalRank", "grank") { () =>
       data.select(col("id"), rank().over(w).as("r"),
         dense_rank().over(w).as("d"), row_number().over(w).as("rn"))
     }
@@ -129,11 +129,10 @@ class PassOneSkipSpec extends AnyFunSuite {
     val w = Window.orderBy(col("o"), col("id"))
     val mk = () => data.select(col("id"), rank().over(w).as("r"),
       percent_rank().over(w).as("p"))
-    val plan = withConf(plans.GroupedRankRewrite.ConfKey, "true")(
-      onePartition(mk().queryExecution.executedPlan.toString))
+    val plan = onePartition(mk().queryExecution.executedPlan.toString)
     assert(plan.contains("GlobalRank"), plan.take(2000))
     val (onRows, offRows, onJobs) =
-      flipCount(plans.GroupedRankRewrite.ConfKey, "grankP")(mk)
+      flipCount(plans.GroupedRankRewrite, "grankP")(mk)
     assert(onRows == offRows, "percent_rank single-partition rows must equal native")
     assert(onJobs == 2,
       s"percent_rank needs totalN before the first emit — pass 1 must " +
@@ -142,7 +141,7 @@ class PassOneSkipSpec extends AnyFunSuite {
 
   test("GroupedRank all six fns: single partition skips the segment job") {
     val w = Window.partitionBy(col("g")).orderBy(col("o"), col("id"))
-    check(plans.GroupedRankRewrite.ConfKey, "GroupedRank", "grpRank") { () =>
+    check(plans.GroupedRankRewrite, "GroupedRank", "grpRank") { () =>
       data.select(col("id"), rank().over(w).as("r"),
         dense_rank().over(w).as("d"), row_number().over(w).as("rn"),
         percent_rank().over(w).as("p"), cume_dist().over(w).as("c"),
@@ -171,10 +170,8 @@ class PassOneSkipSpec extends AnyFunSuite {
       val rows = onePartition(mk().collect().toSeq.sortBy(_.getLong(0)))
       (rows, s.sparkContext.statusTracker.getJobIdsForGroup(gid).length)
     } finally s.sparkContext.clearJobGroup()
-    val ref = withConf(plans.WindowSplit.ConfKey, "false") {
-      withConf(plans.GroupedRankRewrite.ConfKey, "false") {
-        onePartition(mk().collect().toSeq.sortBy(_.getLong(0)))
-      }
+    val ref = withoutRules(plans.WindowSplit, plans.GroupedRankRewrite) {
+      onePartition(mk().collect().toSeq.sortBy(_.getLong(0)))
     }
     assert(got._1 == ref, "stacked single-partition plan must equal native")
     assert(got._2 == 1,

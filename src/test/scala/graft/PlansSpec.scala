@@ -155,14 +155,13 @@ class PlansSpec extends AnyFunSuite {
     assert(!plan.contains("WindowExec") && !plan.contains("Window ("),
       "the window node must be gone")
     val got = withRule.collect().map(_.toSeq).toSet
-    s.conf.set(graft.plans.TopKRewrite.ConfKey, "false")
-    try {
+    withoutRules(graft.plans.TopKRewrite) {
       val reference = topkDf
       assert(!reference.queryExecution.executedPlan.toString.contains("TopKFinal"),
-        "conf flag must disable the rewrite")
+        "excluding the rule must disable the rewrite")
       assert(reference.collect().map(_.toSeq).toSet == got,
         "heap operator must reproduce the window plan's rows exactly")
-    } finally s.conf.set(graft.plans.TopKRewrite.ConfKey, "true")
+    }
   }
 
   test("TopKRewrite handles the global (no-partition) window and k > group size") {
@@ -220,8 +219,7 @@ class PlansSpec extends AnyFunSuite {
       def run() = df.withColumn("rnk", row_number().over(w)).filter($"rnk" <= k)
         .select($"g", $"rnk", $"id").collect().map(_.toSeq).toSet
       val withOp = run()
-      s.conf.set(graft.plans.TopKRewrite.ConfKey, "false")
-      val reference = try run() finally s.conf.set(graft.plans.TopKRewrite.ConfKey, "true")
+      val reference = withoutRules(graft.plans.TopKRewrite)(run())
       assert(withOp == reference, s"trial $trial (groups=$nGroups n=$n k=$k) diverged")
     }
   }
@@ -245,9 +243,7 @@ class PlansSpec extends AnyFunSuite {
       assert(ranked.queryExecution.executedPlan.toString.contains("TopKFinal"),
         s"trial $trial: rank() window must rewrite to the heap operator")
       val withOp = ranked.collect().map(_.toSeq).toSet
-      s.conf.set(graft.plans.TopKRewrite.ConfKey, "false")
-      val reference = try ranked.collect().map(_.toSeq).toSet
-      finally s.conf.set(graft.plans.TopKRewrite.ConfKey, "true")
+      val reference = withoutRules(graft.plans.TopKRewrite)(ranked.collect().map(_.toSeq).toSet)
       assert(withOp == reference,
         s"trial $trial (groups=$nGroups n=$n k=$k) diverged from the window plan")
     }

@@ -17,7 +17,7 @@ class RangeSlidingAggSpec extends AnyFunSuite {
   import TestSpark._
 
   private def withRule[A](on: Boolean)(body: => A): A =
-    TestSpark.withConf(graft.plans.RangeSlidingAggRewrite.ConfKey, on.toString)(body)
+    TestSpark.withRules(on, graft.plans.RangeSlidingAggRewrite)(body)
 
   private def assertSame(got: Seq[Row], ref: Seq[Row], what: String): Unit = {
     assert(got.size == ref.size, s"$what: size ${got.size} != ${ref.size}")
@@ -163,12 +163,9 @@ class RangeSlidingAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def allOff[A](body: => A): A =
-      TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "false") {
-          TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, "false") {
-            withRule(on = false)(body)
-          }
-        }
+      TestSpark.withoutRules(graft.plans.WindowSplit, graft.plans.GroupedRankRewrite,
+          graft.plans.GroupedRunningAggRewrite) {
+        withRule(on = false)(body)
       }
     // global: the analyzer merges all three classes into ONE node
     def gq(): DataFrame = {
@@ -609,7 +606,7 @@ class RangeSlidingAggSpec extends AnyFunSuite {
         val all = messages(ex).mkString("\n")
         assert(all.contains(graft.plans.RangeSlidingAggRewrite.MaxRetainedBytesKey),
           s"the failure must name the conf to raise:\n$all")
-        assert(all.contains(graft.plans.RangeSlidingAggRewrite.ConfKey),
+        assert(all.contains(graft.plans.RangeSlidingAggRewrite.ruleName),
           s"the failure must name the native fallback:\n$all")
       }
     }
@@ -617,6 +614,36 @@ class RangeSlidingAggSpec extends AnyFunSuite {
     val got = withRule(on = true)(q().collect().toSeq.sortBy(_.getLong(0)))
     val ref = withRule(on = false)(q().collect().toSeq.sortBy(_.getLong(0)))
     assertSame(got, ref, "dense full-cover frame under the default ceiling")
+  }
+
+  test("maxRetainedBytes: the fallback setting the failure names plans native and returns the operator's rows") {
+    val s = spark
+    import s.implicits._
+    def q(): DataFrame = {
+      val w = Window.orderBy($"o")
+      data.select($"id",
+        sum($"cn").over(w.rangeBetween(-100000, 100000)).as("tot"),
+        count($"cn").over(w.rangeBetween(-100000, 100000)).as("n"))
+    }
+    val operatorRows = q().collect().toSeq.sortBy(_.getLong(0))
+    TestSpark.withConf(graft.plans.RangeSlidingAggRewrite.MaxRetainedBytesKey, "20000") {
+      val ex = intercept[Exception] { q().collect() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      // the `key=value` the failure tells the user to set, verbatim
+      val named = messages(ex)
+        .flatMap("""(\S+)=(\S+) \(added to any rules""".r.findFirstMatchIn(_)).headOption
+        .getOrElse(fail("no fallback setting named in:\n" + messages(ex).mkString("\n")))
+      TestSpark.withConf(named.group(1), named.group(2)) {
+        val df = q()
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("RangeSlidingAgg"),
+          s"${named.matched} must plan native:\n" + plan.take(2500))
+        assertSame(df.collect().toSeq.sortBy(_.getLong(0)), operatorRows,
+          s"native rows under ${named.matched}")
+      }
+    }
   }
 
   /** Runs df, returns (sorted rows, spillBytes metric). */

@@ -41,7 +41,7 @@ class SlidingAggSpec extends AnyFunSuite {
   }
 
   private def off[A](body: => A): A =
-    TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, "false")(body)
+    TestSpark.withoutRules(graft.plans.SlidingAggRewrite)(body)
 
   /** 6 interleaved groups × 1000 rows, exact longs, tie-free (o, id)
     * order per group; with 4 shuffle partitions every frame of width
@@ -89,7 +89,7 @@ class SlidingAggSpec extends AnyFunSuite {
       .withColumn("gn", when($"g" =!= 0, $"g"))
       .withColumn("cn", when($"id" % 7 =!= 0, $"cents"))
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.partitionBy($"gn").orderBy($"o", $"id")
         val df = nd.select($"id",
           sum($"cn").over(w.rowsBetween(-3, 0)).as("trail"),
@@ -109,7 +109,7 @@ class SlidingAggSpec extends AnyFunSuite {
     val tiny = s.range(40).select($"id", ($"id" * 13 % 29).as("v"))
       .repartitionByRange(16, $"id")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.orderBy($"id")
         val df = tiny.select($"id",
           sum($"v").over(w.rowsBetween(-7, 0)).as("t"),
@@ -129,7 +129,7 @@ class SlidingAggSpec extends AnyFunSuite {
     val tiny = s.range(200).select($"id", ($"id" * 31 % 17).as("v"))
       .repartitionByRange(64, $"id")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.orderBy($"id")
         val df = tiny.select($"id",
           sum($"v").over(w.rowsBetween(-128, 0)).as("t"),
@@ -146,7 +146,7 @@ class SlidingAggSpec extends AnyFunSuite {
     import s.implicits._
     val finer = data.repartitionByRange(13, $"g", $"o", $"id")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = finer.select($"id", $"g", $"o",
           sum($"cents").over(w.rowsBetween(-4, 1)).as("m"))
@@ -169,7 +169,7 @@ class SlidingAggSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.partitionBy($"g").orderBy($"o", $"id")
         val df = data.select($"id",
           sum($"cents").over(w.rowsBetween(-5, -2)).as("past"),
@@ -195,7 +195,7 @@ class SlidingAggSpec extends AnyFunSuite {
       .withColumn("cn", when($"id" % 5 =!= 0, $"dc"))
       .repartitionByRange(11, $"g", $"o".desc, $"id", $"cents")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.partitionBy($"g").orderBy($"o".desc, $"id")
         // every finer key stays in the output projection — else
         // ColumnPruning degrades the reused exchange's
@@ -233,7 +233,7 @@ class SlidingAggSpec extends AnyFunSuite {
         (($"id" * 37) % 100).as("v"))
       .repartitionByRange(16, $"g", $"id")
     def q(on: Boolean): Seq[Row] =
-      TestSpark.withConf(graft.plans.SlidingAggRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.SlidingAggRewrite) {
         val w = Window.partitionBy($"g").orderBy($"id")
         val df = one.select($"id", $"g",
           sum($"v").over(w.rowsBetween(1, 8)).as("future"),
@@ -293,7 +293,7 @@ class SlidingAggSpec extends AnyFunSuite {
       sum($"cents").over(w).as("run")))
     assert(mixedPlan.contains("SlidingAgg") && mixedPlan.contains("GroupedRunningAgg"),
       "mixed sliding+running now belongs to the split:\n" + mixedPlan.take(2000))
-    TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+    TestSpark.withoutRules(graft.plans.WindowSplit) {
       assert(planOf(data.select($"id",
         sum($"cents").over(w.rowsBetween(-3, 0)).as("m"),
         sum($"cents").over(w).as("run"))).contains("Window ["),

@@ -61,7 +61,7 @@ class SplitOffsetGuardSpec extends AnyFunSuite {
         "the split must not force the offset operator past the cap:\n" + plan.take(2500))
       assert(plan.contains("Window ["), "the mixed node must stay native:\n" + plan.take(2500))
       val got = rows(mixed())
-      val ref = TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+      val ref = TestSpark.withoutRules(graft.plans.WindowSplit) {
         rows(mixed())
       }
       assert(got == ref, "mixed global node vs native")
@@ -95,7 +95,7 @@ class SplitOffsetGuardSpec extends AnyFunSuite {
         "the split must not force the offset operator past the cap:\n" + plan.take(2500))
       assert(plan.contains("Window ["), "the mixed node must stay native:\n" + plan.take(2500))
       val got = rows(mixed())
-      val ref = TestSpark.withConf(graft.plans.WindowSplit.ConfKey, "false") {
+      val ref = TestSpark.withoutRules(graft.plans.WindowSplit) {
         rows(mixed())
       }
       assert(got == ref, "mixed grouped node vs native")

@@ -86,7 +86,7 @@ class TieSplitSpec extends AnyFunSuite {
     import s.implicits._
     noCoalesce {
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRankRewrite) {
           val w = Window.orderBy($"d")
           val df = tieData
             .orderBy($"d", $"k") // finer range exchange the exec must reuse
@@ -108,29 +108,27 @@ class TieSplitSpec extends AnyFunSuite {
       // rows of a larger d), and ntile is exactly Spark's fill
       // formula applied to that row_number. With rank from the same
       // node (bit-checked above) the six functions are all covered.
-      TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, "true") {
-        val w = Window.orderBy($"d")
-        val df = tieData.orderBy($"d", $"k")
-          .select($"id", $"k", ($"id" / 100).cast("int").as("d0"),
-            row_number().over(w).as("rn"), ntile(7).over(w).as("n7"))
-        val rows = df.collect()
-        assertReused(df, "GlobalRank")
-        val n = rows.length
-        assert(rows.map(_.getInt(3)).sorted.toSeq == (1 to n), "rn must be a 1..N permutation")
-        // monotone: max rn of tie group d < min rn of tie group d+1
-        val byD = rows.groupBy(_.getInt(2)).view.mapValues(_.map(_.getInt(3))).toMap
-        for (d <- 0 until 99)
-          assert(byD(d).max < byD(d + 1).min, s"rn not d-monotone at d=$d")
-        // ntile(7): Spark's fill rule over the global rn
-        val q7 = n / 7
-        val r7 = n % 7
-        rows.foreach { r =>
-          val rn = r.getInt(3).toLong
-          val big = q7 + 1L
-          val t = r7 * big
-          val want = if (rn <= t) (rn - 1) / big + 1 else r7 + (rn - 1 - t) / q7 + 1
-          assert(r.getInt(4).toLong == want, s"ntile mismatch at rn=$rn")
-        }
+      val w = Window.orderBy($"d")
+      val df = tieData.orderBy($"d", $"k")
+        .select($"id", $"k", ($"id" / 100).cast("int").as("d0"),
+          row_number().over(w).as("rn"), ntile(7).over(w).as("n7"))
+      val rows = df.collect()
+      assertReused(df, "GlobalRank")
+      val n = rows.length
+      assert(rows.map(_.getInt(3)).sorted.toSeq == (1 to n), "rn must be a 1..N permutation")
+      // monotone: max rn of tie group d < min rn of tie group d+1
+      val byD = rows.groupBy(_.getInt(2)).view.mapValues(_.map(_.getInt(3))).toMap
+      for (d <- 0 until 99)
+        assert(byD(d).max < byD(d + 1).min, s"rn not d-monotone at d=$d")
+      // ntile(7): Spark's fill rule over the global rn
+      val q7 = n / 7
+      val r7 = n % 7
+      rows.foreach { r =>
+        val rn = r.getInt(3).toLong
+        val big = q7 + 1L
+        val t = r7 * big
+        val want = if (rn <= t) (rn - 1) / big + 1 else r7 + (rn - 1 - t) / q7 + 1
+        assert(r.getInt(4).toLong == want, s"ntile mismatch at rn=$rn")
       }
     }
   }
@@ -144,7 +142,7 @@ class TieSplitSpec extends AnyFunSuite {
       // driver chain must cross multi-partition runs, not just edges.
       val df0 = (0 until 9000).map(i => (i.toLong, i / 3000, i % 750)).toDF("id", "d", "k")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRankRewrite) {
           val w = Window.orderBy($"d")
           val df = df0.repartitionByRange(16, $"d", $"k")
             .select($"id", $"k", rank().over(w).as("r"), dense_rank().over(w).as("dr"),
@@ -162,7 +160,7 @@ class TieSplitSpec extends AnyFunSuite {
     import s.implicits._
     noCoalesce {
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
           val df = tieData
             .orderBy($"d", $"k")
             .select($"id", $"k",
@@ -184,7 +182,7 @@ class TieSplitSpec extends AnyFunSuite {
       val df0 = (0 until 9000).map(i => (i.toLong, i / 3000, i % 750, (i % 89).toLong))
         .toDF("id", "d", "k", "cents")
       def q(on: Boolean): (Seq[Row], DataFrame) =
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
           val df = df0.repartitionByRange(16, $"d", $"k")
             .select($"id", $"k",
               // hazardous direction: RANGE over d on the finer (d, k)
@@ -217,7 +215,7 @@ class TieSplitSpec extends AnyFunSuite {
         (i.toLong, i / 2500, (i % 2500) / 100, ((i * 13) % 500).toLong)
       }.toDF("id", "g", "o", "cents")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRankRewrite) {
           val w = Window.partitionBy($"g").orderBy($"o")
           val df = df0
             .orderBy($"g", $"o", $"id")
@@ -245,7 +243,7 @@ class TieSplitSpec extends AnyFunSuite {
         (i.toLong, i / 4000, (i % 4000) / 200)
       }.toDF("id", "g", "o")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRankRewrite) {
           val w = Window.partitionBy($"g").orderBy($"o")
           val df = df0
             .orderBy($"g", $"o", $"id")
@@ -273,10 +271,10 @@ class TieSplitSpec extends AnyFunSuite {
         }
         val df0 = rows.toDF("id", "d", "k", "cents")
         def q(doRank: Boolean, on: Boolean): Seq[Row] = {
-          val key =
-            if (doRank) graft.plans.GroupedRankRewrite.ConfKey
-            else graft.plans.GroupedRunningAggRewrite.ConfKey
-          TestSpark.withConf(key, on.toString) {
+          val rule =
+            if (doRank) graft.plans.GroupedRankRewrite
+            else graft.plans.GroupedRunningAggRewrite
+          TestSpark.withRules(on, rule) {
             val base = df0.repartitionByRange(parts, $"d", $"k")
             val df =
               if (doRank) base.select($"id", $"k",
@@ -376,26 +374,23 @@ class TieSplitSpec extends AnyFunSuite {
       // and their driver tie-chains must agree with native on the
       // tie-stable columns
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.WindowSplit.ConfKey, on.toString) {
-          TestSpark.withConf(graft.plans.GroupedRankRewrite.ConfKey, on.toString) {
-            TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
-              val w = Window.orderBy($"d")
-              val df = tieData
-                .orderBy($"d", $"k") // finer range exchange both execs must reuse
-                .select($"id", $"k",
-                  rank().over(w).as("r"),
-                  dense_rank().over(w).as("dr"),
-                  cume_dist().over(w).as("cd"),
-                  sum($"cents").over(w).as("rsum"),
-                  count(lit(1)).over(w).as("rcnt"))
-              val rows = df.collect().toSeq
-              if (on) {
-                assertReused(df, "GlobalRank")
-                assertReused(df, "GlobalRunningAgg")
-              }
-              rows.sortBy(_.getLong(0))
-            }
+        TestSpark.withRules(on, graft.plans.WindowSplit, graft.plans.GroupedRankRewrite,
+            graft.plans.GroupedRunningAggRewrite) {
+          val w = Window.orderBy($"d")
+          val df = tieData
+            .orderBy($"d", $"k") // finer range exchange both execs must reuse
+            .select($"id", $"k",
+              rank().over(w).as("r"),
+              dense_rank().over(w).as("dr"),
+              cume_dist().over(w).as("cd"),
+              sum($"cents").over(w).as("rsum"),
+              count(lit(1)).over(w).as("rcnt"))
+          val rows = df.collect().toSeq
+          if (on) {
+            assertReused(df, "GlobalRank")
+            assertReused(df, "GlobalRunningAgg")
           }
+          rows.sortBy(_.getLong(0))
         }
       assertSame(q(on = true), q(on = false), "mixed split under finer exchange")
     }
@@ -416,7 +411,7 @@ class TieSplitSpec extends AnyFunSuite {
         (i.toLong, i / 2500, (i % 2500) / 100, ((i * 13) % 500).toLong)
       }.toDF("id", "g", "o", "cents")
       def q(on: Boolean): Seq[Row] =
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
           val w = Window.partitionBy($"g").orderBy($"o")
           val df = df0
             .orderBy($"g", $"o", $"id") // finer exchange the exec must reuse
@@ -446,7 +441,7 @@ class TieSplitSpec extends AnyFunSuite {
       // firstGroupBuf override (First's left-if-set merge is the
       // order-sensitive merge the partition-order fold must preserve).
       for (on <- Seq(true, false))
-        TestSpark.withConf(graft.plans.GroupedRunningAggRewrite.ConfKey, on.toString) {
+        TestSpark.withRules(on, graft.plans.GroupedRunningAggRewrite) {
           val df = tieData.orderBy($"d", $"k")
             .select($"id", $"k", $"d",
               first($"cents").over(Window.orderBy($"d")).as("fc"))
@@ -479,7 +474,7 @@ class TieSplitSpec extends AnyFunSuite {
       // the native single-task window is the contract's definition,
       // the operator under the finer exchange must stay inside it
       for (on <- Seq(true, false))
-      TestSpark.withConf(graft.plans.GroupedOffsetRewrite.ConfKey, on.toString) {
+      TestSpark.withRules(on, graft.plans.GroupedOffsetRewrite) {
         val df = df0.orderBy($"d", $"v")
           .select($"id", $"d", $"v",
             lag($"v", 1, -1).over(Window.orderBy($"d")).as("pv"),
